@@ -141,6 +141,23 @@ def test_checkpoint_corruption_degrades_to_full_run(spark, tmp_path):
     assert keys == {"2024-01", "2024-02"}
 
 
+def test_read_done_keys_falls_back_to_nothing_done(tmp_path):
+    from tmdb_movie_data_pipeline_spark.plans.checkpoint import read_done_keys
+
+    p = tmp_path / "ckpt.json"
+    # missing file
+    assert read_done_keys(str(p)) == []
+    # truncated JSON: a crash mid-write without the tmp+rename commit
+    p.write_text('{"done_units": ["2024-01", "2024-')
+    assert read_done_keys(str(p)) == []
+    # valid JSON that is not an object
+    p.write_text('["2024-01", "2024-02"]')
+    assert read_done_keys(str(p)) == []
+    # valid doc: keys come back as written, order included
+    p.write_text('{"done_units": ["2024-02", "2024-01"]}')
+    assert read_done_keys(str(p)) == ["2024-02", "2024-01"]
+
+
 def test_multimodal_feature_extraction_plumbing(spark):
     from tmdb_movie_data_pipeline_spark.operators.multimodal import (
         attach_binary_payload,

@@ -123,9 +123,8 @@ def test_dpo_argmax_form_matches_window_form(spark):
 def test_dpo_plan_is_single_aggregate_no_window_no_join(spark):
     """The point of the restructure: one partial-aggregable pass — the
     shipped plan carries no Window and no join."""
-    plan = run_query(spark, "llm_dpo_pair_builder", SF_DIR)._sc._jvm.PythonSQLUtils.explainString(
-        run_query(spark, "llm_dpo_pair_builder", SF_DIR)._jdf.queryExecution(), "simple"
-    )
+    df = run_query(spark, "llm_dpo_pair_builder", SF_DIR)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
     assert "Window" not in plan
     assert "Join" not in plan
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import glob
 import json
+from contextlib import contextmanager
 
 from tmdb_movie_data_pipeline_spark.pipeline import run_backfill
 
@@ -31,7 +32,30 @@ def _movie(mid, date, pop, title=None):
     }
 
 
+@contextmanager
+def _job_group(spark, group):
+    """Run the body under ``group``; yields a list that holds the ids of
+    the Spark jobs the body launched once the block exits."""
+    sc = spark.sparkContext
+    jobs: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Jobs one two-month run launches: the partitioned write (source scan, then
+# the per-month dedup shuffle), the master Parquet write (parts scan, then
+# the global dedup shuffle) and the single-file CSV copy. The checkpoint
+# diff, the row count and both schemas stay on the driver.
+FULL_RUN_JOB_BUDGET = 5
+
+
 def test_backfill_end_to_end(spark, tmp_path):
+    """Also pins the job budget: only data movement launches Spark jobs, and
+    a fully checkpointed re-run launches none."""
     fixtures = tmp_path / "fx"
     fixtures.mkdir()
     # Jan: movie 1 twice (dup within month, higher popularity survives), movie 2
@@ -58,9 +82,13 @@ def test_backfill_end_to_end(spark, tmp_path):
         poster_size="w500",
         source_options={"fixture_dir": str(fixtures)},
     )
-    stats = run_backfill(spark, **args)
+    with _job_group(spark, f"backfill-full-{tmp_path.name}") as full_jobs:
+        stats = run_backfill(spark, **args)
     assert stats["months_run"] == 2
     assert stats["rows"] == 4  # in-month dup of movie 1 collapsed
+    assert 0 < len(full_jobs) <= FULL_RUN_JOB_BUDGET, full_jobs
+    # the observed count is the written count
+    assert spark.read.parquet(str(out / "monthly_parts")).count() == stats["rows"]
 
     master = spark.read.parquet(str(out / "master_parquet"))
     rows = {r.tmdb_id: r for r in master.collect()}
@@ -74,9 +102,11 @@ def test_backfill_end_to_end(spark, tmp_path):
     csvs = glob.glob(str(out / "master_csv" / "part-*.csv"))
     assert len(csvs) == 1
 
-    # resume: everything checkpointed → no work (J2/R4)
-    stats2 = run_backfill(spark, **args)
+    # resume: everything checkpointed → no work, not even a Spark job (R4)
+    with _job_group(spark, f"backfill-noop-{tmp_path.name}") as noop_jobs:
+        stats2 = run_backfill(spark, **args)
     assert stats2 == {"months_run": 0, "rows": 0}
+    assert noop_jobs == []
 
 
 def test_backfill_mid_month_date_to_keeps_final_window(spark, tmp_path):
@@ -155,3 +185,25 @@ def test_backfill_rerun_month_does_not_wipe_other_partitions(spark, tmp_path):
     )
     parts = spark.read.parquet(str(out / "monthly_parts"))
     assert {r.tmdb_id for r in parts.collect()} == {1, 2}
+
+
+def test_backfill_of_empty_months_commits_empty_master(spark, tmp_path):
+    """Months whose windows return no records still commit: the master read
+    is given its schema, so an empty ``monthly_parts`` is not a schema
+    inference failure after the checkpoint was already saved."""
+    fixtures = tmp_path / "fx"
+    fixtures.mkdir()
+    out = tmp_path / "out"
+    args = dict(
+        date_from="2023-01-01",
+        date_to="2023-02-28",
+        out_dir=str(out),
+        checkpoint_path=str(tmp_path / "ckpt.json"),
+        genre_map={28: "Action"},
+        image_base="https://cdn/",
+        poster_size="w500",
+        source_options={"fixture_dir": str(fixtures)},
+    )
+    assert run_backfill(spark, **args) == {"months_run": 2, "rows": 0}
+    assert spark.read.parquet(str(out / "master_parquet")).count() == 0
+    assert len(glob.glob(str(out / "master_csv" / "part-*.csv"))) == 1

@@ -812,10 +812,10 @@ def pipeline_month_backfill_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint bookkeeping (W4/J2) → master merge readback + global
     keep-first (A2/U1) → master parquet (W2), then the master read back as
     the result relation. A second ``run_backfill`` against the same
-    checkpoint must skip every month (the anti-join resume, asserted
-    in-line) — so one value hash pins source paging, window attribution,
-    both dedup survivor rules, the partitioned-write round-trip, and
-    checkpoint idempotence at once.
+    checkpoint must skip every month (asserted in-line: the checkpoint
+    diff leaves nothing to run) — so one value hash pins source paging,
+    window attribution, both dedup survivor rules, the partitioned-write
+    round-trip, and checkpoint idempotence at once.
 
     The fixture injects BOTH duplicate shapes (see
     ``_write_backfill_fixture``): an in-window higher-popularity variant
@@ -852,7 +852,7 @@ def pipeline_month_backfill_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert first["months_run"] == 3, first
     second = run_backfill(spark, **kwargs)
     assert second["months_run"] == 0, (
-        "checkpoint anti-join must skip completed months on re-run"
+        "checkpoint must skip completed months on re-run"
     )
     master = spark.read.parquet(os.path.join(out, "master_parquet"))
     return master.select(*MOVIE_COLS)

@@ -2022,7 +2022,7 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         F.col("doc_id"), F.explode(F.array_distinct(tokens_col())).alias("tok")
         # both sides of the token self-join: tokenize + explode once, not
-        # twice (the r21 banded-self-join class; narrow token metadata).
+        # twice. One row per (doc, distinct token): corpus-scale, not narrow.
     ).localCheckpoint(eager=False)
     ov = (
         toks.filter(F.col("doc_id") < N_QUERIES)

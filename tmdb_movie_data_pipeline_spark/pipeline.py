@@ -8,13 +8,18 @@ Reference lifecycle (src/movie.py:247-299, traced in SURVEY.md §3.1):
 
 Engine composition of the same stages:
 
-    sources.rest (partitions = month windows, pushdown, retry)
+    plans.checkpoint.read_done_keys → pending months = window keys minus
+      done keys, a set difference on the driver (one key per month, so no
+      Spark job; a fully checkpointed run launches none at all)
+      → sources.rest (partitions = pending month windows, pushdown, retry)
       → operators.normalize (one Catalyst projection)
       → operators.windows.keep_first (deterministic dedup survivor, A1)
-      → partitioned write, dynamic partition overwrite (idempotent months)
-      → plans.checkpoint bookkeeping (anti-join skip, J2/R4)
+      → partitioned write, dynamic partition overwrite (idempotent months);
+        the returned row count is an Observation on the written frame, so
+        the source is scanned exactly once
+      → plans.checkpoint.save_done_keys (atomic tmp+rename, W4/R4)
       → master merge = one partitioned-dataset scan + global keep-first (A2)
-      → master Parquet + CSV (W2/W3)
+        → master Parquet (W2) → single-file CSV read back from it (W3)
 
 Differences by design (each is a documented fix of a reference defect):
 * dedup survivor pinned by explicit ordering, not file order (SURVEY §7.3);
@@ -24,12 +29,12 @@ Differences by design (each is a documented fix of a reference defect):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.normalize import normalize_movies
 from .operators.windows import keep_first
-from .plans.checkpoint import load_done_keys, pending_units, save_done_keys
+from .plans.checkpoint import read_done_keys, save_done_keys
 
 __all__ = ["run_backfill"]
 
@@ -53,16 +58,13 @@ def run_backfill(
     """
     from .sources.rest import PagedRestDataSource, month_windows
 
-    spark.dataSource.register(PagedRestDataSource)
-
-    windows = month_windows(date_from, date_to)
-    units = spark.createDataFrame(
-        [(f"{a}_{b}",) for a, b in windows], "unit_key string"
+    done = read_done_keys(checkpoint_path)
+    todo_keys = sorted(
+        {f"{a}_{b}" for a, b in month_windows(date_from, date_to)} - set(done)
     )
-    done = load_done_keys(spark, checkpoint_path)
-    todo_keys = sorted(r.unit_key for r in pending_units(units, done).collect())
     if not todo_keys:
         return {"months_run": 0, "rows": 0}
+    spark.dataSource.register(PagedRestDataSource)
 
     # one source read covers all pending windows: each window is an input
     # partition, so months ingest in parallel (reference: sequential loop)
@@ -88,35 +90,37 @@ def run_backfill(
         ["unit_key", "tmdb_id"],
         [F.desc("popularity"), F.asc("tmdb_id")],
     )
-    movies = movies.filter(F.col("unit_key").isin(todo_keys))
-    # one materialization feeds both the count and the write: without it,
-    # every TMDB page would be fetched twice per run (ADVICE r1, medium)
-    movies = movies.persist()
-    try:
-        rows = movies.count()
-        (
-            movies.write.mode("overwrite")
-            # per-writer so correctness never depends on session conf:
-            # only the pending unit partitions are replaced (ADVICE r1)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("unit_key")
-            .parquet(f"{out_dir}/monthly_parts")
-        )
-    finally:
-        movies.unpersist()
-    prior = [r.unit_key for r in done.collect()]
-    save_done_keys(prior + todo_keys, checkpoint_path)
+    # the row count rides on the write itself: every TMDB page is fetched
+    # once per run and no cached block outlives the call (ADVICE r1, medium)
+    written = Observation()
+    movies = movies.filter(F.col("unit_key").isin(todo_keys)).observe(
+        written, F.count(F.lit(1)).alias("rows")
+    )
+    (
+        movies.write.mode("overwrite")
+        # per-writer so correctness never depends on session conf:
+        # only the pending unit partitions are replaced (ADVICE r1)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("unit_key")
+        .parquet(f"{out_dir}/monthly_parts")
+    )
+    rows = written.get["rows"]
+    save_done_keys(done + todo_keys, checkpoint_path)
 
     # master merge: scan the partitioned dataset (U1), global dedup (A2 —
     # cross-month duplicate keeps the earliest month, like the reference's
-    # concat order), master Parquet + single-file CSV (W2/W3)
-    parts = spark.read.parquet(f"{out_dir}/monthly_parts")
+    # concat order). Both schemas are known here, so neither read launches
+    # a schema-inference job; the CSV (W3) is a single-file copy of the
+    # committed master Parquet (W2), not a second scan and dedup shuffle
+    parts = spark.read.schema(movies.schema).parquet(f"{out_dir}/monthly_parts")
     master = keep_first(
         parts, ["tmdb_id"], [F.asc("unit_key"), F.desc("popularity")]
     ).drop("unit_key")
     master.write.mode("overwrite").parquet(f"{out_dir}/master_parquet")
     (
-        master.coalesce(1)
+        spark.read.schema(master.schema)
+        .parquet(f"{out_dir}/master_parquet")
+        .coalesce(1)
         .write.mode("overwrite")
         .option("header", True)
         .csv(f"{out_dir}/master_csv")

@@ -2,12 +2,16 @@
 
 The reference tracks completed month-windows in a JSON doc written with an
 atomic tmp+rename (src/movie.py:208-222) and skips done windows with a set
-probe (src/movie.py:257-264). The engine generalizes this to a bookkeeping
-relation + left-anti join (J2) and partition-granular overwrite:
+probe (src/movie.py:257-264). The engine keeps that bookkeeping doc and
+pairs it with partition-granular overwrite:
 
 * work units are partitions (e.g. calendar months of a timestamp column);
-* the bookkeeping table lists finished unit keys;
-* pending = all units ANTI JOIN done — a relational plan, not a driver loop;
+* the bookkeeping doc lists finished unit keys (``read_done_keys``);
+* pending = all units minus done keys. ``pipeline.run_backfill`` knows its
+  units up front (one per month window), so it takes the set difference on
+  the driver and launches no Spark job for it; ``run_incremental_backfill``
+  derives its units from the data, so it left-anti joins (J2) the data's
+  distinct unit keys against the broadcast done-set;
 * each unit's output is committed by Spark's file output committer
   (task/job-atomic, the distributed version of tmp+rename), into a
   `partitionBy` layout with dynamic partition overwrite so re-running a
@@ -16,8 +20,8 @@ relation + left-anti join (J2) and partition-granular overwrite:
   reference's fallback semantics (src/movie.py:219-222) — because re-running
   a unit is safe by construction.
 
-At 100 TB: unit = partition = the retry/checkpoint granule; the anti-join is
-a broadcast of the (tiny) done-set against the unit list.
+At 100 TB: unit = partition = the retry/checkpoint granule; the done-set
+holds one key per unit, so it stays small enough for the driver.
 """
 
 from __future__ import annotations
@@ -28,18 +32,33 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["load_done_keys", "save_done_keys", "pending_units", "run_incremental_backfill"]
+__all__ = [
+    "read_done_keys",
+    "load_done_keys",
+    "save_done_keys",
+    "pending_units",
+    "run_incremental_backfill",
+]
+
+
+def read_done_keys(path: str) -> list[str]:
+    """Bookkeeping reader with corruption fallback (W5 parity): a missing
+    file, bad JSON or a document that is not an object all read as no
+    finished units."""
+    try:
+        with open(path) as f:
+            return list(json.load(f).get("done_units", []))
+    except (OSError, json.JSONDecodeError, AttributeError):
+        return []
 
 
 def load_done_keys(spark: SparkSession, path: str) -> DataFrame:
-    """Bookkeeping reader with corruption fallback (W5 parity)."""
-    try:
-        with open(path) as f:
-            doc = json.load(f)
-        keys = [(k,) for k in doc.get("done_units", [])]
-    except (OSError, json.JSONDecodeError, AttributeError):
-        keys = []
-    return spark.createDataFrame(keys, "unit_key string")
+    """``read_done_keys`` as a one-column ``unit_key`` relation."""
+    return _keys_frame(spark, read_done_keys(path))
+
+
+def _keys_frame(spark: SparkSession, keys: list[str]) -> DataFrame:
+    return spark.createDataFrame([(k,) for k in keys], "unit_key string")
 
 
 def save_done_keys(keys: list[str], path: str) -> None:
@@ -76,8 +95,8 @@ def run_incremental_backfill(
     """
     keyed = df.withColumn("unit_key", F.date_format(F.col(ts_col), unit_format))
     units = keyed.select("unit_key").distinct()
-    done = load_done_keys(spark, checkpoint_path)
-    todo = pending_units(units, done)
+    done = read_done_keys(checkpoint_path)
+    todo = pending_units(units, _keys_frame(spark, done))
     todo_keys = sorted(r.unit_key for r in todo.collect())  # unit list is tiny (one per month)
     if todo_keys:
         (
@@ -90,6 +109,5 @@ def run_incremental_backfill(
             .partitionBy("unit_key")
             .parquet(out_path)
         )
-        prior = [r.unit_key for r in done.collect()]
-        save_done_keys(prior + todo_keys, checkpoint_path)
+        save_done_keys(done + todo_keys, checkpoint_path)
     return todo_keys
