@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -27,3 +28,17 @@ def sf_dir() -> str:
     # default sf0.001 for speed; SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01
     # mirrors the driver's correctness scale.
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMALL)
+
+
+@contextmanager
+def job_group(spark, group):
+    """Run the body under ``group``; yields a list that holds the ids of
+    the Spark jobs the body launched once the block exits."""
+    sc = spark.sparkContext
+    jobs: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))

@@ -266,6 +266,41 @@ def test_connected_components_known_graph(spark):
     }
 
 
+# Jobs the llm_quality_canonical_dedup builder launches once the LSH pair
+# stage exists: reading the staged pairs, the one edge collect of
+# connected_components, and two in the quality-score path. The per-round
+# checkpoint and convergence jobs of the distributed loop took it to 31.
+CANONICAL_DEDUP_BUILD_JOBS = 4
+
+
+def test_connected_components_under_threshold_is_one_job(spark, sf_dir):
+    """Under the broadcast threshold the components come from one collect
+    job and a local relation: no round jobs, no checkpointed RDD left
+    behind."""
+    from conftest import job_group
+    from tmdb_movie_data_pipeline_spark.operators.graph import connected_components
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
+
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(11, 10), (11, 12), (12, 13), (20, 21)], "src long, dst long"
+    )
+    rdds_before = sc._jsc.sc().getPersistentRDDs().size()
+    with job_group(spark, "cc-driver-path") as jobs:
+        comp = connected_components(edges)
+    assert len(jobs) == 1
+    assert sc._jsc.sc().getPersistentRDDs().size() == rdds_before
+    assert sorted(map(tuple, comp.collect())) == [
+        (10, 10), (11, 10), (12, 10), (13, 10), (20, 20), (21, 20),
+    ]
+
+    build = all_queries()["llm_quality_canonical_dedup"]
+    build(spark, sf_dir)  # stages the LSH pairs
+    with job_group(spark, "canonical-dedup-build") as jobs:
+        build(spark, sf_dir)
+    assert len(jobs) <= CANONICAL_DEDUP_BUILD_JOBS, jobs
+
+
 def test_salted_agg_explicit_combiners_match_direct(spark):
     import pytest
 

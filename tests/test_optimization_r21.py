@@ -11,11 +11,13 @@ while all default-path tests stay green.
 from __future__ import annotations
 
 import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from tmdb_movie_data_pipeline_spark.operators.graph import (
+    _driver_edge_cap,
     _vector_broadcast_cap,
     connected_components,
 )
@@ -38,29 +40,73 @@ def test_vector_broadcast_cap_reads_env(monkeypatch):
     assert _vector_broadcast_cap() == 50_000_000
 
 
+def _union_find(edges):
+    """{vertex: least vertex of its component}, by plain union-find."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
 def test_connected_components_identical_on_both_gate_sides(
     spark, monkeypatch
 ):
-    """The CC fixpoint is join-strategy-independent: labels under the
-    broadcast plan (default cap) equal labels under the shuffle fallback
-    (cap 0) on a graph with a chain, a triangle and an isolated edge."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10), (20, 21)],
-        "src long, dst long",
-    )
-    got_bcast = sorted(
-        map(tuple, connected_components(edges, "src", "dst").collect())
-    )
-    monkeypatch.setenv("SPARK_GRAFT_VECTOR_BROADCAST_ROWS", "0")
-    got_shuffle = sorted(
-        map(tuple, connected_components(edges, "src", "dst").collect())
-    )
-    assert got_bcast == got_shuffle
-    assert got_bcast == [
-        (1, 1), (2, 1), (3, 1), (4, 1),
-        (10, 10), (11, 10), (12, 10),
-        (20, 20), (21, 20),
-    ]
+    """The CC fixpoint is path-independent: labels from the driver path
+    (edges under the broadcast threshold), from the distributed loop with
+    broadcast hints (threshold -1) and from the loop's shuffle fallback
+    (threshold -1, cap 0) agree with union-find on one graph holding a
+    chain + triangle + isolated edge, a seeded random graph with
+    self-loops, duplicate and reversed edges, and null endpoints. The
+    null labels are pinned: a null endpoint bridges nothing, its partner
+    stays a vertex, and null itself is a vertex labelled with the least
+    component among its partners (null when it has none)."""
+    chain = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10), (20, 21)]
+    assert _union_find(chain) == {
+        1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20
+    }
+    rng = random.Random(7)
+    rand = [(rng.randrange(100, 160), rng.randrange(100, 160)) for _ in range(70)]
+    rand += [(v, v) for v in (103, 161, 162)]  # self-loops, two isolated
+    rand += rand[:10] + [(b, a) for a, b in rand[10:20]]  # duplicate, reversed
+    nulls = [(201, None), (None, 203), (None, None), (205, 206), (207, 205)]
+    graphs = {
+        "mixed": (
+            chain + rand + nulls,
+            {**_union_find(chain + rand + nulls[3:]), 201: 201, 203: 203, None: 201},
+        ),
+        "null without partners": ([(None, None), (4, 2)], {2: 2, 4: 2, None: None}),
+    }
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(conf)
+
+    def labels(edges):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        rows = connected_components(df, "src", "dst").collect()
+        got = dict(map(tuple, rows))
+        assert len(got) == len(rows), "a vertex labelled twice"
+        return got
+
+    for name, (edges, want) in graphs.items():
+        assert _driver_edge_cap(spark) >= len(edges)
+        assert labels(edges) == want, ("driver", name)
+        spark.conf.set(conf, "-1")
+        try:
+            assert _driver_edge_cap(spark) == 0
+            assert labels(edges) == want, ("loop, broadcast", name)
+            monkeypatch.setenv("SPARK_GRAFT_VECTOR_BROADCAST_ROWS", "0")
+            assert labels(edges) == want, ("loop, shuffle", name)
+        finally:
+            spark.conf.set(conf, default)
+            monkeypatch.delenv("SPARK_GRAFT_VECTOR_BROADCAST_ROWS", raising=False)
 
 
 def test_hits_identical_on_both_gate_sides(spark, monkeypatch):

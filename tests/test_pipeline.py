@@ -5,8 +5,8 @@ from __future__ import annotations
 
 import glob
 import json
-from contextlib import contextmanager
 
+from conftest import job_group
 from tmdb_movie_data_pipeline_spark.pipeline import run_backfill
 
 
@@ -30,20 +30,6 @@ def _movie(mid, date, pop, title=None):
         "poster_path": f"/p{mid}.jpg",
         "adult": False,
     }
-
-
-@contextmanager
-def _job_group(spark, group):
-    """Run the body under ``group``; yields a list that holds the ids of
-    the Spark jobs the body launched once the block exits."""
-    sc = spark.sparkContext
-    jobs: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 # Jobs one two-month run launches: the partitioned write (source scan, then
@@ -82,7 +68,7 @@ def test_backfill_end_to_end(spark, tmp_path):
         poster_size="w500",
         source_options={"fixture_dir": str(fixtures)},
     )
-    with _job_group(spark, f"backfill-full-{tmp_path.name}") as full_jobs:
+    with job_group(spark, f"backfill-full-{tmp_path.name}") as full_jobs:
         stats = run_backfill(spark, **args)
     assert stats["months_run"] == 2
     assert stats["rows"] == 4  # in-month dup of movie 1 collapsed
@@ -103,7 +89,7 @@ def test_backfill_end_to_end(spark, tmp_path):
     assert len(csvs) == 1
 
     # resume: everything checkpointed → no work, not even a Spark job (R4)
-    with _job_group(spark, f"backfill-noop-{tmp_path.name}") as noop_jobs:
+    with job_group(spark, f"backfill-noop-{tmp_path.name}") as noop_jobs:
         stats2 = run_backfill(spark, **args)
     assert stats2 == {"months_run": 0, "rows": 0}
     assert noop_jobs == []

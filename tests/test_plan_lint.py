@@ -4,11 +4,20 @@ input into an N² execution. The targeted pins in test_plans.py check the
 heavy hitters' exact shapes; this lint is the blanket guarantee that no
 NEW operator quietly ships the worst plan shape.
 
-Scope: the LAZY operator modules (building the DataFrame only constructs
-a plan). Imperative families — streaming runs-to-completion, checkpoint/
-ACID writers, io roundtrips, the REST pipeline — execute real work on
-call and are exercised end-to-end by the oracle suite instead; their
-inner building blocks live in the lazy modules and are linted here.
+What the lint reads: it calls each builder of the modules in
+``_LINTED_MODULES`` and reads the formatted physical plan of the
+DataFrame the builder returns, without executing it. Calling a builder
+is not plan-only. At sf0.001 every linted builder but `normalize`'s
+launches at least one Spark job on call (the Parquet footer read behind
+schema resolution), and many run whole stages: the LSH pair staging in
+`dedup`, eager checkpoints and the connected-components edge collect or
+hash-to-min rounds in `graph`, `llm_prep` and `spatial`. The plans of
+those build-time jobs are not linted; their output enters the returned
+plan as a scan of a checkpointed RDD or a local relation. Imperative
+families — streaming runs-to-completion, checkpoint/ACID writers, io
+roundtrips, the REST pipeline — return frames whose plan is not the work
+they ran, and are exercised end-to-end by the oracle suite instead;
+their inner building blocks live in the linted modules.
 
 BroadcastNestedLoopJoin is NOT blanket-banned: a 1-row aggregate attach
 or a bounded-frame theta join legitimately plans as one (the per-query
@@ -27,8 +36,9 @@ from tmdb_movie_data_pipeline_spark.registry import (
     deferred_queries,
 )
 
-#: modules whose query functions are lazy (plan-only on call)
-_LAZY_MODULES = {
+#: modules whose builders return the plan of the query's work (the
+#: builder may still run jobs on call; see the module docstring)
+_LINTED_MODULES = {
     "aggregates",
     "clustering",
     "dedup",
@@ -45,12 +55,12 @@ _LAZY_MODULES = {
     "similarity",
     "sketches",
     "spatial",
-    # sql_surface is NOT lazy (ADVICE r10 item 4): scripting_block runs
+    # sql_surface is NOT linted (ADVICE r10 item 4): scripting_block runs
     # its BEGIN/WHILE loop on call, execute_immediate executes
     # DECLARE/SET VAR plus the dynamic query, and the rest mutate session
-    # temp views — the "building the DataFrame only constructs a plan"
-    # premise doesn't hold. Its five queries are exercised end-to-end by
-    # the oracle suite like the other imperative families.
+    # temp views, so the returned frame is not the plan of that work. Its
+    # five queries are exercised end-to-end by the oracle suite like the
+    # other imperative families.
     "subqueries",
     "text",
     "tpch_extra",
@@ -63,7 +73,7 @@ def _lintable() -> list[str]:
     return sorted(
         n
         for n, fn in qs.items()
-        if fn.__module__.rsplit(".", 1)[-1] in _LAZY_MODULES
+        if fn.__module__.rsplit(".", 1)[-1] in _LINTED_MODULES
     )
 
 

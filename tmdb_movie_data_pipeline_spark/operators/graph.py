@@ -6,15 +6,19 @@ transitively-connected duplicates and keep one canonical document per
 component. This module closes that gap with connected components over the
 MinHash duplicate-pair graph.
 
-Scale shape: iterative min-label propagation — each round every vertex
-adopts the minimum label among itself and its neighbors, a groupBy(min)
-after an equi-join, i.e. two shuffles per round bounded by |E| + |V|. The
-loop is driver-controlled with a convergence check (standard practice for
-iterative graph algorithms on Spark — GraphX/Pregel drive the same shape);
-each round is localCheckpoint'ed so lineage stays flat instead of growing
-exponentially. Rounds needed = graph diameter ≤ log-ish for dedup clusters
-(dup clusters are small and dense); at 100 TB the same plan holds because
-every round's cost is one |E|-sized equi-join, never an all-pairs product.
+Which path runs: :func:`connected_components` first collects an integral
+edge list to the driver in one job, capped at what the session would
+broadcast (``spark.sql.autoBroadcastJoinThreshold`` at 16 B per edge). A
+graph under the cap is labelled in numpy on the driver by min-root
+hooking with pointer jumping — no further Spark job. A graph over the
+cap, or any graph when the threshold is ≤ 0, runs the distributed
+hash-to-min loop: each round is an |E|-sized equi-join plus a
+groupBy(min), localCheckpoint'ed so lineage stays flat, with a label-sum
+convergence check. Inside that loop the per-vertex label relation
+carries a broadcast hint while the edge count is under
+:func:`_vector_broadcast_cap`; above it (the 100 TB regime) every join
+is a shuffle join. Rounds needed are logarithmic in the component
+diameter, and no round is an all-pairs product.
 
 The DuckDB oracle computes the identical fixpoint with WITH RECURSIVE
 transitive closure (exact on the small correctness SFs).
@@ -22,8 +26,11 @@ transitive closure (exact on the small correctness SFs).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 from pyspark.sql.window import Window as W
 
 from ..io import load_table
@@ -42,19 +49,85 @@ __all__ = [
 #: cap only bounds a pathological chain-of-length-N graph (not a dedup shape).
 _MAX_ROUNDS = 50
 
+#: driver-side bytes per collected edge: one (long, long) pair
+_EDGE_BYTES = 16
+
 
 def _vector_broadcast_cap() -> int:
     """Row cap under which a per-vertex relation (labels, score vectors,
-    core sets) may carry a broadcast hint inside an iterative kernel.
-    Parameterised (guide §3.1): the local default comfortably covers every
-    fixture scale; a 100 TB deployment with billion-vertex label vectors
-    sets it low (or 0) and the same joins fall back to the shuffle plans
-    the kernels always used. The gating COUNT is always taken from an
-    already-checkpointed relation, so the decision costs one in-memory
-    scan, never a recompute."""
+    core sets) may carry a broadcast hint inside a distributed iterative
+    kernel: the connected-components loop (graphs over the driver-path
+    cap), the HITS scores and the DBSCAN assembly joins. The local default
+    covers every fixture scale; a 100 TB deployment with billion-vertex
+    label vectors sets ``SPARK_GRAFT_VECTOR_BROADCAST_ROWS`` low (or 0)
+    and the same joins fall back to shuffle plans. The gating count is
+    taken from an already-checkpointed relation, so the decision costs one
+    in-memory scan, never a recompute."""
     import os
 
     return int(os.environ.get("SPARK_GRAFT_VECTOR_BROADCAST_ROWS", 50_000_000))
+
+
+def _driver_edge_cap(spark: SparkSession) -> int:
+    """Most edges :func:`connected_components` labels on the driver: the
+    session's broadcast threshold read as (long, long) edges — 4,194,304 at
+    the engine's 64 MiB, 655,360 at Spark's default 10 MiB. A threshold
+    ≤ 0 (broadcasts off) turns the driver path off too."""
+    conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+    return max(conf.autoBroadcastJoinThreshold(), 0) // _EDGE_BYTES
+
+
+def _min_roots(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """For vertices ``0..n-1`` joined by edges ``(a[i], b[i])``, the least
+    vertex of each vertex's component. Each round hooks every root onto
+    the least root it shares an edge with, then pointer-jumps until every
+    vertex points at a root; edges whose endpoints already share a root
+    drop out. A parent never exceeds its vertex, so no cycle can form."""
+    parent = np.arange(n)
+    while a.size:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return parent
+
+
+def _label_on_driver(edges: pa.Table) -> pa.Table:
+    """(v, comp) over a collected (u, w) edge table — the same fixpoint the
+    distributed loop reaches, null endpoints included: a null endpoint
+    bridges nothing, its partner is still a vertex, and null itself is
+    one more vertex labelled with the least component among its
+    partners (null when it has none)."""
+    u, w = edges.column(0), edges.column(1)
+    ok = np.concatenate([c.is_valid().to_numpy(zero_copy_only=False) for c in (u, w)])
+    # np.unique sorts, so index order is id order: the least index of a
+    # component names its least id
+    ids, inv = np.unique(
+        np.concatenate([c.fill_null(0).to_numpy() for c in (u, w)])[ok],
+        return_inverse=True,
+    )
+    ends = np.zeros(len(ok), dtype=np.int64)
+    ends[ok] = inv
+    a, b = np.split(ends, 2)
+    u_ok, w_ok = np.split(ok, 2)
+    both = u_ok & w_ok
+    roots = _min_roots(len(ids), a[both], b[both])
+    out = pa.table(
+        {"v": pa.array(ids, type=u.type), "comp": pa.array(ids[roots], type=u.type)}
+    )
+    if both.all():
+        return out
+    partners = roots[np.concatenate([a[u_ok & ~w_ok], b[w_ok & ~u_ok]])]
+    least = [ids[partners.min()].item() if partners.size else None]
+    null_row = pa.table(
+        {"v": pa.array([None], type=u.type), "comp": pa.array(least, type=u.type)}
+    )
+    return pa.concat_tables([out, null_row])
 
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -64,7 +137,16 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     ``edges`` is interpreted as undirected; isolated vertices don't appear
     (callers union them in if needed).
 
-    Rounds follow hash-to-min (Rastogi et al., "Finding Connected
+    Which path runs: with integral ids, the edge list is first collected
+    to the driver in ONE job, capped at :func:`_driver_edge_cap` + 1 rows.
+    At or under the cap the components are labelled in numpy
+    (:func:`_label_on_driver`) and returned as a local relation; no other
+    Spark job runs and nothing stays cached. Over the cap the collected
+    rows are dropped and the distributed loop below runs, one collect job
+    later; with the broadcast threshold ≤ 0 or non-integral ids it runs
+    straight away.
+
+    The loop follows hash-to-min (Rastogi et al., "Finding Connected
     Components in Map-Reduce in Logarithmic Rounds"): each vertex takes the
     min label over itself + neighbors, the result is ALSO pushed to the
     vertex's previous root (so label trees merge wholesale, not one edge
@@ -74,16 +156,22 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     unchanged sum means a fixpoint — one tiny aggregate instead of an
     old-vs-new join.
 
-    r21 physical tuning (guide §2.4/§3.1; results unchanged — the fixpoint
-    is init-independent for any init ≥ the true min that names a reachable
-    vertex): (1) labels initialize to min(v, min neighbor) via ONE groupBy
-    on the checkpointed edge list — a free half-step that replaces the
-    identity-labels checkpoint; (2) every in-loop join carries a broadcast
-    hint on its |V|-bounded side, gated on the checkpointed edge count vs
-    ``_vector_broadcast_cap`` — under the cap no round ever shuffles the
-    edge relation; over it (the 100 TB regime) the plan is the r20 shuffle
-    join unchanged.
+    Loop tuning (results unchanged — the fixpoint is init-independent for
+    any init ≥ the true min that names a reachable vertex): (1) labels
+    initialize to min(v, min neighbor) via ONE groupBy on the checkpointed
+    edge list — a free half-step that replaces the identity-labels
+    checkpoint; (2) every in-loop join carries a broadcast hint on its
+    |V|-bounded side while the checkpointed edge count is ≤
+    :func:`_vector_broadcast_cap` — no round then shuffles the edge
+    relation; over it (the 100 TB regime) every round is a shuffle join.
     """
+    spark = edges.sparkSession
+    cap = _driver_edge_cap(spark)
+    pair = edges.select(F.col(src).alias("u"), F.col(dst).alias("w"))
+    if cap > 0 and all(isinstance(f.dataType, IntegralType) for f in pair.schema):
+        collected = pair.limit(cap + 1).toArrow()
+        if collected.num_rows <= cap:
+            return spark.createDataFrame(_label_on_driver(collected))
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("w"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("w")))

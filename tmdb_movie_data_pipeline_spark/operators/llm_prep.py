@@ -879,9 +879,11 @@ def quality_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     its length, the member count, and how many members pass quality — the
     four numbers a dedup review dashboard shows.
 
-    Shape: components over the STAGED pair list (driver-bounded label
-    propagation, the shared materialization every graph kernel reads);
-    quality is the map-side predicate; election is one rank window over
+    Shape: components over the STAGED pair list, the shared
+    materialization every graph kernel reads (labelled on the driver after
+    one collect job while the pairs fit the broadcast threshold, by the
+    distributed hash-to-min loop otherwise); quality is the map-side
+    predicate; election is one rank window over
     the cluster-member relation (cluster-sized partitions). The ranking
     key is all-integer, so the election is deterministic cross-engine
     with no float ordering anywhere."""

@@ -277,8 +277,10 @@ def dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the density scan is the SAME 3x3 grid equi-join the pair
     query proves lossless (candidates bounded by local density, never n²);
     the clustering is connected components over core-core edges via
-    graph.py's hash-to-min kernel (logarithmic rounds, |E|-bounded per
-    round); border attachment is one more |pairs|-bounded join + min-agg.
+    graph.connected_components — labelled on the driver after one collect
+    job while the core edges fit the broadcast threshold, otherwise the
+    hash-to-min loop (logarithmic rounds, |E|-bounded per round); border
+    attachment is one more |pairs|-bounded join + min-agg.
     Nothing in the pipeline materializes more than the qualifying pair
     relation. At sf0.001 the fixture's density is sub-critical (zero core
     points — every point reads noise); structure appears from sf0.01 up —
