@@ -13,11 +13,12 @@ schema resolution), and many run whole stages: the LSH pair staging in
 `dedup`, eager checkpoints and the connected-components edge collect or
 hash-to-min rounds in `graph`, `llm_prep` and `spatial`. The plans of
 those build-time jobs are not linted; their output enters the returned
-plan as a scan of a checkpointed RDD or a local relation. Imperative
-families — streaming runs-to-completion, checkpoint/ACID writers, io
-roundtrips, the REST pipeline — return frames whose plan is not the work
-they ran, and are exercised end-to-end by the oracle suite instead;
-their inner building blocks live in the linted modules.
+plan as a scan of a checkpointed RDD, a staged Parquet table or a local
+relation. Imperative families — streaming runs-to-completion,
+checkpoint/ACID writers, io roundtrips, the REST pipeline — return frames
+whose plan is not the work they ran, and are exercised end-to-end by the
+oracle suite instead; their inner building blocks live in the linted
+modules.
 
 BroadcastNestedLoopJoin is NOT blanket-banned: a 1-row aggregate attach
 or a bounded-frame theta join legitimately plans as one (the per-query

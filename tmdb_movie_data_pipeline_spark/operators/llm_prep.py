@@ -883,10 +883,10 @@ def quality_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization every graph kernel reads (labelled on the driver after
     one collect job while the pairs fit the broadcast threshold, by the
     distributed hash-to-min loop otherwise); quality is the map-side
-    predicate; election is one rank window over
-    the cluster-member relation (cluster-sized partitions). The ranking
-    key is all-integer, so the election is deterministic cross-engine
-    with no float ordering anywhere."""
+    predicate; election is one rank window over the cluster-member
+    relation (cluster-sized partitions). The ranking key is all-integer,
+    so the election is deterministic cross-engine with no float ordering
+    anywhere."""
     from pyspark.sql.window import Window as W
 
     from ..io import load_table
