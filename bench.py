@@ -346,15 +346,9 @@ def calibration_seconds(spark, copy_dir: str, runs: int = 5) -> float:
 
 def make_parallel_copy(spark, sf_dir: str) -> str:
     """Repartition each table into a multi-file temp copy (read-only source
-    dir is never modified). events.ts (TIMESTAMP NANOS) is copied as
-    whatever the runtime's reader surfaces (raw nanos longs under the
-    legacy conf, micros TIMESTAMP_NTZ natively) — load_table dispatches on
-    the copied dtype, so query results are unchanged either way."""
+    dir is never modified). The copy keeps every column's Parquet type,
+    so ``load_table``'s declared schemas read it unchanged."""
     dst = tempfile.mkdtemp(prefix="bench_sf_")
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # conf retired: load_table handles the native nanos read
     for name in TESTDATA_TABLES:
         src = os.path.join(sf_dir, f"{name}.parquet")
         (

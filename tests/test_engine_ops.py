@@ -267,10 +267,10 @@ def test_connected_components_known_graph(spark):
 
 
 # Jobs the llm_quality_canonical_dedup builder launches once the LSH pair
-# stage exists: reading the staged pairs, the one edge collect of
-# connected_components, and two in the quality-score path. The per-round
+# stage exists: the one edge collect of connected_components (its table
+# reads take declared schemas, so they launch none). The per-round
 # checkpoint and convergence jobs of the distributed loop took it to 31.
-CANONICAL_DEDUP_BUILD_JOBS = 4
+CANONICAL_DEDUP_BUILD_JOBS = 1
 
 
 def test_connected_components_under_threshold_is_one_job(spark, sf_dir):

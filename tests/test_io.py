@@ -2,9 +2,18 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+from conftest import SF_SMALL, job_group
 from pyspark.sql import functions as F
 
 from tmdb_movie_data_pipeline_spark import io as eio
+from tmdb_movie_data_pipeline_spark.schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
+
+TESTDATA_SCALES = [
+    os.path.join(os.path.dirname(SF_SMALL), sf) for sf in ("sf0.001", "sf0.01", "sf0.1")
+]
 
 
 def test_parquet_roundtrip(spark, tmp_path):
@@ -63,3 +72,51 @@ def test_orc_roundtrip(spark, tmp_path):
     p = str(tmp_path / "orc")
     df.write.mode("overwrite").orc(p)
     assert spark.read.orc(p).count() == 50
+
+
+def _inferred_schemas(spark, sf_dir):
+    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet").schema for t in TESTDATA_TABLES}
+
+
+@pytest.mark.parametrize("sf_dir", TESTDATA_SCALES, ids=os.path.basename)
+def test_declared_schemas_match_inferred_testdata(spark, sf_dir):
+    """A declared column whose type differs from the file's reads as null
+    or fails at scan time, so the declarations must equal what Spark infers
+    from the files themselves."""
+    assert _inferred_schemas(spark, sf_dir) == TESTDATA_SCHEMAS
+
+
+def test_declared_schemas_match_benchmark_tables(spark, tmp_path):
+    from perfbench import datagen
+
+    datagen.write_tables(str(tmp_path), 0.001)
+    assert _inferred_schemas(spark, str(tmp_path)) == TESTDATA_SCHEMAS
+
+
+def test_testdata_reads_launch_no_jobs(spark, sf_dir):
+    """Reading a test table or the staged LSH pairs resolves its schema
+    from the declaration, not from a Parquet footer job, so these builders
+    launch nothing on call."""
+    from tmdb_movie_data_pipeline_spark.operators.dedup import lsh_pairs_staged
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    nanos_as_long = spark.conf.get(conf, None)
+    for t in TESTDATA_TABLES:
+        with job_group(spark, f"load-{t}") as jobs:
+            eio.load_table(spark, sf_dir, t)
+        assert jobs == [], t
+    assert dict(eio.load_table(spark, sf_dir, "events").dtypes)["ts"] == "timestamp"
+    assert spark.conf.get(conf, None) == nanos_as_long
+
+    queries = all_queries()
+    for name in ["udf_grouped_agg", "q1_pricing_summary", "multimodal_decode_stats"]:
+        with job_group(spark, f"build-{name}") as jobs:
+            queries[name](spark, sf_dir)
+        assert jobs == [], name
+
+    lsh_pairs_staged(spark, sf_dir)  # builds the stage if it is missing
+    with job_group(spark, "lsh-pairs-read") as jobs:
+        pairs = lsh_pairs_staged(spark, sf_dir)
+    assert jobs == []
+    assert pairs.schema.simpleString() == "struct<doc_a:bigint,doc_b:bigint>"

@@ -20,8 +20,9 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from .schemas import TESTDATA_TABLES
+from .schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
 
 __all__ = [
     "default_sf_dir",
@@ -70,32 +71,21 @@ def scratch_dir(prefix: str) -> str:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One synthetic table: ``{sf_dir}/{name}.parquet``.
+    """One synthetic table: ``{sf_dir}/{name}.parquet``, read with its
+    declared schema (``schemas.TESTDATA_SCHEMAS``), so the call launches no
+    Spark job: an inferring read runs one to read the Parquet footers.
 
-    `events.ts` is stored as Parquet TIMESTAMP(NANOS). Spark runtimes
-    differ in how they surface it — older vectorized readers reject it
-    unless ``spark.sql.legacy.parquet.nanosAsLong`` maps it to a raw nanos
-    BIGINT; newer ones read it natively as a micros-truncated
-    TIMESTAMP_NTZ and ignore that conf entirely. Both paths are normalized
-    here to a plain microsecond TIMESTAMP — bit-identical to DuckDB's
-    ``epoch_us`` on the same column, which the oracle relies on — by
-    dispatching on the dtype the reader actually produced (version-proof,
-    unlike pinning either conf behavior).
+    `events.ts` is stored as Parquet TIMESTAMP(MICROS) without UTC
+    adjustment, which Spark reads as TIMESTAMP_NTZ. It is cast to the
+    engine-wide TIMESTAMP (UTC session => same instant), bit-identical to
+    DuckDB's ``epoch_us`` on the same column, which the oracle relies on.
     """
+    df = spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(
+        os.path.join(sf_dir, f"{name}.parquet")
+    )
     if name == "events":
-        from pyspark.sql import functions as F
-
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass  # conf retired: the native nanos read below handles it
-        raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        if dict(raw.dtypes)["ts"] == "bigint":
-            return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        # native read: TIMESTAMP_NTZ already floored to micros; cast keeps
-        # the engine-wide TIMESTAMP schema (UTC session => same instant)
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -89,9 +89,7 @@ def minhash_signatures(docs: DataFrame, seeds: int = NUM_HASHES) -> DataFrame:
             "CAST(conv(substring(md5(s), 17, 14), 16, 10) AS BIGINT) AS h2",
         )
     )
-    sig_cols = [
-        F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"sig_{i}") for i in range(seeds)
-    ]
+    sig_cols = [F.expr(f"min(h1 + {i} * h2) AS sig_{i}") for i in range(seeds)]
     return hashed.groupBy("doc_id").agg(*sig_cols)
 
 
@@ -174,6 +172,10 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
+
+
+#: Schema of the staged pair table, which ``lsh_pairs_staged`` writes itself.
+_PAIRS_DDL = "doc_a bigint, doc_b bigint"
 
 
 def lsh_pairs_staged(
@@ -284,7 +286,7 @@ def lsh_pairs_staged(
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
     try:
-        return spark.read.parquet(final)
+        return spark.read.schema(_PAIRS_DDL).parquet(final)
     except Exception:
         # ADVICE r8: a concurrent steal can remove `final` between our
         # done-check and this read (the narrowed-but-open TOCTOU above).
@@ -293,7 +295,7 @@ def lsh_pairs_staged(
         if not _retry:
             raise
         if os.path.exists(done):
-            return spark.read.parquet(final)
+            return spark.read.schema(_PAIRS_DDL).parquet(final)
         return lsh_pairs_staged(spark, sf_dir, _retry=False)
 
 

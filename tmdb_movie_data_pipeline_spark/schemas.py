@@ -18,6 +18,7 @@ __all__ = [
     "MOVIE_SCHEMA",
     "RAW_MOVIE_SCHEMA",
     "GENRE_SCHEMA",
+    "TESTDATA_SCHEMAS",
     "TESTDATA_TABLES",
     "conform",
     "empty_movies",
@@ -89,19 +90,77 @@ GENRE_SCHEMA = T.StructType(
     ]
 )
 
-#: Names of the driver-provided synthetic tables (/root/repo/TESTDATA.md).
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+def _columns(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(name, dtype, True) for name, dtype in cols])
+
+
+_INT, _LONG, _DOUBLE, _STR = T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
+_TS_NTZ = T.TimestampNTZType()
+
+#: The driver-provided synthetic tables (TESTDATA.md), typed as
+#: Spark reads their Parquet files (every column nullable, timestamps are
+#: TIMESTAMP(MICROS) without UTC adjustment, hence ``timestamp_ntz``).
+#: ``io.load_table`` reads with these, so no read infers a schema.
+TESTDATA_SCHEMAS: dict[str, T.StructType] = {
+    "region": _columns(("r_regionkey", _INT), ("r_name", _STR)),
+    "nation": _columns(("n_nationkey", _INT), ("n_name", _STR), ("n_regionkey", _INT)),
+    "customer": _columns(
+        ("c_custkey", _LONG),
+        ("c_name", _STR),
+        ("c_nationkey", _INT),
+        ("c_acctbal", _DOUBLE),
+        ("c_mktsegment", _STR),
+    ),
+    "supplier": _columns(
+        ("s_suppkey", _LONG), ("s_name", _STR), ("s_nationkey", _INT), ("s_acctbal", _DOUBLE)
+    ),
+    "part": _columns(
+        ("p_partkey", _LONG),
+        ("p_name", _STR),
+        ("p_brand", _STR),
+        ("p_type", _STR),
+        ("p_size", _INT),
+        ("p_retailprice", _DOUBLE),
+    ),
+    "orders": _columns(
+        ("o_orderkey", _LONG),
+        ("o_custkey", _LONG),
+        ("o_orderstatus", _STR),
+        ("o_totalprice", _DOUBLE),
+        ("o_orderdate", _TS_NTZ),
+        ("o_orderpriority", _STR),
+    ),
+    "lineitem": _columns(
+        ("l_orderkey", _LONG),
+        ("l_partkey", _LONG),
+        ("l_suppkey", _LONG),
+        ("l_linenumber", _INT),
+        ("l_quantity", _DOUBLE),
+        ("l_extendedprice", _DOUBLE),
+        ("l_discount", _DOUBLE),
+        ("l_tax", _DOUBLE),
+        ("l_returnflag", _STR),
+        ("l_linestatus", _STR),
+        ("l_shipdate", _TS_NTZ),
+    ),
+    "events": _columns(
+        ("event_id", _LONG),
+        ("ts", _TS_NTZ),
+        ("user_id", _LONG),
+        ("event_type", _STR),
+        ("value", _DOUBLE),
+        ("props", _STR),
+    ),
+    "documents": _columns(
+        ("doc_id", _LONG), ("text", _STR), ("lang", _STR), ("source", _STR), ("n_chars", _LONG)
+    ),
+    "embeddings": _columns(
+        ("vec_id", _LONG), ("embedding", T.ArrayType(T.FloatType(), True)), ("label", _INT)
+    ),
+}
+
+#: Names of the synthetic tables, in declaration order.
+TESTDATA_TABLES = list(TESTDATA_SCHEMAS)
 
 
 def conform(df: DataFrame, schema: T.StructType) -> DataFrame:

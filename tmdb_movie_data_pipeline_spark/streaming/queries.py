@@ -36,43 +36,23 @@ from ..functions import (
     quantize,
 )
 from ..registry import register
-
-EVENTS_DDL_NANOS_AS_LONG = (
-    "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING,"
-    " value DOUBLE, props STRING"
-)
-EVENTS_DDL_NATIVE = (
-    "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING,"
-    " value DOUBLE, props STRING"
-)
+from ..schemas import TESTDATA_SCHEMAS
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the static events parquet (1 file = 1
     micro-batch; swap for format('kafka') in production).
 
-    `ts` is TIMESTAMP(NANOS) in the file. Like the batch loader
-    (io.load_table) this dispatches on what the runtime's parquet reader
-    actually produces — raw nanos BIGINT under the legacy
-    ``nanosAsLong`` conf, micros-truncated TIMESTAMP_NTZ under newer
-    native readers — and normalizes both to microsecond TIMESTAMP.
+    Read with the declared events schema, like the batch loader
+    (io.load_table): `ts` is TIMESTAMP_NTZ in the file and is cast to
+    the engine-wide TIMESTAMP.
     """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # conf retired: native nanos read handled below
-    probe = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    nanos_as_long = dict(probe.dtypes)["ts"] == "bigint"
     raw = (
-        spark.readStream.schema(
-            EVENTS_DDL_NANOS_AS_LONG if nanos_as_long else EVENTS_DDL_NATIVE
-        )
+        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "events.parquet")  # file source wants a dir
         .parquet(sf_dir)
     )
-    if nanos_as_long:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -701,8 +681,8 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _load_events_batch(spark: SparkSession, sf_dir: str):
     """Batch events with a plain TIMESTAMP ts + value — the staging input
-    for the late-drop replay (re-written parquet, so the nanos quirk of
-    the raw fixture never reaches the file stream source)."""
+    for the late-drop replay (re-written parquet, read back by the file
+    stream source)."""
     from ..io import load_table
 
     ev = load_table(spark, sf_dir, "events")
