@@ -155,7 +155,7 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
         ("doc_id", _LONG), ("text", _STR), ("lang", _STR), ("source", _STR), ("n_chars", _LONG)
     ),
     "embeddings": _columns(
-        ("vec_id", _LONG), ("embedding", T.ArrayType(T.FloatType(), True)), ("label", _INT)
+        ("vec_id", _LONG), ("embedding", T.ArrayType(T.FloatType())), ("label", _INT)
     ),
 }
 
