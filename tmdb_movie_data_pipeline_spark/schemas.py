@@ -97,10 +97,10 @@ def _columns(*cols: tuple[str, T.DataType]) -> T.StructType:
 _INT, _LONG, _DOUBLE, _STR = T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
 _TS_NTZ = T.TimestampNTZType()
 
-#: The driver-provided synthetic tables (TESTDATA.md), typed as
-#: Spark reads their Parquet files (every column nullable, timestamps are
-#: TIMESTAMP(MICROS) without UTC adjustment, hence ``timestamp_ntz``).
-#: ``io.load_table`` reads with these, so no read infers a schema.
+#: The synthetic test tables (TESTDATA.md), typed as Spark reads their
+#: Parquet files: every column nullable, and timestamps are TIMESTAMP(MICROS)
+#: without UTC adjustment, hence ``timestamp_ntz``. ``io.load_table`` reads
+#: with these, so no read infers a schema.
 TESTDATA_SCHEMAS: dict[str, T.StructType] = {
     "region": _columns(("r_regionkey", _INT), ("r_name", _STR)),
     "nation": _columns(("n_nationkey", _INT), ("n_name", _STR), ("n_regionkey", _INT)),
