@@ -42,3 +42,17 @@ def job_group(spark, group):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def physical_nodes(df):
+    """Every node of ``df``'s executed physical plan, looking through the
+    AQE wrapper."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        yield node
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))

@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from conftest import physical_nodes
 from tmdb_movie_data_pipeline_spark.registry import run_query
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -193,17 +194,10 @@ def _physical_node_counts(df, *names):
     """How many nodes of each named physical operator class the executed
     plan holds, looking through the AQE wrapper."""
     counts = dict.fromkeys(names, 0)
-    stack = [df._jdf.queryExecution().executedPlan()]
-    while stack:
-        node = stack.pop()
+    for node in physical_nodes(df):
         cls = node.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            stack.append(node.executedPlan())
-            continue
         if cls in counts:
             counts[cls] += 1
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
     return counts
 
 

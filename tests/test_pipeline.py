@@ -5,14 +5,30 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 
-from conftest import job_group
+from pyspark.sql.readwriter import DataFrameWriter
+
+from conftest import job_group, physical_nodes
 from tmdb_movie_data_pipeline_spark.pipeline import run_backfill
 
 
-def _write_fixture(tmp_path, win_start, win_end, movies):
-    page = {"total_pages": 1, "results": movies}
-    (tmp_path / f"{win_start}_{win_end}_p1.json").write_text(json.dumps(page))
+def _write_fixture(tmp_path, win_start, win_end, movies, page=1, total_pages=1):
+    doc = {"total_pages": total_pages, "results": movies}
+    (tmp_path / f"{win_start}_{win_end}_p{page}.json").write_text(json.dumps(doc))
+
+
+def _backfill_args(tmp_path, fixtures, date_from, date_to, name="out"):
+    return dict(
+        date_from=date_from,
+        date_to=date_to,
+        out_dir=str(tmp_path / name),
+        checkpoint_path=str(tmp_path / f"{name}.ckpt.json"),
+        genre_map={28: "Action", 35: "Comedy"},
+        image_base="https://cdn/",
+        poster_size="w500",
+        source_options={"fixture_dir": str(fixtures)},
+    )
 
 
 def _movie(mid, date, pop, title=None):
@@ -32,10 +48,13 @@ def _movie(mid, date, pop, title=None):
     }
 
 
-# Jobs one two-month run launches: the partitioned write (source scan, then
-# the per-month dedup shuffle), the master Parquet write (parts scan, then
-# the global dedup shuffle) and the single-file CSV copy. The checkpoint
-# diff, the row count and both schemas stay on the driver.
+# Jobs one two-month run launches: the partitioned write (the scan of the
+# ingested rows, then the per-month dedup shuffle), the master Parquet write
+# (parts scan, then the global dedup shuffle) and the single-file CSV copy.
+# Under the driver gate that first scan reads a local relation the driver
+# filled with the fetched pages; over it, the paged_rest DataSource fetches
+# the pages inside the scan. The count is the same on both sides. The
+# checkpoint diff, the row count and both schemas stay on the driver.
 FULL_RUN_JOB_BUDGET = 5
 
 
@@ -193,3 +212,113 @@ def test_backfill_of_empty_months_commits_empty_master(spark, tmp_path):
     assert run_backfill(spark, **args) == {"months_run": 2, "rows": 0}
     assert spark.read.parquet(str(out / "master_parquet")).count() == 0
     assert len(glob.glob(str(out / "master_csv" / "part-*.csv"))) == 1
+
+
+def _files(root):
+    """{relative path: (size, mtime_ns)} of every file under ``root``."""
+    out = {}
+    for dirpath, _, names in os.walk(root):
+        for n in names:
+            st = os.stat(os.path.join(dirpath, n))
+            out[os.path.relpath(os.path.join(dirpath, n), root)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_backfill_resume_requests_only_pending_months(spark, tmp_path):
+    """A resume whose pending months are not contiguous must not request the
+    done month between them again: February is checkpointed done and its
+    fixture page is now unreadable, so any request for it fails the run.
+    February's committed partition files stay as they were."""
+    fixtures = tmp_path / "fx"
+    fixtures.mkdir()
+    _write_fixture(fixtures, "2023-01-01", "2023-01-31", [_movie(1, "2023-01-10", 5.0)])
+    _write_fixture(fixtures, "2023-02-01", "2023-02-28", [_movie(2, "2023-02-10", 5.0)])
+    _write_fixture(fixtures, "2023-03-01", "2023-03-31", [_movie(3, "2023-03-10", 5.0)])
+    feb = _backfill_args(tmp_path, fixtures, "2023-02-01", "2023-02-28")
+    assert run_backfill(spark, **feb)["months_run"] == 1
+    (fixtures / "2023-02-01_2023-02-28_p1.json").write_text("{not json")
+    parts = tmp_path / "out" / "monthly_parts"
+    feb_part = parts / "unit_key=2023-02-01_2023-02-28"
+    before = _files(feb_part)
+    assert before
+
+    stats = run_backfill(spark, **dict(feb, date_from="2023-01-01", date_to="2023-03-31"))
+    assert stats == {"months_run": 2, "rows": 2}
+    assert _files(feb_part) == before
+    master = spark.read.parquet(str(tmp_path / "out" / "master_parquet"))
+    assert sorted(r.tmdb_id for r in master.collect()) == [1, 2, 3]
+
+
+def _python_source_scans(df):
+    """Python-DataSource scan nodes in ``df``'s physical plan."""
+    return sum(
+        node.getClass().getSimpleName() == "BatchScanExec"
+        and "Python" in node.scan().getClass().getSimpleName()
+        for node in physical_nodes(df)
+    )
+
+
+def test_backfill_identical_on_all_sides_of_driver_gate(spark, tmp_path, monkeypatch):
+    """The same fixture backfilled on the driver path (the session's
+    threshold), through the distributed read after the estimate exceeds a
+    tiny threshold, and with the driver path off (threshold -1) gives the
+    same stats, partitions, master, CSV and checkpoint."""
+    fixtures = tmp_path / "fx"
+    fixtures.mkdir()
+    odd = dict(_movie(4, None, 8.0), poster_path=None, genre_ids=[], vote_average=7)
+    blank = dict(_movie(5, "2023-01-12", 6.0), poster_path="", genre_ids=[28, 9999])
+    _write_fixture(
+        fixtures, "2023-01-01", "2023-01-31",
+        [_movie(1, "2023-01-10", 50.0, "keep-me"), _movie(1, "2023-01-10", 10.0, "drop-me"),
+         _movie(2, "2023-01-20", 30.0), odd],
+        total_pages=2,
+    )
+    _write_fixture(fixtures, "2023-01-01", "2023-01-31", [blank], page=2, total_pages=2)
+    _write_fixture(
+        fixtures, "2023-02-01", "2023-02-28",
+        [_movie(2, "2023-02-05", 99.0), _movie(3, "2023-02-15", 20.0)],
+    )
+    written = []
+    write = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        if path.endswith("monthly_parts"):
+            written.append(self._df)
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(conf)
+    results = {}
+    try:
+        for side, threshold in [("driver", saved), ("over_cap", "300"), ("off", "-1")]:
+            spark.conf.set(conf, threshold)
+            args = _backfill_args(tmp_path, fixtures, "2023-01-01", "2023-02-28", side)
+            with job_group(spark, f"backfill-{side}-{tmp_path.name}") as jobs:
+                stats = run_backfill(spark, **args)
+            assert 0 < len(jobs) <= FULL_RUN_JOB_BUDGET, (side, jobs)
+            assert _python_source_scans(written[-1]) == (side != "driver"), side
+            out = tmp_path / side
+            csv = sorted(
+                line
+                for f in glob.glob(str(out / "master_csv" / "part-*.csv"))
+                for line in open(f).read().splitlines()
+            )
+            results[side] = (
+                stats,
+                sorted(spark.read.parquet(str(out / "monthly_parts")).collect(), key=repr),
+                sorted(spark.read.parquet(str(out / "master_parquet")).collect(), key=repr),
+                csv,
+                json.loads(open(args["checkpoint_path"]).read()),
+            )
+    finally:
+        spark.conf.set(conf, saved)
+    assert results["driver"] == results["over_cap"] == results["off"]
+    stats, parts, master, csv, _ = results["driver"]
+    assert stats == {"months_run": 2, "rows": 6}
+    got = {r.tmdb_id: r for r in master}
+    assert set(got) == {1, 2, 3, 4, 5}
+    assert got[4].release_date is None and got[4].vote_average == 7.0
+    assert got[4].poster_url is None and got[5].poster_url is None
+    assert (got[4].genres, got[5].genres) == ("", "Action|9999")
+    assert len(csv) == 6  # header plus five movies

@@ -6,12 +6,17 @@ import json
 
 import pytest
 
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from tmdb_movie_data_pipeline_spark.sources import rest
 from tmdb_movie_data_pipeline_spark.sources.rest import (
+    SOURCE_SCHEMA,
     PagedRestDataSource,
     PermanentHttpError,
     RetryPolicy,
     TransientHttpError,
     fetch_window,
+    fetch_windows_to_arrow,
 )
 
 
@@ -36,6 +41,60 @@ def test_fetch_window_pages_through(tmp_path):
     rows = list(fetch_window(transport, "2023-01-01", "2023-01-31"))
     assert calls == [1, 2, 3]
     assert len(rows) == 6
+
+
+def test_fetch_window_reuses_a_fetched_first_page():
+    calls = []
+
+    def transport(params):
+        calls.append(params["page"])
+        return _page([params["page"]], total_pages=3)
+
+    rows = list(fetch_window(transport, "2023-01-01", "2023-01-31", first=_page([1], 3)))
+    assert calls == [2, 3]  # page 1 was passed in, not requested again
+    assert [r["id"] for r in rows] == [1, 2, 3]
+
+
+def test_fetch_windows_to_arrow_requests_only_the_given_windows(tmp_path, monkeypatch):
+    """The driver fetch pages through exactly the windows it is given, each
+    page once; over the byte cap it stops after the first pages, and a cap
+    ≤ 0 sends no request at all."""
+    jan, feb, mar = (
+        ("2023-01-01", "2023-01-31"), ("2023-02-01", "2023-02-28"), ("2023-03-01", "2023-03-31")
+    )
+    pages = {(jan, 1): _page([1, 2], 2), (jan, 2): _page([3], 2), (mar, 1): _page([4], 1)}
+    for ((a, b), p), doc in pages.items():
+        (tmp_path / f"{a}_{b}_p{p}.json").write_text(json.dumps(doc))
+    (tmp_path / f"{feb[0]}_{feb[1]}_p1.json").write_text("{not json")  # never read
+    calls = []
+    fixture = rest._fixture_transport
+
+    def counting(fixture_dir):
+        serve = fixture(fixture_dir)
+
+        def transport(params):
+            calls.append((params["primary_release_date.gte"], params["page"]))
+            return serve(params)
+
+        return transport
+
+    monkeypatch.setattr(rest, "_fixture_transport", counting)
+    opts = {"fixture_dir": str(tmp_path)}
+
+    table = fetch_windows_to_arrow(opts, [jan, mar], 1 << 20)
+    assert sorted(calls) == [(jan[0], 1), (jan[0], 2), (mar[0], 1)]
+    assert table.schema == to_arrow_schema(SOURCE_SCHEMA)
+    assert table.column("id").to_pylist() == [1, 2, 3, 4]
+    assert table.column("_window_key").to_pylist() == ["2023-01-01_2023-01-31"] * 3 + [
+        "2023-03-01_2023-03-31"
+    ]
+
+    calls.clear()
+    assert fetch_windows_to_arrow(opts, [jan, mar], 1) is None
+    assert sorted(calls) == [(jan[0], 1), (mar[0], 1)]  # first pages only
+    calls.clear()
+    assert fetch_windows_to_arrow(opts, [jan, mar], 0) is None
+    assert calls == []
 
 
 def test_fetch_window_page_cap_warns():

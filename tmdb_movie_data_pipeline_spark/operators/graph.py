@@ -35,6 +35,7 @@ from pyspark.sql.window import Window as W
 
 from ..io import load_table
 from ..registry import register
+from ..session import driver_collect_bytes
 from .dedup import _MINHASH_ORACLE, lsh_pairs_staged
 
 __all__ = [
@@ -69,12 +70,11 @@ def _vector_broadcast_cap() -> int:
 
 
 def _driver_edge_cap(spark: SparkSession) -> int:
-    """Most edges :func:`connected_components` labels on the driver: the
-    session's broadcast threshold read as (long, long) edges — 4,194,304 at
-    the engine's 64 MiB, 655,360 at Spark's default 10 MiB. A threshold
-    ≤ 0 (broadcasts off) turns the driver path off too."""
-    conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
-    return max(conf.autoBroadcastJoinThreshold(), 0) // _EDGE_BYTES
+    """Most edges :func:`connected_components` labels on the driver:
+    :func:`driver_collect_bytes` read as (long, long) edges —
+    4,194,304 at the engine's 64 MiB, 655,360 at Spark's default 10 MiB. A
+    threshold ≤ 0 (broadcasts off) turns the driver path off too."""
+    return driver_collect_bytes(spark) // _EDGE_BYTES
 
 
 def _min_roots(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:

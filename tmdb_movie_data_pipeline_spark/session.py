@@ -20,7 +20,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["driver_collect_bytes", "get_spark", "stop_spark"]
 
 
 def get_spark(
@@ -101,6 +101,16 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_collect_bytes(spark: SparkSession) -> int:
+    """Bytes a bounded input may take when it is collected to (or built on)
+    the driver instead of running as distributed jobs: the session's
+    broadcast threshold, i.e. what Spark itself would ship from the driver
+    to every executor. A threshold ≤ 0 (broadcasts off) gives 0, which
+    turns every driver path off."""
+    conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+    return max(conf.autoBroadcastJoinThreshold(), 0)
 
 
 def stop_spark() -> None:

@@ -1,19 +1,31 @@
-"""Paged-REST batch DataSource (SURVEY.md §2.1 S1/S2, §4 R1-R3/R9-R10).
+"""Paged-REST batch source (SURVEY.md §2.1 S1/S2, §4 R1-R3/R9-R10).
 
 The reference's ingest is a sequential page loop per month window with
-retry/backoff/rate-limit (src/movie.py:98-129, 145-182). This re-plans it
-for a cluster using the PySpark Python DataSource API (Spark 4.x):
+retry/backoff/rate-limit (src/movie.py:98-129, 145-182). This module keeps
+that loop (:func:`fetch_window`) and offers two ways to run it:
 
-* **partitions = date windows** (one per calendar month): each executor
-  task pages through one window — the reference's outer loop, parallelized;
+* **on the driver** (:func:`fetch_windows_to_arrow`): page 1 of every
+  requested window is fetched first; when the windows' estimated Arrow
+  size fits the caller's byte cap, the remaining pages follow and the
+  rows come back as ONE Arrow table for ``spark.createDataFrame`` — no
+  Python worker, no DataSource planning round trip;
+* **on executors** (:class:`PagedRestDataSource`,
+  ``spark.read.format("paged_rest")``), the PySpark Python DataSource
+  API (Spark 4.x): **partitions = date windows** (one per calendar
+  month), each executor task pages through one window — the reference's
+  outer loop, parallelized. ``pipeline.run_backfill`` falls back to it
+  when the driver estimate is over the cap.
+
+Both run the same loop with the same options:
+
 * **pushdown by option** (R1-R3): date range, min_votes, include_adult and
   the page cap travel as reader options into the request parameters — the
   Python DS API has no filter-pushdown hook yet, so predicates are
   forwarded explicitly, exactly like the reference's API params;
 * **per-request resilience** (S2/R10): bounded retries with exponential
-  backoff, Retry-After honor on 429, fail-fast on other 4xx — implemented
-  engine-side per partition; task-level retries are Spark's;
-* **rate limit** (R9): polite sleep between pages, per partition;
+  backoff, Retry-After honor on 429, fail-fast on other 4xx — per window;
+  on executors, task-level retries are Spark's;
+* **rate limit** (R9): polite sleep between pages, per window;
 * **fixture transport**: tests and offline runs inject a deterministic
   page-serving function instead of a network session — no sockets needed.
 
@@ -27,14 +39,15 @@ from __future__ import annotations
 import json
 import time
 import warnings
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 from datetime import date
 
+import pyarrow as pa
+from pyspark.sql.conversion import LocalDataToArrowConversion
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-from pyspark.sql.types import StructType
-
-from pyspark.sql.types import StringType, StructField
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..schemas import RAW_MOVIE_SCHEMA
 
@@ -43,6 +56,7 @@ __all__ = [
     "SOURCE_SCHEMA",
     "month_windows",
     "fetch_window",
+    "fetch_windows_to_arrow",
     "RetryPolicy",
 ]
 
@@ -116,6 +130,37 @@ class PermanentHttpError(Exception):
     """Other 4xx — fail fast (reference src/movie.py:123-126)."""
 
 
+def _window_params(
+    date_from: str, date_to: str, min_votes: int, include_adult: bool, language: str | None
+) -> dict:
+    params = {
+        "primary_release_date.gte": date_from,
+        "primary_release_date.lte": date_to,
+        "vote_count.gte": min_votes,
+        "include_adult": str(include_adult).lower(),
+        "sort_by": "popularity.desc",
+        "page": 1,
+    }
+    if language:  # reference sends it on every request (src/movie.py:151)
+        params["language"] = language
+    return params
+
+
+def _first_page(
+    transport: Callable[[dict], dict],
+    date_from: str,
+    date_to: str,
+    *,
+    min_votes: int = 0,
+    include_adult: bool = False,
+    retry: RetryPolicy | None = None,
+    language: str | None = None,
+) -> dict:
+    """Page 1 of one window — the page that carries ``total_pages``."""
+    params = _window_params(date_from, date_to, min_votes, include_adult, language)
+    return (retry or RetryPolicy()).call(lambda: transport(dict(params)))
+
+
 def fetch_window(
     transport: Callable[[dict], dict],
     date_from: str,
@@ -128,6 +173,7 @@ def fetch_window(
     retry: RetryPolicy | None = None,
     sleeper: Callable[[float], None] = time.sleep,
     language: str | None = None,
+    first: dict | None = None,
 ) -> Iterator[dict]:
     """Page through one window via ``transport(params) -> page_dict``.
 
@@ -135,19 +181,16 @@ def fetch_window(
     fixture function in tests. Pushed-down predicates ride in the params
     (R1), ordering is the source's popularity-desc contract (R2), and the
     page cap stops fetching early (R3) — with a loud warning, never silent.
+    ``first`` is the window's page 1 when the caller already fetched it
+    (:func:`_first_page`); it is not requested again.
     """
     retry = retry or RetryPolicy()
-    params = {
-        "primary_release_date.gte": date_from,
-        "primary_release_date.lte": date_to,
-        "vote_count.gte": min_votes,
-        "include_adult": str(include_adult).lower(),
-        "sort_by": "popularity.desc",
-        "page": 1,
-    }
-    if language:  # reference sends it on every request (src/movie.py:151)
-        params["language"] = language
-    first = retry.call(lambda: transport(dict(params)))
+    if first is None:
+        first = _first_page(
+            transport, date_from, date_to, min_votes=min_votes,
+            include_adult=include_adult, retry=retry, language=language,
+        )
+    params = _window_params(date_from, date_to, min_votes, include_adult, language)
     total_pages = int(first.get("total_pages", 1))
     if total_pages > max_pages:
         warnings.warn(
@@ -162,6 +205,83 @@ def fetch_window(
         p = dict(params, page=page)
         got = retry.call(lambda p=p: transport(p))
         yield from got.get("results", [])
+
+
+def _source_args(opts: dict) -> tuple[Callable[[dict], dict], dict, dict]:
+    """(transport, query options, paging options) from the source options —
+    parsed here once for both the executor reader and the driver fetch."""
+    fixture_dir = opts.get("fixture_dir")
+    if fixture_dir:
+        transport = _fixture_transport(fixture_dir)
+    else:  # pragma: no cover - network path, exercised on real clusters
+        transport = _http_transport(opts)
+    query = dict(
+        min_votes=int(opts.get("min_votes", 0)),
+        include_adult=opts.get("include_adult", "false") == "true",
+        language=opts.get("language"),
+    )
+    paging = dict(
+        max_pages=int(opts.get("max_pages", DEFAULT_MAX_PAGES)),
+        polite_sleep=float(opts.get("polite_sleep", 0.0)),
+    )
+    return transport, query, paging
+
+
+_FIELDS = [f.name for f in RAW_MOVIE_SCHEMA.fields]
+
+
+def _source_rows(records: Iterable[dict], window_key: str) -> Iterator[tuple]:
+    """SOURCE_SCHEMA tuples. Every row carries the window that fetched it:
+    downstream unit attribution (checkpointing, partitioned writes) never
+    has to re-derive the window from release_date — which would mis-bin
+    clamped final windows and drop null release dates (ADVICE r1)."""
+    for rec in records:
+        yield tuple(rec.get(f) for f in _FIELDS) + (window_key,)
+
+
+def _arrow_rows(rows: list[tuple]) -> pa.Table:
+    """SOURCE_SCHEMA rows as Arrow, converted value by value the way the
+    Python DataSource worker converts what :class:`_PagedRestReader`
+    yields (an integral ``vote_average`` becomes a double, a non-string
+    in a string column its ``str``), so both ingest paths type the same
+    records identically."""
+    if not rows:
+        return to_arrow_schema(SOURCE_SCHEMA).empty_table()
+    return LocalDataToArrowConversion.convert(rows, SOURCE_SCHEMA, use_large_var_types=False)
+
+
+def fetch_windows_to_arrow(
+    options: dict, windows: list[tuple[str, str]], cap_bytes: int
+) -> pa.Table | None:
+    """Fetch exactly ``windows`` on the driver into one SOURCE_SCHEMA
+    table, or return ``None`` when they would not fit in ``cap_bytes``.
+
+    Page 1 of every window is fetched first. The table's size is estimated
+    per window as page 1's Arrow bytes × the pages that will be read
+    (``min(total_pages, max_pages)``); over the cap nothing more is
+    fetched and the caller runs the distributed read instead. A cap ≤ 0
+    returns ``None`` before any request. ``options`` are the
+    ``paged_rest`` source options.
+    """
+    if cap_bytes <= 0:
+        return None
+    transport, query, paging = _source_args(options)
+    firsts = [_first_page(transport, a, b, **query) for a, b in windows]
+    estimate = sum(
+        _arrow_rows(list(_source_rows(f.get("results", []), f"{a}_{b}"))).nbytes
+        * min(int(f.get("total_pages", 1)), paging["max_pages"])
+        for (a, b), f in zip(windows, firsts)
+    )
+    if estimate > cap_bytes:
+        return None
+    rows = [
+        row
+        for (a, b), f in zip(windows, firsts)
+        for row in _source_rows(
+            fetch_window(transport, a, b, first=f, **query, **paging), f"{a}_{b}"
+        )
+    ]
+    return _arrow_rows(rows)
 
 
 class _WindowPartition(InputPartition):
@@ -180,30 +300,11 @@ class _PagedRestReader(DataSourceReader):
         return [_WindowPartition(a, b) for a, b in wins]
 
     def read(self, partition: _WindowPartition) -> Iterator[tuple]:
-        opts = self.options
-        fixture_dir = opts.get("fixture_dir")
-        if fixture_dir:
-            transport = _fixture_transport(fixture_dir)
-        else:  # pragma: no cover - network path, exercised on real clusters
-            transport = _http_transport(opts)
-        fields = [f.name for f in RAW_MOVIE_SCHEMA.fields]
-        rows = fetch_window(
-            transport,
-            partition.date_from,
-            partition.date_to,
-            min_votes=int(opts.get("min_votes", 0)),
-            include_adult=opts.get("include_adult", "false") == "true",
-            max_pages=int(opts.get("max_pages", DEFAULT_MAX_PAGES)),
-            polite_sleep=float(opts.get("polite_sleep", 0.0)),
-            language=opts.get("language"),
+        transport, query, paging = _source_args(self.options)
+        a, b = partition.date_from, partition.date_to
+        yield from _source_rows(
+            fetch_window(transport, a, b, **query, **paging), f"{a}_{b}"
         )
-        # every row carries the window that fetched it: downstream unit
-        # attribution (checkpointing, partitioned writes) never has to
-        # re-derive the window from release_date — which would mis-bin
-        # clamped final windows and drop null release dates (ADVICE r1)
-        window_key = f"{partition.date_from}_{partition.date_to}"
-        for rec in rows:
-            yield tuple(rec.get(f) for f in fields) + (window_key,)
 
 
 def _fixture_transport(fixture_dir: str) -> Callable[[dict], dict]:
@@ -277,7 +378,9 @@ class PagedRestDataSource(DataSource):
     ``spark.dataSource.register(PagedRestDataSource)``.
 
     Options: date_from, date_to (required); min_votes, include_adult,
-    max_pages, polite_sleep, fixture_dir | (base_url, bearer_token).
+    max_pages, polite_sleep, language, fixture_dir | (base_url,
+    bearer_token). The read has one partition per calendar month from
+    date_from to date_to, every month in that span.
     """
 
     @classmethod
