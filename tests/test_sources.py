@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import threading
 
 import pytest
 
@@ -55,17 +56,18 @@ def test_fetch_window_reuses_a_fetched_first_page():
     assert [r["id"] for r in rows] == [1, 2, 3]
 
 
-def test_fetch_windows_to_arrow_requests_only_the_given_windows(tmp_path, monkeypatch):
-    """The driver fetch pages through exactly the windows it is given, each
-    page once; over the byte cap it stops after the first pages, and a cap
-    ≤ 0 sends no request at all."""
-    jan, feb, mar = (
-        ("2023-01-01", "2023-01-31"), ("2023-02-01", "2023-02-28"), ("2023-03-01", "2023-03-31")
-    )
-    pages = {(jan, 1): _page([1, 2], 2), (jan, 2): _page([3], 2), (mar, 1): _page([4], 1)}
+JAN, FEB, MAR = (
+    ("2023-01-01", "2023-01-31"), ("2023-02-01", "2023-02-28"), ("2023-03-01", "2023-03-31")
+)
+
+
+def _fixture_opts(tmp_path, monkeypatch, pages, on_request=None):
+    """Fixture source options serving ``pages`` ({(window, page): doc});
+    February's page 1 is unreadable JSON, so requesting it fails. Returns
+    (options, the (date_from, page) of every request)."""
     for ((a, b), p), doc in pages.items():
         (tmp_path / f"{a}_{b}_p{p}.json").write_text(json.dumps(doc))
-    (tmp_path / f"{feb[0]}_{feb[1]}_p1.json").write_text("{not json")  # never read
+    (tmp_path / f"{FEB[0]}_{FEB[1]}_p1.json").write_text("{not json")
     calls = []
     fixture = rest._fixture_transport
 
@@ -74,15 +76,24 @@ def test_fetch_windows_to_arrow_requests_only_the_given_windows(tmp_path, monkey
 
         def transport(params):
             calls.append((params["primary_release_date.gte"], params["page"]))
+            if on_request:
+                on_request(params)
             return serve(params)
 
         return transport
 
     monkeypatch.setattr(rest, "_fixture_transport", counting)
-    opts = {"fixture_dir": str(tmp_path)}
+    return {"fixture_dir": str(tmp_path)}, calls
 
-    table = fetch_windows_to_arrow(opts, [jan, mar], 1 << 20)
-    assert sorted(calls) == [(jan[0], 1), (jan[0], 2), (mar[0], 1)]
+
+def test_fetch_windows_to_arrow_requests_only_the_given_windows(tmp_path, monkeypatch):
+    """The driver fetch pages through exactly the windows it is given, each
+    page once; a cap ≤ 0 sends no request at all."""
+    pages = {(JAN, 1): _page([1, 2], 2), (JAN, 2): _page([3], 2), (MAR, 1): _page([4], 1)}
+    opts, calls = _fixture_opts(tmp_path, monkeypatch, pages)
+
+    table = fetch_windows_to_arrow(opts, [JAN, MAR], 1 << 20)
+    assert sorted(calls) == [(JAN[0], 1), (JAN[0], 2), (MAR[0], 1)]
     assert table.schema == to_arrow_schema(SOURCE_SCHEMA)
     assert table.column("id").to_pylist() == [1, 2, 3, 4]
     assert table.column("_window_key").to_pylist() == ["2023-01-01_2023-01-31"] * 3 + [
@@ -90,11 +101,40 @@ def test_fetch_windows_to_arrow_requests_only_the_given_windows(tmp_path, monkey
     ]
 
     calls.clear()
-    assert fetch_windows_to_arrow(opts, [jan, mar], 1) is None
-    assert sorted(calls) == [(jan[0], 1), (mar[0], 1)]  # first pages only
-    calls.clear()
-    assert fetch_windows_to_arrow(opts, [jan, mar], 0) is None
+    assert fetch_windows_to_arrow(opts, [JAN, MAR], 0) is None
     assert calls == []
+
+
+def test_fetch_windows_to_arrow_stops_requesting_once_over_the_cap(tmp_path, monkeypatch):
+    """Over the cap, the first page that pushes the estimate past it is the
+    last request: later windows' first pages (February's would fail to
+    parse) and the remaining pages are never requested."""
+    pages = {(JAN, 1): _page([1, 2], 2), (JAN, 2): _page([3], 2), (MAR, 1): _page([4], 1)}
+    opts, calls = _fixture_opts(tmp_path, monkeypatch, pages)
+
+    assert fetch_windows_to_arrow(opts, [JAN, FEB, MAR], 1) is None
+    assert calls == [(JAN[0], 1)]
+
+
+def test_fetch_windows_to_arrow_fetches_windows_concurrently(tmp_path, monkeypatch):
+    """``workers`` windows are in flight at once (the barrier only opens
+    when all three first pages are requested together), and the table
+    keeps the windows' order."""
+    apr = ("2023-04-01", "2023-04-30")
+    pages = {
+        (JAN, 1): _page([1], 2), (JAN, 2): _page([2], 2),
+        (MAR, 1): _page([3], 1), (apr, 1): _page([4], 1),
+    }
+    barrier = threading.Barrier(3, timeout=10)
+
+    def on_request(params):
+        if params["page"] == 1:
+            barrier.wait()
+
+    opts, calls = _fixture_opts(tmp_path, monkeypatch, pages, on_request)
+    table = fetch_windows_to_arrow(opts, [JAN, MAR, apr], 1 << 20, workers=3)
+    assert table.column("id").to_pylist() == [1, 2, 3, 4]
+    assert len(calls) == 4
 
 
 def test_fetch_window_page_cap_warns():

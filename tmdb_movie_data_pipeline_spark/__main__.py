@@ -7,9 +7,8 @@
 
 Differences from the reference by design: config is passed as arguments
 (the reference raises at import if TMDB_BEARER is unset — an anti-pattern
-its own tests have to monkeypatch around, SURVEY.md §5); a backfill too
-large to fetch on the driver runs its months in parallel; the page cap
-warns instead of silently truncating.
+its own tests have to monkeypatch around, SURVEY.md §5); months run in
+parallel; the page cap warns instead of silently truncating.
 """
 
 from __future__ import annotations

@@ -825,12 +825,11 @@ def pipeline_month_backfill_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``orders``; any mis-attributed window, wrong survivor, or doubled
     month would change the row set.
 
-    Scale: each stage is the production shape — pending months whose
-    pages fit under the session's broadcast threshold are fetched on the
-    driver into one local relation (this fixture is, unless broadcasts
-    are off); larger
-    backfills ingest as parallel source partitions, one per month (the
-    reference's loop is sequential). Dedup is one hash-shuffle per stage
+    Scale: each stage is the production shape — months ingest in
+    parallel (the reference's loop is sequential): on driver threads into
+    one local relation when their pages fit under the session's broadcast
+    threshold (this fixture does, unless broadcasts are off), else as
+    source partitions, one per month. Dedup is one hash-shuffle per stage
     keyed on (unit, id) then id, the monthly write commits per-partition
     (idempotent re-runs), and the master merge is one scan of the
     partitioned dataset plus one keyed shuffle. Nothing here is

@@ -14,10 +14,11 @@ Engine composition of the same stages:
       → ingest of exactly the pending month windows: when their estimated
         Arrow size fits session.driver_collect_bytes (the broadcast
         threshold), sources.rest.fetch_windows_to_arrow pages through them
-        on the driver into one local relation; over it, or with the
-        threshold ≤ 0, the paged_rest DataSource reads the span from the
-        first to the last pending month on executors (one partition per
-        month) and the done months inside the span are filtered out
+        on driver threads (as many at once as the cluster runs tasks) into
+        one local relation; over it, or with the threshold ≤ 0, the
+        paged_rest DataSource reads the span from the first to the last
+        pending month on executors (one partition per month) and the done
+        months inside the span are filtered out
       → operators.normalize (one Catalyst projection)
       → operators.windows.keep_first (deterministic dedup survivor, A1)
       → partitioned write, dynamic partition overwrite (idempotent months);
@@ -29,8 +30,8 @@ Engine composition of the same stages:
 
 Differences by design (each is a documented fix of a reference defect):
 * dedup survivor pinned by explicit ordering, not file order (SURVEY §7.3);
-* months over the driver cap run in parallel, one source partition each
-  (reference: strictly sequential, movie.py:260);
+* months run in parallel — on driver threads, or one source partition
+  each over the driver cap (reference: strictly sequential, movie.py:260);
 * the per-window row cap warns loudly instead of silently truncating.
 """
 
@@ -64,10 +65,10 @@ def run_backfill(
     ``source_options`` configures the paged_rest source (fixture_dir for
     offline runs, base_url/bearer_token for live ones). Pending months that
     fit under :func:`~.session.driver_collect_bytes` are fetched on the
-    driver, and only they are requested. Above it the distributed
-    ``paged_rest`` read spans ``min(pending)..max(pending)`` and filters
-    afterwards, so on a resume with gaps it requests the done months
-    inside the span again.
+    driver, ``defaultParallelism`` months at once, and only they are
+    requested. Above it the distributed ``paged_rest`` read spans
+    ``min(pending)..max(pending)`` and filters afterwards, so on a resume
+    with gaps it requests the done months inside the span again.
     """
     from .sources.rest import (
         SOURCE_SCHEMA,
@@ -84,7 +85,12 @@ def run_backfill(
         return {"months_run": 0, "rows": 0}
     todo_keys = [f"{a}_{b}" for a, b in todo]
 
-    table = fetch_windows_to_arrow(source_options, todo, driver_collect_bytes(spark))
+    table = fetch_windows_to_arrow(
+        source_options,
+        todo,
+        driver_collect_bytes(spark),
+        workers=spark.sparkContext.defaultParallelism,
+    )
     if table is not None:
         raw = spark.createDataFrame(table, SOURCE_SCHEMA)
     else:

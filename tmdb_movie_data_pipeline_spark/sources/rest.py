@@ -4,11 +4,12 @@ The reference's ingest is a sequential page loop per month window with
 retry/backoff/rate-limit (src/movie.py:98-129, 145-182). This module keeps
 that loop (:func:`fetch_window`) and offers two ways to run it:
 
-* **on the driver** (:func:`fetch_windows_to_arrow`): page 1 of every
-  requested window is fetched first; when the windows' estimated Arrow
-  size fits the caller's byte cap, the remaining pages follow and the
-  rows come back as ONE Arrow table for ``spark.createDataFrame`` — no
-  Python worker, no DataSource planning round trip;
+* **on the driver** (:func:`fetch_windows_to_arrow`), several windows
+  at once on threads: page 1 of every requested window is fetched first;
+  when the windows' estimated Arrow size fits the caller's byte cap, the
+  remaining pages follow and the rows come back as ONE Arrow table for
+  ``spark.createDataFrame`` — no Python worker, no DataSource planning
+  round trip;
 * **on executors** (:class:`PagedRestDataSource`,
   ``spark.read.format("paged_rest")``), the PySpark Python DataSource
   API (Spark 4.x): **partitions = date windows** (one per calendar
@@ -24,7 +25,8 @@ Both run the same loop with the same options:
   forwarded explicitly, exactly like the reference's API params;
 * **per-request resilience** (S2/R10): bounded retries with exponential
   backoff, Retry-After honor on 429, fail-fast on other 4xx — per window;
-  on executors, task-level retries are Spark's;
+  on executors, task-level retries are Spark's (the driver fetch has
+  none);
 * **rate limit** (R9): polite sleep between pages, per window;
 * **fixture transport**: tests and offline runs inject a deterministic
   page-serving function instead of a network session — no sockets needed.
@@ -37,11 +39,14 @@ truncation loudly via a warning instead of silently dropping data.
 from __future__ import annotations
 
 import json
+import threading
 import time
 import warnings
 from collections.abc import Callable, Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from datetime import date
+from itertools import islice
 
 import pyarrow as pa
 from pyspark.sql.conversion import LocalDataToArrowConversion
@@ -146,21 +151,6 @@ def _window_params(
     return params
 
 
-def _first_page(
-    transport: Callable[[dict], dict],
-    date_from: str,
-    date_to: str,
-    *,
-    min_votes: int = 0,
-    include_adult: bool = False,
-    retry: RetryPolicy | None = None,
-    language: str | None = None,
-) -> dict:
-    """Page 1 of one window — the page that carries ``total_pages``."""
-    params = _window_params(date_from, date_to, min_votes, include_adult, language)
-    return (retry or RetryPolicy()).call(lambda: transport(dict(params)))
-
-
 def fetch_window(
     transport: Callable[[dict], dict],
     date_from: str,
@@ -181,16 +171,13 @@ def fetch_window(
     fixture function in tests. Pushed-down predicates ride in the params
     (R1), ordering is the source's popularity-desc contract (R2), and the
     page cap stops fetching early (R3) — with a loud warning, never silent.
-    ``first`` is the window's page 1 when the caller already fetched it
-    (:func:`_first_page`); it is not requested again.
+    ``first`` is the window's page 1 when the caller already fetched it;
+    it is not requested again.
     """
     retry = retry or RetryPolicy()
-    if first is None:
-        first = _first_page(
-            transport, date_from, date_to, min_votes=min_votes,
-            include_adult=include_adult, retry=retry, language=language,
-        )
     params = _window_params(date_from, date_to, min_votes, include_adult, language)
+    if first is None:
+        first = retry.call(lambda: transport(dict(params)))
     total_pages = int(first.get("total_pages", 1))
     if total_pages > max_pages:
         warnings.warn(
@@ -251,37 +238,63 @@ def _arrow_rows(rows: list[tuple]) -> pa.Table:
 
 
 def fetch_windows_to_arrow(
-    options: dict, windows: list[tuple[str, str]], cap_bytes: int
+    options: dict, windows: list[tuple[str, str]], cap_bytes: int, workers: int = 1
 ) -> pa.Table | None:
     """Fetch exactly ``windows`` on the driver into one SOURCE_SCHEMA
     table, or return ``None`` when they would not fit in ``cap_bytes``.
 
-    Page 1 of every window is fetched first. The table's size is estimated
-    per window as page 1's Arrow bytes × the pages that will be read
-    (``min(total_pages, max_pages)``); over the cap nothing more is
-    fetched and the caller runs the distributed read instead. A cap ≤ 0
-    returns ``None`` before any request. ``options`` are the
-    ``paged_rest`` source options.
+    Up to ``workers`` windows are fetched at once, on threads (the
+    requests are I/O bound). Page 1 of every window comes first; the
+    table's size is estimated per window as page 1's Arrow bytes × the
+    pages that will be read (``min(total_pages, max_pages)``), summed as
+    the first pages arrive. Once the sum passes the cap no further request
+    starts and the caller runs the distributed read instead. A cap ≤ 0
+    returns ``None`` before any request. Under the cap each window's
+    remaining pages are fetched and converted to Arrow one window at a
+    time per worker. ``options`` are the ``paged_rest`` source options.
+
+    Only :class:`RetryPolicy` guards these requests: unlike an executor
+    task, a driver fetch that exhausts its retries is not rerun.
     """
     if cap_bytes <= 0:
         return None
     transport, query, paging = _source_args(options)
-    firsts = [_first_page(transport, a, b, **query) for a, b in windows]
-    estimate = sum(
-        _arrow_rows(list(_source_rows(f.get("results", []), f"{a}_{b}"))).nbytes
-        * min(int(f.get("total_pages", 1)), paging["max_pages"])
-        for (a, b), f in zip(windows, firsts)
-    )
-    if estimate > cap_bytes:
-        return None
-    rows = [
-        row
-        for (a, b), f in zip(windows, firsts)
-        for row in _source_rows(
-            fetch_window(transport, a, b, first=f, **query, **paging), f"{a}_{b}"
-        )
-    ]
-    return _arrow_rows(rows)
+    retry = RetryPolicy()
+    lock, over = threading.Lock(), threading.Event()
+    estimate = 0
+
+    def first_page(window: tuple[str, str]) -> tuple[dict, pa.Table] | None:
+        nonlocal estimate
+        if over.is_set():
+            return None
+        a, b = window
+        page = retry.call(lambda: transport(_window_params(a, b, **query)))
+        head = _arrow_rows(list(_source_rows(page.get("results", []), f"{a}_{b}")))
+        pages = min(int(page.get("total_pages", 1)), paging["max_pages"])
+        with lock:
+            estimate += head.nbytes * pages
+            if estimate > cap_bytes:
+                over.set()
+        return page, head
+
+    def whole_window(window: tuple[str, str], first: tuple[dict, pa.Table]) -> pa.Table:
+        (a, b), (page, head) = window, first
+        records = fetch_window(transport, a, b, first=page, retry=retry, **query, **paging)
+        # page 1's records are already converted (head): convert the rest
+        rest = islice(records, len(page.get("results", [])), None)
+        return pa.concat_tables([head, _arrow_rows(list(_source_rows(rest, f"{a}_{b}")))])
+
+    with ThreadPoolExecutor(max(workers, 1)) as pool:
+        firsts = list(pool.map(first_page, windows))
+        if over.is_set():
+            return None
+        tables = list(pool.map(whole_window, windows, firsts))
+    if not tables:
+        return _arrow_rows([])
+    # one chunk: spark.createDataFrame streams a table batch by batch, and
+    # in Spark 4.1 the rows behind an empty batch that follows a non-empty
+    # one are lost (a window, or a window's tail, may have no rows)
+    return pa.concat_tables(tables).combine_chunks()
 
 
 class _WindowPartition(InputPartition):
