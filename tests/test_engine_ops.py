@@ -69,6 +69,47 @@ def test_minhash_lsh_finds_planted_near_dups(spark):
     assert agree_far == 0
 
 
+def test_candidate_overlap_matches_python_sets(spark):
+    """The per-pair shingle overlap against Python set arithmetic: a pair
+    with disjoint shingle sets drops out, a repeated shingle counts once,
+    and two identical documents overlap in every shingle."""
+    from tmdb_movie_data_pipeline_spark.operators.dedup import (
+        _candidate_overlap,
+        _doc_shingles,
+    )
+
+    texts = {
+        1: "the quick brown fox jumps",
+        2: "lorem ipsum dolor sit amet",  # no shingle shared with 1
+        3: "the quick brown the quick brown",  # "the quick brown" twice
+        4: "The  quick brown fox jumps",  # 1 after normalization
+        5: "quick brown fox",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    pairs = [(1, 2), (1, 3), (1, 4), (3, 4), (2, 5), (4, 5)]
+    cand = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+
+    def shingles(t):
+        toks = t.lower().split()
+        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+    sh = {d: shingles(t) for d, t in texts.items()}
+    assert len(sh[3]) == 3 and sh[1] == sh[4] and not sh[1] & sh[2]
+    expect = {
+        (a, b): (len(sh[a] & sh[b]), len(sh[a]), len(sh[b]))
+        for a, b in pairs
+        if sh[a] & sh[b]
+    }
+    rows = _candidate_overlap(cand, _doc_shingles(docs)).collect()
+    got = {(r.doc_a, r.doc_b): (r.inter, r.n_a, r.n_b) for r in rows}
+    assert got == expect
+    assert {(r.doc_a, r.doc_b): set(r.common) for r in rows} == {
+        p: sh[p[0]] & sh[p[1]] for p in expect
+    }
+    assert (1, 2) not in got and (2, 5) not in got
+    assert got[(1, 4)] == (3, 3, 3)
+
+
 def test_exact_dedup_counts_duplicates(spark):
     from tmdb_movie_data_pipeline_spark.operators.dedup import exact_dedup
 

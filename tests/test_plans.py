@@ -6,10 +6,13 @@ the wrong plan is a 100 TB regression waiting to happen.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tmdb_movie_data_pipeline_spark.io import load_table
 from tmdb_movie_data_pipeline_spark.registry import all_queries
+
+from conftest import physical_nodes
 
 
 import re
@@ -841,14 +844,61 @@ def test_allen_algebra_is_banded_not_nested_loop(spark, sf_dir):
     assert _nodes(plan, "CartesianProduct") == 0
 
 
+#: The exact-overlap verifiers over the staged LSH candidate pairs, with
+#: the Generate (explode) nodes and nested-loop joins each plans. The
+#: estimators' two Generates are minhash_signatures' hash-once shingle
+#: explode, under each of the two signature join sides; the sweep's one
+#: nested loop attaches its broadcast cutoffs. The overlap itself
+#: explodes nothing.
+_SET_VERIFIERS = {
+    "dedup_ngram_jaccard": (0, 0),
+    "dedup_minhash_jaccard_estimate": (2, 0),
+    "dedup_bbit_minhash_estimate": (2, 0),
+    "dedup_threshold_sweep": (2, 1),
+}
+_JOIN_EXECS = {"SortMergeJoinExec", "ShuffledHashJoinExec", "BroadcastHashJoinExec"}
+
+
+def _key_names(keys) -> set[str]:
+    """Names of the attributes a join's key expressions read."""
+    text = " ".join(str(keys.apply(i)) for i in range(keys.size()))
+    return set(re.findall(r"(\w+)#\d+", text))
+
+
+def _assert_pair_keyed(df, generates, nested_loops) -> None:
+    """No join of ``df``'s executed plan is keyed on a document id AND a
+    shingle (the exploded pair probe), none is a cartesian product, and
+    the plan holds ``nested_loops`` nested-loop joins and — unless
+    ``generates`` is None — ``generates`` Generate nodes."""
+    nodes = list(physical_nodes(df))
+    names = [n.getClass().getSimpleName() for n in nodes]
+    for node, name in zip(nodes, names):
+        if name in _JOIN_EXECS:
+            for keys in (node.leftKeys(), node.rightKeys()):
+                got = _key_names(keys)
+                doc_keyed = bool(got & {"doc_id", "doc_a", "doc_b"})
+                assert not (doc_keyed and "shingle" in got), got
+    assert names.count("CartesianProductExec") == 0
+    assert names.count("BroadcastNestedLoopJoinExec") == nested_loops
+    if generates is not None:
+        assert names.count("GenerateExec") == generates
+
+
+@pytest.mark.parametrize("name", sorted(_SET_VERIFIERS))
+def test_set_verifier_stays_pair_keyed(spark, sf_dir, name):
+    """Each exact-overlap verifier intersects per-document shingle arrays
+    per candidate pair: its joins key on document ids, never on a
+    (document, shingle) pair, and only the MinHash signatures explode
+    shingles."""
+    _assert_pair_keyed(_deferred(name)(spark, sf_dir), *_SET_VERIFIERS[name])
+
+
 def test_weighted_jaccard_stays_pair_keyed(spark, sf_dir):
-    """The IDF-weighted verify must keep the r7 skew discipline: the
-    intersection is keyed on the staged candidate pair / (doc, shingle) —
-    no cartesian anywhere, and no join keyed on the bare Zipfian shingle
-    that isn't an equi-probe with per-value cardinality 1."""
-    plan = _plan(_deferred("dedup_weighted_jaccard_pairs")(spark, sf_dir))
-    assert _nodes(plan, "BroadcastNestedLoopJoin") == 0
-    assert _nodes(plan, "CartesianProduct") == 0
+    """The IDF-weighted verify keeps the same discipline: the overlap is
+    per candidate pair, and the only shingle-keyed joins attach the
+    vocabulary-sized weight relation — no cartesian anywhere."""
+    df = _deferred("dedup_weighted_jaccard_pairs")(spark, sf_dir)
+    _assert_pair_keyed(df, generates=None, nested_loops=0)
 
 
 def test_pmi_pair_generation_is_map_side(spark, sf_dir):

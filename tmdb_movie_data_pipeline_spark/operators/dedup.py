@@ -373,18 +373,12 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return toked.select("doc_id", F.expr(f"CAST({bit_terms} AS BIGINT)").alias("simhash"))
 
 
-# Shared candidate-keyed shingle-intersection shape (VERDICT r7 item #1).
-#
-# The r1–r7 verifiers self-equi-joined raw exploded shingles
-# (a.shingle = b.shingle AND a.doc_id < b.doc_id). Shingle document
-# frequency in natural text is Zipfian, so a stop-phrase trigram with df=d
-# contributes O(d²) join rows — a straggler-or-OOM key at 100 TB. The
-# production verify stage instead keys the intersection on the CANDIDATE
-# PAIR: starting from the staged LSH pair list, attach doc_a's shingles
-# (join on doc_id — fan-out bounded by pairs-per-doc × shingles-per-doc),
-# then probe doc_b's shingle set on (doc_b, shingle) — a key whose
-# per-value cardinality is 1, so no skew blowup exists anywhere in the
-# plan. Work is Σ_pairs |A| instead of Σ_shingles df².
+# DuckDB oracle for the candidate-pair verifiers: the staged LSH pair list
+# (`cand`), each document's distinct shingle list (`shingled`, `sizes`),
+# and the exact per-pair intersection (`pair_inter`), counted by joining
+# doc_a's unnested shingles to doc_b's on (doc_id, shingle). It is the
+# independent reference; the Spark side intersects per-document arrays
+# instead (see _candidate_overlap).
 _CAND_INTER_SQL = f"""
     cand AS ({_MINHASH_ORACLE}),
     toked AS (
@@ -404,32 +398,40 @@ _CAND_INTER_SQL = f"""
     )"""
 
 
-def _candidate_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_a, doc_b, inter): exact shingle-intersection size per staged
-    LSH candidate pair — the skew-proof pair-keyed join documented above.
-    Candidate pairs with an empty intersection drop out (inner join), the
-    same closure the oracle's inner joins produce."""
-    docs = load_table(spark, sf_dir, "documents")
-    cand = lsh_pairs_staged(spark, sf_dir)
-    shingled = docs.selectExpr("doc_id", f"{_TOKENS_SPARK} AS toks").selectExpr(
+def _doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh): each document's distinct word-3-gram shingles as one
+    array — the shingle set every set-similarity query starts from."""
+    return docs.selectExpr("doc_id", f"{_TOKENS_SPARK} AS toks").selectExpr(
         "doc_id", f"array_distinct({_SHINGLES_SPARK}) AS sh"
     )
-    exploded = shingled.select("doc_id", F.explode("sh").alias("shingle"))
-    ea = exploded.select(F.col("doc_id").alias("doc_a"), "shingle")
-    eb = exploded.select(F.col("doc_id").alias("doc_b"), "shingle")
+
+
+def _candidate_overlap(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, common, n_a, n_b, inter) per candidate pair: the
+    shingles both documents hold, each side's distinct-shingle count and
+    the size of ``common`` (both BIGINT).
+
+    Each staged pair is joined to ``sh`` (from ``_doc_shingles``) on doc_a
+    and on doc_b, and the overlap is ``array_intersect(sa, sb)`` — a merge
+    of two per-document lists, as string-similarity joins verify a
+    candidate. Both joins key on document ids only, so a Zipfian
+    stop-phrase shingle cannot become a hot key, and no row per shingle
+    is ever shuffled. Pairs with no shingle in common drop out, as they
+    do from the oracle's inner joins."""
+    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sa"))
+    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sb"))
     return (
-        cand.join(ea, "doc_a")
-        .join(eb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("inter"))
-    )
-
-
-def _doc_shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n_sh): distinct word-3-gram shingle count per document."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.selectExpr("doc_id", f"{_TOKENS_SPARK} AS toks").selectExpr(
-        "doc_id", f"CAST(size(array_distinct({_SHINGLES_SPARK})) AS BIGINT) AS n_sh"
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.array_intersect("sa", "sb").alias("common"),
+            F.size("sa").cast("long").alias("n_a"),
+            F.size("sb").cast("long").alias("n_b"),
+        )
+        .withColumn("inter", F.size("common").cast("long"))
+        .filter(F.col("inter") > 0)
     )
 
 
@@ -452,17 +454,14 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on the candidate pair, never on the raw shingle, so a Zipfian
     stop-phrase shingle cannot become a hot join key. The threshold is set
     low enough to produce verifiable rows on the synthetic corpus."""
-    inter = _candidate_intersections(spark, sf_dir)
-    sizes = _doc_shingle_sizes(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
+    ov = _candidate_overlap(lsh_pairs_staged(spark, sf_dir), _doc_shingles(docs))
     # raw int/int IEEE division — bit-equal across engines, no rounding
     jac = F.col("inter").cast("double") / (
-        F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("inter")
+        F.col("n_a") + F.col("n_b") - F.col("inter")
     ).cast("double")
-    return (
-        inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.0375)
+    return ov.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= 0.0375
     )
 
 
@@ -514,25 +513,21 @@ def weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything. All-integer (weights are exact ppm rationals; sums and
     the final division are BIGINT), so the cross-engine hash is exact.
 
-    Shape: identical skew-proof discipline to dedup_ngram_jaccard — the
-    intersection is keyed on the CANDIDATE PAIR (work Σ_pairs |A|, never
-    df²); the shingle-weight relation is vocabulary-sized and joins onto
-    the exploded stream by its natural key (AQE broadcasts it when it
-    fits); per-doc total weights are one partial-aggregable rollup of the
-    same exploded relation. The union weight is computed as
-    w_A + w_B − w_inter, so no union set is ever materialized.
+    Shape: the candidate pairs are verified by _candidate_overlap, as in
+    dedup_ngram_jaccard (joins keyed on document ids only). The
+    shingle-weight relation is vocabulary-sized; it is built from the
+    exploded per-document arrays and joins by its natural key onto them
+    (per-document total weights) and onto each pair's exploded common
+    shingles (the intersection weight). AQE broadcasts it when it fits.
+    The union weight is computed as w_A + w_B − w_inter, so no union set
+    is ever materialized.
     """
     docs = load_table(spark, sf_dir, "documents")
     cand = lsh_pairs_staged(spark, sf_dir)
-    shingled = docs.selectExpr("doc_id", f"{_TOKENS_SPARK} AS toks").selectExpr(
-        "doc_id", f"array_distinct({_SHINGLES_SPARK}) AS sh"
-    )
-    exploded = (
-        shingled.select("doc_id", F.explode("sh").alias("shingle"))
-        # feeds the weight build, the per-doc totals AND both pair-probe
-        # sides: shingle the corpus once, not four times
-        .localCheckpoint(eager=False)
-    )
+    # feeds the weight build, the per-doc totals AND both sides of the
+    # pair overlap: shingle the corpus once, not once per consumer
+    sh = _doc_shingles(docs).localCheckpoint(eager=False)
+    exploded = sh.select("doc_id", F.explode("sh").alias("shingle"))
     n_docs = docs.count()  # scalar dimension; fine to evaluate eagerly
     # fold 1e6*(N+1) in PYTHON: interpolated as `1000000 * (N + 1)` the
     # operands parse as INT literals and ANSI constant folding overflows
@@ -548,11 +543,9 @@ def weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum("w").cast("long").alias("w_doc"))
     )
-    ea = exploded.select(F.col("doc_id").alias("doc_a"), "shingle")
-    eb = exploded.select(F.col("doc_id").alias("doc_b"), "shingle")
     wint = (
-        cand.join(ea, "doc_a")
-        .join(eb, ["doc_b", "shingle"])
+        _candidate_overlap(cand, sh)
+        .select("doc_a", "doc_b", F.explode("common").alias("shingle"))
         .join(wt, "shingle")
         .groupBy("doc_a", "doc_b")
         .agg(
@@ -632,7 +625,8 @@ def bbit_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: identical to the full-width contract query — shared hash-once
     min-agg signatures, map-side {NUM_HASHES}-term bit compare on the
-    candidate-keyed join, pair-keyed exact intersection. All integer ppm.
+    candidate-keyed join, exact intersection from _candidate_overlap.
+    All integer ppm.
     Cites the estimator-vs-truth pattern of sketches.py and reference
     parity of the dedup shelf (grknc/tmdb-movie-data-pipeline has no sketch surface;
     this extends SURVEY.md §2.9's north-star dedup battery).
@@ -652,23 +646,11 @@ def bbit_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col(f"a_{i}") % 2 == F.col(f"b_{i}") % 2, 1).otherwise(0)
         for i in range(NUM_HASHES)
     )
-    inter = _candidate_intersections(spark, sf_dir).withColumnRenamed(
-        "inter", "n_inter"
-    )
-    sizes = _doc_shingle_sizes(spark, sf_dir)
     return (
-        cand.join(sa, "doc_a")
+        _candidate_overlap(cand, _doc_shingles(docs))
+        .join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("n_bit_match", n_match.cast("long"))
-        .join(inter, ["doc_a", "doc_b"])
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("za")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("zb")),
-            "doc_b",
-        )
         .select(
             "doc_a",
             "doc_b",
@@ -679,7 +661,7 @@ def bbit_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("bbit_est_ppm"),
-            F.expr("(1000000 * n_inter) div (za + zb - n_inter)")
+            F.expr("(1000000 * inter) div (n_a + n_b - inter)")
             .cast("long")
             .alias("exact_jaccard_ppm"),
         )
@@ -1219,10 +1201,9 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer ppm, so no IEEE division exists at all.
     """
     docs = load_table(spark, sf_dir, "documents")
-    shingled = docs.selectExpr("doc_id", f"{_TOKENS_SPARK} AS toks").selectExpr(
-        "doc_id", f"array_distinct({_SHINGLES_SPARK}) AS sh"
+    exploded0 = _doc_shingles(docs).select(
+        "doc_id", F.explode("sh").alias("shingle")
     )
-    exploded0 = shingled.select("doc_id", F.explode("sh").alias("shingle"))
     # GroupBy-once pair expansion (r10, replacing the r8 hot-set anti-join
     # + shingle self-join): ONE shuffle groups each shingle's doc list, the
     # df cap becomes a size filter ON that grouped row (no second pass, no
@@ -1331,9 +1312,8 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: signatures come from the shared hash-once min-agg
     (minhash_signatures); the {NUM_HASHES}-column compare is a map-side
     expression on the candidate-keyed join; the exact side is the shared
-    pair-keyed intersection (_candidate_intersections) — no raw-shingle
-    self-join anywhere (VERDICT r7 #1). Nothing touches non-candidate
-    pairs.
+    per-pair array intersection (_candidate_overlap) — no join keyed on a
+    shingle anywhere (VERDICT r7 #1). Nothing touches non-candidate pairs.
     """
     docs = load_table(spark, sf_dir, "documents")
     cand = lsh_pairs_staged(spark, sf_dir)
@@ -1350,23 +1330,11 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0)
         for i in range(NUM_HASHES)
     )
-    inter = _candidate_intersections(spark, sf_dir).withColumnRenamed(
-        "inter", "n_inter"
-    )
-    sizes = _doc_shingle_sizes(spark, sf_dir)
     return (
-        cand.join(sa, "doc_a")
+        _candidate_overlap(cand, _doc_shingles(docs))
+        .join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("n_sig_match", n_match.cast("long"))
-        .join(inter, ["doc_a", "doc_b"])
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("za")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("zb")),
-            "doc_b",
-        )
         .select(
             "doc_a",
             "doc_b",
@@ -1374,7 +1342,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"(1000000 * n_sig_match) div {NUM_HASHES}").alias(
                 "est_jaccard_ppm"
             ),
-            F.expr("(1000000 * n_inter) div (za + zb - n_inter)").alias(
+            F.expr("(1000000 * inter) div (n_a + n_b - inter)").alias(
                 "exact_jaccard_ppm"
             ),
         )
@@ -1442,7 +1410,8 @@ def chunk_dupshare(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the chunk-frequency build and the per-doc join both consume this
         # relation: tokenize + chunk-explode once per action, not twice
-        # (zero runtime exchange reuse — r21 survey; narrow chunk rows).
+        # (zero runtime exchange reuse — r21 survey). One row per
+        # 8-word chunk: corpus-scale, not bounded.
         .localCheckpoint(eager=False)
     )
     df_counts = chunked.groupBy("chunk").agg(
@@ -1520,8 +1489,8 @@ def threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     operating point.
 
     Shape: one pass over the staged estimator-vs-truth pair relation
-    (dedup_minhash_jaccard_estimate's output — signatures and pair-keyed
-    intersections, never raw-shingle self-joins), a ×{len(_SWEEP_TAUS)}
+    (dedup_minhash_jaccard_estimate's output — signatures and per-pair
+    array intersections, never a join keyed on a shingle), a ×{len(_SWEEP_TAUS)}
     constant fan-out, and a |τ|-row conditional aggregate.
     """
     est = minhash_jaccard_estimate(spark, sf_dir)

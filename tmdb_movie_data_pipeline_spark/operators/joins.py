@@ -625,8 +625,8 @@ def interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # both sides of the band self-join consume this relation, and
         # executed plans get zero runtime exchange reuse (r21 survey) — so
         # the sessionize windows + groupBy + explode ran TWICE per action.
-        # Session-interval-scale metadata (5 narrow columns), the same
-        # bounded class as the r21 banded-sketch checkpoints.
+        # One row per (session, hour band) it spans: 5 narrow columns, but
+        # corpus-scale — it grows with the events table, not bounded.
     ).localCheckpoint(eager=False)
     a = banded.filter(F.col("user_id") % 2 == 0).select(
         F.col("user_id").alias("a_user"),
@@ -760,7 +760,8 @@ def allen_interval_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         # same band-self-join shape as join_interval_overlap above: the
         # sessionize+groupBy+explode subtree fed BOTH join sides and
-        # executed twice per action; one bounded checkpoint halves it.
+        # executed twice per action; one checkpoint halves it. One row per
+        # (session, hour band): grows with the events table.
     ).localCheckpoint(eager=False)
     a = banded.filter(F.col("user_id") % 2 == 0).select(
         F.col("user_id").alias("a_user"),

@@ -61,7 +61,7 @@ def prepare_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-operator oracles already pin down (quality predicate, md5 dedup,
 # minhash bands — see text.py / dedup.py for the shared fragments)
 from .dedup import _MINHASH_ORACLE  # noqa: E402
-from .dedup import _SHINGLES_SPARK, _SHINGLES_SQL, _TOKENS_SPARK  # noqa: E402
+from .dedup import _SHINGLES_SQL, _doc_shingles  # noqa: E402
 from .text import _NORM_SQL, _TOKENS_SQL  # noqa: E402
 
 _QUALITY_PRED = f"""
@@ -750,10 +750,7 @@ def shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    shingled = docs.selectExpr("doc_id", f"{_TOKENS_SPARK} AS toks").selectExpr(
-        "doc_id", f"array_distinct({_SHINGLES_SPARK}) AS sh"
-    )
-    exploded = shingled.select("doc_id", F.explode("sh").alias("shingle"))
+    exploded = _doc_shingles(docs).select("doc_id", F.explode("sh").alias("shingle"))
     owner = exploded.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     joined = exploded.join(owner, "shingle")
     novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)

@@ -244,115 +244,16 @@ RECONFIRM_STRIDE = 30
 #: (buckets 1+2), never less than zero.
 DRIVER_CAP_FLOOR = 45
 
-#: Per-round ACTUAL bucket-3 stride, recorded when a round's registration
-#: surface is final (maintained per round like ``_CHANGED_THIS_ROUND``,
-#: pinned by tests/test_registry_rotation.py::test_round_strides_recorded).
-#: VERDICT r9 #8: a fixed 30-stride both OVERSHOOTS rounds whose head
-#: block eats most of the cap (names in the skipped gap silently miss
-#: their re-confirmation window) and UNDERSHOOTS empty-bucket rounds
-#: (which could re-confirm ~45, not 30). The recorded value is
-#: ``max(0, DRIVER_CAP_FLOOR - |bucket1| - |bucket2|)`` — exactly the
-#: bucket-3 coverage the driver's budget provably reaches that round —
-#: and the cumulative shift advances by it, so consecutive windows TILE
-#: the cycle with no gaps and no reliance on unverified slots.
-#: r10: 44 never-verified + 1 changed = head 45 → stride 0 (the round's
-#: driver budget is spent on first-time coverage; rotation resumes r11).
-#: r11: the full 37-query r10 deferred queue activated (VERDICT r10 #2's
-#: hard bar: >=37 first-time rows), 0 changed → stride 8. The stride-
-#: vs-activation trade (VERDICT #3 asked >=10 OR a justified decision):
-#: 37 + 10 > 45, so full activation wins and r11 registers ZERO net-new
-#: active queries — r12's head is just its own activations, letting the
-#: r12 stride rebound to ~30+ (projected full-recycle math in NOTES_r11).
-#: r12: the full 25-query r11 deferred queue activated (VERDICT r11 #1),
-#: 0 changed → head 25, stride 20 — exactly the NOTES_r11 #3 projection.
-#: Per the committed taper (VERDICT r11 #2), r12 registers ≤10 net-new
-#: queries so r13's head stays small and strides rebound to 35+; updated
-#: recycle arithmetic in NOTES_r12.
-#: r13: the 4-query r12 deferred queue activated (VERDICT r12 #3: CUPED,
-#: Cochran–Armitage, Page's L, DSIR), 0 changed → head 4, stride 41 —
-#: exactly the NOTES_r12 #2 projection, recorded BEFORE the driver runs
-#: per VERDICT r12 #2. Recycle arithmetic restated in NOTES_r13.
-#: r14: the 2-query r13 deferred queue activated (VERDICT r13 #1:
-#: Good–Turing missing mass, Wald SPRT) = bucket 1, PLUS the DSIR
-#: exchange-reuse rewrite on the changed list (VERDICT r13 #5) = bucket 2
-#: → head 2 + 1 = 3, stride 45 − 3 = 42. NOTE: VERDICT r13 #2 projected
-#: 43 from head 2, but that arithmetic predates its own mandate #5
-#: putting llm_dsir_importance_weights on the changed list; the ledger
-#: records the CI-enforced cap arithmetic (head 3), recorded BEFORE the
-#: driver runs.
-#: r15: the 1-query r14 deferred queue activated (VERDICT r14 #1:
-#: graph_hits_bipartite) = bucket 1, PLUS the CDC write-time change-feed
-#: rewrite on the changed list (VERDICT r14 #5: delta_cdc_feed_commits)
-#: = bucket 2 → head 1 + 1 = 2, stride 45 − 2 = 43, recorded BEFORE the
-#: driver runs. VERDICT r14 #1 projected 44 "if the changed list stays
-#: empty"; its own mandate #5 rewrites the CDC feed, so the list is not
-#: empty — same interaction as r14, the cap arithmetic wins.
-#: r16: the 1-query r15 deferred queue activated (VERDICT r15 #1:
-#: spatial_dbscan_clusters) = bucket 1, PLUS the CDF null-safety fix
-#: (ADVICE r15 #3) putting delta_cdc_feed_commits on the changed list
-#: = bucket 2 → head 1 + 1 = 2, stride 45 − 2 = 43, recorded BEFORE the
-#: driver runs. VERDICT r15 #1 projected 44 "if the changed list stays
-#: empty"; the ADVICE null-safety mandate changes the query's oracle SQL,
-#: so the list is not empty — the same mandate-interaction as r14/r15,
-#: the cap arithmetic wins.
-#: r17: the 1-query r16 deferred queue activated (VERDICT r16 #1:
-#: ann_filtered_topk) = bucket 1, and the changed list stays EMPTY this
-#: round (see the r17 note on _CHANGED_THIS_ROUND: all three ADVICE fixes
-#: are bench-policy / driver-side-metadata / never-verified-oracle-text —
-#: none touches what the driver compares for a verified name) → head 1,
-#: stride 45 − 1 = 44, recorded BEFORE the driver runs. This matches
-#: VERDICT r16 #1's projection ("44 if the changed list stays empty") —
-#: the first round since r13 where the projection and the cap arithmetic
-#: agree, because no mandate rewrote a verified query.
-#: r18: the 2-query r17 deferred queue activated (VERDICT r17 #1:
-#: ann_ivf_filtered_topk, ann_filtered_probe_sweep) = bucket 1, and the
-#: changed list stays EMPTY (see the r18 note on _CHANGED_THIS_ROUND:
-#: ADVICE #1 is a plan-preserving factoring md5-pinned byte-identical for
-#: the verified sweep, ADVICE #2 is docstring prose) → head 2, stride
-#: 45 − 2 = 43, recorded BEFORE the driver runs. This matches VERDICT
-#: r17 #1's projection ("43 if the changed list stays empty") — the
-#: second consecutive round where the projection and the cap arithmetic
-#: agree.
-#: r19: the 1-query r18 deferred queue activated (VERDICT r18 #1:
-#: stream_ivf_index_append) = bucket 1, and the changed list stays EMPTY
-#: (see the r19 note on _CHANGED_THIS_ROUND: the ADVICE r18 #1
-#: exactly-once fix rewrites the SAME never-verified query's sink, and
-#: the fired-watch-rule resolution is profiling + a NOTES rule amendment
-#: — no verified plan changes) → head 1, stride 45 − 1 = 44, recorded
-#: BEFORE the driver runs. This matches VERDICT r18 #1's projection
-#: ("44 if the changed list stays empty") — the third consecutive round
-#: where the projection and the cap arithmetic agree.
-#: r20 (FINAL round): the 1-query r19 deferred queue activated (VERDICT
-#: r19 #1: stream_ivf_index_filtered_probe) = bucket 1, and the changed
-#: list stays EMPTY (see the r20 note on _CHANGED_THIS_ROUND: the ADVICE
-#: r19 items touch only the two never-verified-or-r19-fresh stream_ivf_*
-#: builders' Python plumbing and a test; the r19-verified
-#: stream_ivf_index_append plan is md5-pinned unchanged) → head 1,
-#: stride 45 − 1 = 44, recorded BEFORE the driver runs. This matches
-#: VERDICT r19 #1's projection ("44 if the changed list stays empty") —
-#: the fourth consecutive round where the projection and the cap
-#: arithmetic agree. Final shape: 454 active / 0 deferred.
-#: KEEP IN SYNC when activating queries — test_round_strides_recorded_and_
-#: continuous recomputes the arithmetic against the live registry.
-#: r21 (OPTIMIZATION round 1): zero activations (registry final at 454
-#: since r20) and 32 plan-rewritten names on the changed list (bucket 2;
-#: 23 from session 1 + nine duplicated-subtree removals from session 2:
-#: sketch_quantile_histogram, agg_rfm_segmentation,
-#: dedup_containment_pairs, dedup_simhash_pairs, dedup_minhash_lsh,
-#: multimodal_dhash_pairs, text_tfidf_top_terms,
-#: llm_dsir_importance_weights, events_cohort_ltv) → head 0 + 32 = 32,
-#: stride 45 − 32 = 13, recorded BEFORE the driver runs per the r12+
-#: protocol.
-#: r22 (OPTIMIZATION round 2): zero activations and 34 plan-rewritten
-#: names on the changed list — and THREE of the round's head slots are
-#: bucket-1 re-entries, not changes: the r21 driver run's DuckDB oracle
-#: OOM'd (host memory pressure, err rows) on ann_filtered_probe_sweep,
-#: dedup_minhash_lsh and multimodal_dhash_pairs, so their latest rows are
-#: non-green and _driver_verified_names() re-prioritizes them
-#: automatically (ann_filtered_probe_sweep is also on the changed list and
-#: lands in bucket 1, not bucket 2). Head = 3 never/non-green + 33
-#: verified-changed = 36, stride 45 − 36 = 9, recorded BEFORE the driver
-#: runs per the r12+ protocol.
+#: Per-round bucket-3 stride, one entry per round from ``_DYNAMIC_BASE``
+#: on. The rule: ``stride = max(0, DRIVER_CAP_FLOOR - |head|)``, where the
+#: head is buckets 1 + 2 (never-verified or non-green names, plus verified
+#: names whose plan changed that round). Each value is written when the
+#: round's registration surface is final, before that round is verified.
+#: The cumulative shift advances by exactly that stride, so consecutive
+#: windows tile the cycle: no gaps, and no reliance on slots the per-round
+#: verification budget may not reach. KEEP IN SYNC when a round's head
+#: changes — tests/test_registry_rotation.py::test_round_strides_recorded_
+#: and_continuous recomputes the arithmetic against the live registry.
 _ROUND_STRIDES: dict[int, int] = {
     10: 0, 11: 8, 12: 20, 13: 41, 14: 42, 15: 43, 16: 43, 17: 44,
     18: 43, 19: 44, 20: 44, 21: 13, 22: 9,
