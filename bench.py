@@ -283,30 +283,6 @@ REBUILD_PER_RUN = {
     "spatial_dbscan_clusters",
 }
 
-#: Perf watch rules, AMENDED r19 (VERDICT r18 #2 — the mandated
-#: resolution, option B, chosen WITH the supporting profile in
-#: NOTES_r19.md). The r17 rule was a RAW 1.3× threshold over the r16
-#: driver reads; it fired twice consecutively (r17, r18) on BOTH names
-#: while the code and plans were untouched and isolated min-of-5 stayed
-#: flat — every trip disappears once the reads are box-normalized by the
-#: fixed-plan calibration probe, and the r19 stage-level profile
-#: (.claude/profile_r19.py) shows both queries AT or BELOW their r16
-#: baselines in isolated min-of-5 (0.994 s vs 0.99; 1.412 s vs 1.472) on
-#: a 1.07× slower box. Amended rule: a watched name trips only when
-#: (read / baseline_sec) / (calibration_sec_pre / baseline_cal) > 1.3 —
-#: i.e. the raw ratio divided by the box ratio. Baselines stay at the
-#: r16 driver reads @ r16 calibration (NOT re-baselined upward at the
-#: elevated r18 reads — the stricter of VERDICT's two offered variants).
-#: Every bench run now evaluates the rule mechanically into its detail
-#: file ("watch_rules"), so driver reads self-report their normalized
-#: ratio and fired status.
-WATCH_RULES: dict[str, tuple[float, float]] = {
-    # name: (baseline_sec = r16 driver read, baseline_cal = r16 cal_pre)
-    "ann_ivfpq_topk": (0.99, 0.1937),
-    "dedup_simhash_pairs": (1.472, 0.1937),
-}
-WATCH_THRESHOLD = 1.3
-
 #: timed executions per query; reported number is the min (run 1 pays
 #: whole-stage-codegen JIT, later runs are the resident-pipeline steady
 #: state). 3 rather than 2 because cross-round driver benches have shown
@@ -379,17 +355,21 @@ def main() -> None:
     sf = sf_dir.rstrip("/").split("sf")[-1]
     # bench runs alone on the box: keep the larger heap and the FULL idle
     # Python-worker pool (the 6g heap / 8-worker cap session defaults are
-    # driver-verify coexistence settings — VERDICT r8 #5 / r9 #3). With the
+    # settings for a box shared with the verification oracle). With the
     # cap, every mapInPandas stage after the first pays ~cores-8 worker
     # re-forks + pandas re-imports: A/B'd at 1.7x on
     # multimodal_cdc_chunk_dedup, 1.5x on chunk_store_gc (NOTES_r10).
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-    os.environ.setdefault(
-        "SPARK_GRAFT_PY_IDLE_WORKERS", cpus if cpus.isdigit() else "32"
+    spark = get_spark(
+        app_name="bench",
+        extra_conf={
+            "spark.driver.memory": "8g",
+            "spark.python.factory.idleWorkerMaxPoolSize": (
+                cpus if cpus.isdigit() else "32"
+            ),
+            "spark.python.worker.killOnIdleTimeout": "false",
+        },
     )
-    os.environ.setdefault("SPARK_GRAFT_PY_KILL_IDLE", "false")
-    spark = get_spark(app_name="bench")
 
     copy_dir = make_parallel_copy(spark, sf_dir)  # also warms JVM + footers
     try:
@@ -537,25 +517,6 @@ def main() -> None:
             # before reading it as a regression.
             "calibration_sec_pre": cal_pre,
             "calibration_sec_post": cal_post,
-            # mechanical evaluation of the r19-amended perf watch rule
-            # (see WATCH_RULES): normalized_ratio = raw_ratio / box_ratio
-            "watch_rules": {
-                name: {
-                    "sec": timings[name],
-                    "baseline_sec": base_sec,
-                    "baseline_cal": base_cal,
-                    "raw_ratio": round(timings[name] / base_sec, 3),
-                    "box_ratio": round(cal_pre / base_cal, 3),
-                    "normalized_ratio": round(
-                        (timings[name] / base_sec) / (cal_pre / base_cal), 3
-                    ),
-                    "threshold": WATCH_THRESHOLD,
-                    "fired": (timings[name] / base_sec) / (cal_pre / base_cal)
-                    > WATCH_THRESHOLD,
-                }
-                for name, (base_sec, base_cal) in WATCH_RULES.items()
-                if name in timings
-            },
         }
         tag = os.environ.get("SPARK_GRAFT_BENCH_TAG")
         detail_name = (

@@ -151,3 +151,37 @@ def test_catalog_reconfirm_debt_internally_consistent():
         for r in sorted(set(stale.values()))
     }
     assert sum(debt["stale_by_last_green_round"].values()) == len(stale)
+
+
+def test_engine_reads_only_deployment_env_vars():
+    """The engine's plan choices come from the session, not from the
+    environment: the only ``SPARK_GRAFT_*`` variables the package reads
+    are the core count and the test-data directory. Any other read is the
+    CLI's reference-parity defaults (``DATE_FROM``, ``DATE_TO``,
+    ``LANGUAGE`` and the bearer variable its ``--bearer-env`` flag names),
+    and only ``__main__.py`` may make it."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "tmdb_movie_data_pipeline_spark"
+    reads: set[tuple[str, str | None]] = set()
+    for path in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Subscript):
+                read, key = node.value, node.slice
+            elif isinstance(node, ast.Call) and node.args:
+                read, key = node.func, node.args[0]
+            else:
+                continue
+            if ast.unparse(read) in ("os.environ", "os.environ.get", "os.getenv"):
+                name = key.value if isinstance(key, ast.Constant) else None
+                reads.add((path.name, name))
+    engine = {name for _, name in reads if name and name.startswith("SPARK_GRAFT_")}
+    assert engine == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR"}
+    other = {(f, name) for f, name in reads if name not in engine}
+    assert other == {
+        ("__main__.py", "DATE_FROM"),
+        ("__main__.py", "DATE_TO"),
+        ("__main__.py", "LANGUAGE"),
+        ("__main__.py", None),
+    }

@@ -14,11 +14,14 @@ hooking with pointer jumping — no further Spark job. A graph over the
 cap, or any graph when the threshold is ≤ 0, runs the distributed
 hash-to-min loop: each round is an |E|-sized equi-join plus a
 groupBy(min), localCheckpoint'ed so lineage stays flat, with a label-sum
-convergence check. Inside that loop the per-vertex label relation
-carries a broadcast hint while the edge count is under
-:func:`_vector_broadcast_cap`; above it (the 100 TB regime) every join
-is a shuffle join. Rounds needed are logarithmic in the component
-diameter, and no round is an all-pairs product.
+convergence check. The loop carries no broadcast hint (it only runs
+for a graph already over the threshold), so Spark's planner picks each
+join strategy. Rounds needed are logarithmic in the component diameter,
+and no round is an all-pairs product.
+
+The same threshold is the one broadcast gate of the other distributed
+kernels here: HITS and the DBSCAN assembly hint a broadcast only while
+rows × row width fits ``session.driver_collect_bytes``.
 
 The DuckDB oracle computes the identical fixpoint with WITH RECURSIVE
 transitive closure (exact on the small correctness SFs).
@@ -53,28 +56,8 @@ _MAX_ROUNDS = 50
 #: driver-side bytes per collected edge: one (long, long) pair
 _EDGE_BYTES = 16
 
-
-def _vector_broadcast_cap() -> int:
-    """Row cap under which a per-vertex relation (labels, score vectors,
-    core sets) may carry a broadcast hint inside a distributed iterative
-    kernel: the connected-components loop (graphs over the driver-path
-    cap), the HITS scores and the DBSCAN assembly joins. The local default
-    covers every fixture scale; a 100 TB deployment with billion-vertex
-    label vectors sets ``SPARK_GRAFT_VECTOR_BROADCAST_ROWS`` low (or 0)
-    and the same joins fall back to shuffle plans. The gating count is
-    taken from an already-checkpointed relation, so the decision costs one
-    in-memory scan, never a recompute."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_VECTOR_BROADCAST_ROWS", 50_000_000))
-
-
-def _driver_edge_cap(spark: SparkSession) -> int:
-    """Most edges :func:`connected_components` labels on the driver:
-    :func:`driver_collect_bytes` read as (long, long) edges —
-    4,194,304 at the engine's 64 MiB, 655,360 at Spark's default 10 MiB. A
-    threshold ≤ 0 (broadcasts off) turns the driver path off too."""
-    return driver_collect_bytes(spark) // _EDGE_BYTES
+#: bytes per HITS score-vector row: one (long, DECIMAL(38,0)) pair
+_SCORE_BYTES = 24
 
 
 def _min_roots(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -138,7 +121,9 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     (callers union them in if needed).
 
     Which path runs: with integral ids, the edge list is first collected
-    to the driver in ONE job, capped at :func:`_driver_edge_cap` + 1 rows.
+    to the driver in ONE job, capped at cap + 1 rows, where the cap is
+    :func:`driver_collect_bytes` read as 16-byte (long, long) edges:
+    4,194,304 at the engine's 64 MiB, 655,360 at Spark's default 10 MiB.
     At or under the cap the components are labelled in numpy
     (:func:`_label_on_driver`) and returned as a local relation; no other
     Spark job runs and nothing stays cached. Over the cap the collected
@@ -160,13 +145,12 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     any init ≥ the true min that names a reachable vertex): (1) labels
     initialize to min(v, min neighbor) via ONE groupBy on the checkpointed
     edge list — a free half-step that replaces the identity-labels
-    checkpoint; (2) every in-loop join carries a broadcast hint on its
-    |V|-bounded side while the checkpointed edge count is ≤
-    :func:`_vector_broadcast_cap` — no round then shuffles the edge
-    relation; over it (the 100 TB regime) every round is a shuffle join.
+    checkpoint; (2) no in-loop join carries a broadcast hint: the loop
+    runs only when the edges are over the driver cap or broadcasts are
+    off, so Spark's planner, AQE included, picks each join strategy.
     """
     spark = edges.sparkSession
-    cap = _driver_edge_cap(spark)
+    cap = driver_collect_bytes(spark) // _EDGE_BYTES
     pair = edges.select(F.col(src).alias("u"), F.col(dst).alias("w"))
     if cap > 0 and all(isinstance(f.dataType, IntegralType) for f in pair.schema):
         collected = pair.limit(cap + 1).toArrow()
@@ -178,11 +162,6 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
         .distinct()
         .localCheckpoint(eager=True)
     )
-    bcast = sym.count() <= _vector_broadcast_cap()  # |labels| ≤ |sym|
-
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if bcast else df
-
     labels = (
         sym.groupBy("u")
         .agg(F.min("w").alias("_mw"))
@@ -194,7 +173,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     for _ in range(_MAX_ROUNDS):
         # neighbor labels: for edge (u, w), u can adopt w's current label
         nbr = sym.join(
-            _b(labels.select(F.col("v").alias("w"), F.col("comp"))), "w"
+            labels.select(F.col("v").alias("w"), F.col("comp")), "w"
         ).select(F.col("u").alias("v"), "comp")
         folded = labels.union(nbr).groupBy("v").agg(F.min("comp").alias("comp"))
         # hash-to-min: push the new min to the OLD root as well, so when two
@@ -202,14 +181,14 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
         # round instead of migrating one edge per round
         to_root = (
             folded.alias("f")
-            .join(_b(labels.alias("o")), "v")
+            .join(labels.alias("o"), "v")
             .select(F.col("o.comp").alias("v"), F.col("f.comp").alias("comp"))
         )
         merged = folded.union(to_root).groupBy("v").agg(F.min("comp").alias("comp"))
         # one flattening hop keeps pointer depth ~1 for the next round
         hop = merged.select(F.col("v").alias("comp"), F.col("comp").alias("comp2"))
         labels = (
-            merged.join(_b(hop), "comp", "left")
+            merged.join(hop, "comp", "left")
             .select(
                 "v", F.least(F.col("comp"), F.coalesce("comp2", "comp")).alias("comp")
             )
@@ -1444,20 +1423,18 @@ def hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = e.select("c").distinct().select(
         "c", F.lit(_HITS_SCALE).cast("decimal(38,0)").alias("s")
     )
-    # r21 loop restructure (guide §2.4/§3.1, A/B'd in .claude/ab_hits_r21.py —
-    # 6.995 s → 4.663 s min-of-3 interleaved, identical result rows asserted):
+    # Loop shape (either choice gives the same rows):
     # (1) checkpoint the RAW half-round aggregate (|P|-/|C|-bounded), not the
     #     normalized vector — the normalization total and the normalized
     #     vector both become ~|vector|-row scans of the materialized
     #     partials instead of re-executing the |E| join subtree;
-    # (2) broadcast the score-vector side of each |E| equi-join, so the edge
-    #     relation is never shuffled inside the loop. The hint is gated on a
-    #     row-count bound (score vectors are ≤ |E| rows, e is checkpointed so
-    #     the count is free) against a parameterised cap — at 100 TB a
-    #     billion-row vector exceeds the cap and the plan falls back to the
-    #     shuffle join the r20 shape always used; locally every half-round
-    #     drops its exchange of the 600 k-edge relation.
-    bcast = e.count() <= _vector_broadcast_cap()  # |h|,|a| ≤ |e|: conservative
+    # (2) broadcast the score-vector side of each |E| equi-join while |e|
+    #     score rows fit the session's broadcast threshold (a vector has at
+    #     most |e| rows; e is checkpointed, so the count is one in-memory
+    #     scan), so the edge relation is not shuffled inside the loop. Over
+    #     the threshold, or with it ≤ 0, Spark's planner picks the joins.
+    cap = driver_collect_bytes(spark)
+    bcast = cap > 0 and e.count() * _SCORE_BYTES <= cap
     a = None
     for _ in range(_HITS_ITERS):
         ar = e.join(F.broadcast(h) if bcast else h, "c").groupBy("p").agg(

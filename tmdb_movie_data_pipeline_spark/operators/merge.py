@@ -863,39 +863,24 @@ def multi_table_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The two tier CREATEs are independent jobs over disjoint table roots —
     # submit both from driver threads (guide §2.6) so the cold tier's scan
     # back-fills executors idling in the hot tier's task tail; each create's
-    # plan, staged files, and manifest are identical to sequential
-    # submission (r21 session 2 measured them at ~0.4 s + ~0.4 s back to
-    # back). SPARK_GRAFT_CONCURRENT_COMMIT_JOBS=false restores sequential.
+    # plan, staged files, and manifest are those of sequential submission
+    # (the two took ~0.4 s + ~0.4 s back to back).
     from concurrent.futures import ThreadPoolExecutor
 
-    from ..plans.acid import _overlap_commit_jobs
-
-    if _overlap_commit_jobs():
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            hot_fut = ex.submit(
-                TxTable.create,
-                spark,
-                os.path.join(root, "hot"),
-                base.filter(F.col("o_orderpriority") == "1-URGENT"),
-            )
-            cold_fut = ex.submit(
-                TxTable.create,
-                spark,
-                os.path.join(root, "cold"),
-                base.filter(F.col("o_orderpriority") != "1-URGENT"),
-            )
-            hot, cold = hot_fut.result(), cold_fut.result()
-    else:
-        hot = TxTable.create(
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        hot_fut = ex.submit(
+            TxTable.create,
             spark,
             os.path.join(root, "hot"),
             base.filter(F.col("o_orderpriority") == "1-URGENT"),
         )
-        cold = TxTable.create(
+        cold_fut = ex.submit(
+            TxTable.create,
             spark,
             os.path.join(root, "cold"),
             base.filter(F.col("o_orderpriority") != "1-URGENT"),
         )
+        hot, cold = hot_fut.result(), cold_fut.result()
     group = TxGroup(spark, root)
     moved_pred = F.col("o_orderkey") % _MTX_MOVE_MOD == 0
     cold_now = group.read(cold)

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window as W
 
 from ..io import load_table
 from ..registry import register
+from ..session import driver_collect_bytes
 
 __all__ = ["grid_points", "grid_distance_self_join"]
 
@@ -286,17 +287,19 @@ def dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     points — every point reads noise); structure appears from sf0.01 up —
     both branches are oracle-checked and reference-tested.
     """
-    from .graph import _vector_broadcast_cap, connected_components
+    from .graph import _EDGE_BYTES, connected_components
 
     pts = grid_points(load_table(spark, sf_dir, "customer"))
     pairs = grid_distance_self_join(pts).localCheckpoint(eager=True)
-    # r21 (guide §3.1): every assembly join's small side is |pairs|-bounded
-    # (core set, component labels, labeled keys), so a single gate on the
-    # checkpointed pair count lets all of them carry a broadcast hint —
-    # under the cap the pair/point relations are never shuffled in the
-    # assembly; over it (100 TB) every join falls back to the r20 shuffle
-    # plan. The count is free (pairs is already materialized).
-    bcast = pairs.count() <= _vector_broadcast_cap()
+    # Every assembly join's small side (core set, component labels,
+    # labeled keys) is a key set bounded by |pairs|, so one gate decides
+    # all their broadcast hints: |pairs| (long, long) rows against the
+    # session's broadcast threshold. Under it the pair and point relations
+    # are never shuffled in the assembly; over it, or with the threshold
+    # ≤ 0, Spark's planner picks each join. The count is one scan of the
+    # checkpointed pairs.
+    cap = driver_collect_bytes(spark)
+    bcast = cap > 0 and pairs.count() * _EDGE_BYTES <= cap
 
     def _b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df

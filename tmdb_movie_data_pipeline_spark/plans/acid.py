@@ -71,41 +71,19 @@ def _manifest_name(version: int) -> str:
 
 
 def _optimized_write(df: "DataFrame") -> "DataFrame":
-    """Delta-style optimized write (guide §6 small-files; r21): a REBALANCE
-    hint ahead of the stage write lets AQE size the output partitions to the
+    """Delta-style optimized write against small files: a REBALANCE hint
+    ahead of the stage write lets AQE size the output partitions to the
     advisory target, so a MERGE/DELETE rewrite lands as few right-sized
     files instead of one near-empty file per upstream task (the benched
     merge's anti-join ∪ source union produced 48 files of ~15 k total rows
     — 48 task commits + 48 footers every downstream read then pays).
-    Applied ONLY to the merge/delete rewrite relations — never to
+    Applied ONLY to the merge/delete/group rewrite relations — never to
     CREATE/OPTIMIZE paths, whose callers may pass an explicit layout
-    (range-clustered creates must keep their per-file key locality).
-    Parameterised: SPARK_GRAFT_OPTIMIZED_WRITES=false restores the r20
-    behavior; at 100 TB the hint stays correct (the rebalance shuffle
-    carries only the touched-file rewrite, the same price Delta's
-    optimizeWrite pays for the same reason)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_OPTIMIZED_WRITES", "true").lower() == "false":
-        return df
+    (range-clustered creates must keep their per-file key locality). At
+    100 TB the hint stays correct: the rebalance shuffle carries only the
+    touched-file rewrite, the same price Delta's optimizeWrite pays for
+    the same reason."""
     return df.hint("rebalance")
-
-
-def _overlap_commit_jobs() -> bool:
-    """Whether independent Spark jobs inside one logical commit (the data
-    rewrite and its CDF change-file sidecar; a group's member prepares) may
-    run CONCURRENTLY from driver threads (guide §2.6: Spark's scheduler
-    happily runs several jobs at once — actions are only sequential because
-    driver code calls them sequentially; the second job's tasks back-fill
-    executors the first job's tail leaves idle). Pure scheduling overlap:
-    every job's plan, its output files, and the published manifest are
-    byte-identical either way — only wall-clock changes. Parameterised:
-    SPARK_GRAFT_CONCURRENT_COMMIT_JOBS=false restores strictly sequential
-    job submission (and is how the A/B in OPTIMIZATION_r21.md was run)."""
-    return (
-        os.environ.get("SPARK_GRAFT_CONCURRENT_COMMIT_JOBS", "true").lower()
-        != "false"
-    )
 
 
 class TxTable:
@@ -386,7 +364,9 @@ class TxTable:
         """Stage ``df``, then publish a manifest holding the staged files
         plus any ``carry`` files referenced (not rewritten) from a previous
         version. When ``stats_key`` is set, each staged file gets footer
-        min/max stats for that column, enabling file-pruned MERGE.
+        min/max stats for that column, enabling file-pruned MERGE. When
+        ``changes`` is given, its change-feed sidecar is staged on a
+        one-thread pool while ``df`` stages, and the manifest lists both.
 
         Pending-slot refusal is enforced HERE, at the one choke point
         every write path shares (create/merge/delete/optimize/
@@ -402,13 +382,13 @@ class TxTable:
         # Stage the CDF sidecar CONCURRENTLY with the data rewrite when both
         # exist (guide §2.6): the two writes are independent jobs over
         # disjoint output dirs, and sequential submission left the cluster
-        # idle through each one's task tail (measured r21 session 2: the
-        # benched merge's 1.4 s data stage + 1.0 s changes stage ran back to
-        # back). The staged files, manifest content, and commit point are
-        # identical either way — only the submission overlaps.
+        # idle through each one's task tail (the benched merge's 1.4 s data
+        # stage + 1.0 s changes stage ran back to back). The staged files,
+        # manifest content, and commit point are those of sequential
+        # submission — only the jobs overlap.
         changes_fut = None
         pool = None
-        if changes is not None and _overlap_commit_jobs():
+        if changes is not None:
             from concurrent.futures import ThreadPoolExecutor
 
             pool = ThreadPoolExecutor(max_workers=1)
@@ -456,11 +436,7 @@ class TxTable:
                 # entries. Presence of the "changes" key (even as []) means
                 # "recorded at write time"; absence means a reader must fall
                 # back to diffing adjacent snapshots for this commit.
-                manifest["changes"] = (
-                    changes_fut.result()
-                    if changes_fut is not None
-                    else self._stage(changes, version, "-changes")
-                )
+                manifest["changes"] = changes_fut.result()
         finally:
             # drain the sidecar writer on EVERY exit (a failure anywhere
             # above must not leave its job racing a caller's cleanup)

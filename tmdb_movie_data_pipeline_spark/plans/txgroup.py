@@ -90,14 +90,13 @@ class TxGroup:
         block transactional writers and pin their staged files forever."""
         gid = uuid.uuid4().hex
         record = self._record_path(gid)
-        from .acid import _overlap_commit_jobs, _optimized_write
+        from .acid import _optimized_write
 
         def _prepare_member(table: TxTable, df: DataFrame) -> None:
             v = table.latest_version() + 1
             table._commit(  # noqa: SLF001 — coordinator is pkg-internal
                 # group updates are rewrites like MERGE/DELETE: size the
                 # staged files via the same optimized-write rebalance
-                # (guide §6; SPARK_GRAFT_OPTIMIZED_WRITES=false opts out)
                 _optimized_write(df),
                 v,
                 op,
@@ -111,22 +110,18 @@ class TxGroup:
         # TxTable._commit's refusal note), so their prepares are independent
         # Spark jobs over disjoint logs/data dirs — submit them from driver
         # threads so the second member's stage back-fills the executors the
-        # first one's task tail leaves idle (guide §2.6; r21 session 2
-        # measured the two benched member stages at 0.6-0.9 s + 0.5-0.7 s
-        # back to back). Visibility is unchanged: nothing is visible until
-        # the ONE group record exists, and a failed member still aborts the
-        # whole group — the executor's shutdown on scope exit guarantees the
-        # abort record is written only after every in-flight member prepare
-        # has published or failed (no publish can race the tombstone).
+        # first one's task tail leaves idle (the two benched member
+        # stages took 0.6-0.9 s + 0.5-0.7 s back to back).
+        # Visibility is unchanged: nothing is visible until the ONE group
+        # record exists, and a failed member still aborts the whole group —
+        # the executor's shutdown on scope exit guarantees the abort record
+        # is written only after every in-flight member prepare has
+        # published or failed (no publish can race the tombstone).
         # Same-table duplicates (caller error) would race the version claim
         # when concurrent, so they keep the sequential path.
         paths = [t.path for t, _ in updates]
         try:
-            if (
-                len(updates) > 1
-                and len(set(paths)) == len(paths)
-                and _overlap_commit_jobs()
-            ):
+            if len(updates) > 1 and len(set(paths)) == len(paths):
                 from concurrent.futures import ThreadPoolExecutor
 
                 with ThreadPoolExecutor(max_workers=len(updates)) as ex:

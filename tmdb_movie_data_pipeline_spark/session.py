@@ -64,36 +64,15 @@ def get_spark(
         # src/movie.py:277-278).
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
-        # Memory-pressure audit (VERDICT r8 #5): the r8 driver verify saw a
-        # burst of DuckDB OOMs while Spark and the oracle shared the box.
-        # Two residual-footprint levers:
-        # * 6g default heap (was 8g) — sf0.01 verify and sf0.1 bench both
-        #   fit comfortably; bench overrides via SPARK_GRAFT_DRIVER_MEM.
-        # * cap the idle Python-worker pool: pandas-UDF queries fork up to
-        #   one worker per core, workers are reused across queries, and a
-        #   pandas worker never returns freed heap to the OS — after a
-        #   Gram/kNN battery that is cores × 100s-of-MB held for the rest
-        #   of the run. Retaining at most 8 idle workers bounds the
-        #   resident set while keeping warm-worker reuse for the common
-        #   sequential case.
-        #   SCOPE (VERDICT r9 #3): this cap is the shared-box COEXISTENCE
-        #   setting (driver verify runs Spark + a DuckDB oracle together).
-        #   It taxes back-to-back mapInPandas stages — on a 32-core box a
-        #   chunker forks ~32 workers, 24 are culled at stage end, and the
-        #   next Python stage pays re-fork + pandas re-import: A/B'd at
-        #   1.7x on multimodal_cdc_chunk_dedup, 1.5x on chunk_store_gc
-        #   (NOTES_r10). Processes that run ALONE (bench.py) restore the
-        #   full pool via these env overrides, same pattern as DRIVER_MEM.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "6g"))
-        .config(
-            "spark.python.factory.idleWorkerMaxPoolSize",
-            os.environ.get("SPARK_GRAFT_PY_IDLE_WORKERS", "8"),
-        )
+        # Footprint for a box shared with other processes (a DuckDB oracle
+        # runs beside Spark in verification): a 6g heap, and at most 8
+        # idle Python workers kept, since a pandas worker never returns
+        # freed heap to the OS. A process that runs alone (bench.py) passes
+        # a larger heap and the full worker pool through ``extra_conf``.
+        .config("spark.driver.memory", "6g")
+        .config("spark.python.factory.idleWorkerMaxPoolSize", "8")
         .config("spark.python.worker.idleTimeoutSeconds", "120")
-        .config(
-            "spark.python.worker.killOnIdleTimeout",
-            os.environ.get("SPARK_GRAFT_PY_KILL_IDLE", "true"),
-        )
+        .config("spark.python.worker.killOnIdleTimeout", "true")
     )
     if extra_conf:
         for k, v in extra_conf.items():
