@@ -1,14 +1,23 @@
 #!/usr/bin/env python
-"""Headline benchmark: runs the engine's flagship queries at
+"""Headline benchmark: times the engine's flagship queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line:
+and prints ONE JSON line (``final_line``); per-query detail goes to a
+``BENCH_DETAIL_*.json`` file next to this script.
 
-    {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": <sf>}
+Every query is timed with perfbench's operation: one builder call plus
+``collect_digest(digest_frame(df))``, an action over every output column,
+so jobs the builder launches and every column's work sit inside the
+bracket. Each query runs RUNS_PER_QUERY times. Cold is run 1 (it pays
+whole-stage-codegen JIT); warm is the fastest later run; the headline
+``value`` is the sum of warm times. A query whose ``(rows, digest)``
+differs between its runs is listed as unstable.
 
-Timing counts full execution of the query to its action (count of rows),
-excluding session startup. Each query runs twice and reports the min (run 1
-pays whole-stage-codegen JIT) — the per-round driver record is BENCH_r{N}.json.
+Each run's builder and action run under job groups ``<name>#<run>:build``
+and ``<name>#<run>:exec`` (``perfbench.tracing.Tracer``); the detail file
+records, for the cold run and the best warm run, the jobs, stages, tasks
+and executor time of each group, the action's Catalyst phases and its
+Arrow Python-worker metrics. A streaming builder runs its micro-batches
+under the stream's own job group, so its ``build.jobs`` may undercount.
 
 Input fairness: the driver's testdata parquet files hold ONE row group each,
 so a direct scan is a single task no matter how many cores local[N] has.
@@ -19,22 +28,29 @@ real multi-file dataset would; timings below are against that copy.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
 import sys
 import tempfile
 import time
+from types import SimpleNamespace
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from tmdb_movie_data_pipeline_spark.registry import all_queries  # noqa: E402
+from perfbench.tracing import Tracer  # noqa: E402
+from perfbench.workloads import collect_digest, digest_frame  # noqa: E402
+from py4j.protocol import Py4JJavaError  # noqa: E402
+from tmdb_movie_data_pipeline_spark.registry import _round_token, run_query  # noqa: E402
 from tmdb_movie_data_pipeline_spark.schemas import TESTDATA_TABLES  # noqa: E402
 from tmdb_movie_data_pipeline_spark.session import get_spark  # noqa: E402
 
-#: queries timed in the headline benchmark — a representative slice of the
-#: engine: scan+agg, multi-join, EXISTS shapes, window, subquery, UDF,
-#: near-dedup, ANN, text, sessionization, transactional merge.
+METRIC = "headline_queries_total_runtime"
+
+#: the timed queries: a representative slice of every operator family
+#: (scan+agg, joins, windows, subqueries, UDFs, dedup, ANN, text, events,
+#: graph, transactional merge, streaming), weighted to the heaviest ones.
 BENCH_QUERIES = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -60,9 +76,6 @@ BENCH_QUERIES = [
     "events_sessionize",
     "events_tumbling_hourly",
     "delta_merge_upsert_read",
-    # r6 widening (VERDICT r5 item #5): the heaviest previously-unmeasured
-    # queries — where the next silent regression would hide — plus this
-    # round's two new entries.
     "sketch_hll_union",
     "join_bloom_prefilter",
     "dedup_simhash_pairs",
@@ -70,22 +83,15 @@ BENCH_QUERIES = [
     "stream_stream_left_outer_join",
     "multimodal_cdc_chunk_dedup",
     "sketch_quantile_histogram",
-    # r6 additions: the heaviest new non-iterative queries (the iterative
-    # PageRank/PCA stay unbenched per the policy note below)
     "ml_embedding_gram",
     "ml_knn_classify",
     "agg_rfm_segmentation",
     "text_bm25_topk",
-    # r6 session-2 additions: heaviest of the newest operators — interval
-    # coalescing, spatial bucketing, bigram LM, per-commit CDF, PIT join
     "events_interval_merge",
     "join_spatial_grid",
     "text_bigram_lm",
     "delta_cdc_feed_commits",
     "join_scd2_point_in_time",
-    # r7 activations: heaviest of the 45 queries promoted from the deferred
-    # queue (iterative graph kernels stay excluded per the policy note;
-    # link prediction is a single wedge join, not driver-sequenced rounds)
     "dedup_containment_pairs",
     "events_dau_wau_stickiness",
     "ml_auc_roc",
@@ -94,158 +100,59 @@ BENCH_QUERIES = [
     "multimodal_chunk_store_gc",
     "delta_multi_table_tx",
     "graph_link_prediction",
-    # r8 activations: heaviest of the 43 queries promoted from the deferred
-    # queue this round (same policy: iterative kernels excluded; the
-    # clustering coefficient is a single wedge-closure join)
     "ml_retrieval_eval",
     "stats_theil_sen",
     "events_markov_stationary",
     "profile_join_key_skew",
     "dedup_minimizer_pairs",
     "graph_clustering_coefficient",
-    # r9: heaviest newly-green r8 activations that missed the r8 headline
-    # (VERDICT r8 #8) + heaviest of the r9 activations (SemDeDup's
-    # per-cluster Gram, the dHash banded join, the retention triangle)
     "events_cohort_ltv",
     "stats_poisson_bootstrap",
     "llm_quality_canonical_dedup",
     "dedup_semdedup_prune",
     "multimodal_dhash_pairs",
     "events_retention_triangle",
-    # r9 new operators worth watching: the two-stage ANN (windowed top-k
-    # over a broadcast cross product ×2) and the chunk-df join
     "ann_truncated_rerank",
     "dedup_chunk_dupshare",
-    # r9 session-2 additions: heaviest of the new batch — the source-pair
-    # TVD self-join over the staged (source, term) relation, the broadcast
-    # centroid-distance silhouette, and the grid-join neighborhood counts
     "text_source_tvd",
     "ml_silhouette_centroid",
     "spatial_dbscan_core",
-    # r16 activation (VERDICT r15 #1): full DBSCAN labeling — the grid
-    # pair scan plus connected components over core-core edges
     "spatial_dbscan_clusters",
-    # r10 (VERDICT r9 #9): heavy r9 first-time-green families not yet in a
-    # BENCH record — rank-pair stats, Zipf rank windows, the Lorenz
-    # contribution explode, harmonic centrality's bounded BFS joins, and
-    # the deletion-vector merge-on-read path
     "stats_kendall_tau",
     "text_zipf_profile",
     "events_lorenz_curve",
     "graph_harmonic_centrality",
     "delta_deletion_vectors",
-    # r10 new operators worth watching: segment-level dedup (two corpus
-    # shuffles + md5 gate), the equi-depth histogram activation, the
-    # consistent-sample join, and the trigram language-ID lift join
     "text_segment_dedup",
     "agg_equi_depth_histogram",
     "sample_join_consistent",
     "text_char_trigram_langid",
-    # r10 session-2 new actives: the two heaviest (staged-pair weighted
-    # verify; banded interval pair classification)
     "dedup_weighted_jaccard_pairs",
     "join_allen_interval_algebra",
-    # r11 (VERDICT r10 #5): the r10 first-time-green heavy families not
-    # yet in any BENCH record — the mapInPandas image decode, the PCM
-    # frame-energy decode, the DPO chosen/rejected pair join, the BH
-    # step-up FDR rank pass, the dominance skyline join, and the exact
-    # rolling median window
     "multimodal_decode_stats",
     "multimodal_pcm_frame_energy",
     "llm_dpo_pair_builder",
     "stats_benjamini_hochberg",
     "join_skyline_pareto",
     "window_rolling_median",
-    # r11 activations worth watching: the 4-curve IVF probe sweep (one
-    # assignment relation scored at four nprobe tiers), the embedding
-    # leak semi-join decontaminator, the two-clock as-of join, and the
-    # per-frame scene-change differencer
     "ann_ivf_probe_sweep",
     "llm_semantic_decontaminate",
     "join_bitemporal_asof",
     "multimodal_scene_change_detect",
-    # r12 activations worth watching (VERDICT r11 #4, named in NOTES_r11):
-    # the B=199 map-side permutation explode, the greedy MMR join ladder,
-    # the decode + 6-d patch reshape, the corpus-wide token-md5 hashing
-    # audit, and the dual ranked-list RBO build
     "stats_permutation_diff_test",
     "ml_mmr_diversified_topk",
     "multimodal_image_tile_stats",
     "ml_feature_hashing_stats",
     "ml_rank_biased_overlap",
-    # r13 activation (VERDICT r12 #4): the only r13-queue member whose
-    # cost scales with the corpus — token explode + per-token md5 (the
-    # ml_feature_hashing_stats shape) plus a second conditional-profile
-    # aggregate; CUPED/Cochran-Armitage/Page collapse to constant-size
-    # relations after one partial-aggregable scan and need no slot
     "llm_dsir_importance_weights",
-    # r14 activation (VERDICT r13 #4): the only r14-queue member whose
-    # cost scales with the corpus — positional in-array bigram build +
-    # explode + partial-aggregable groupBy(lang, bigram) over the token
-    # stream (≈ the DSIR token explode with a wider groupBy key;
-    # projected ~0.5–1.0 s at sf0.1); events_sprt_sequential collapses
-    # to a ~60-row daily relation after one groupBy(arm, day) scan and
-    # needs no slot
     "llm_good_turing_missing_mass",
-    # r15 activation (VERDICT r14 #1): HITS on the bipartite purchase
-    # graph — 3 unrolled fixed-point rounds, each two |E|-bounded
-    # equi-joins + two partial-aggregable groupBys; the localCheckpoint
-    # per round makes this the priciest graph query, worth a slot
     "graph_hits_bipartite",
-    # r17 activation (VERDICT r16 #1): metadata-filtered vector search —
-    # the eligibility semi-join + the same broadcast cosine rescore as
-    # ann_cosine_topk; expected in the same ~0.4-0.6 s band, benched so
-    # the filtered tier's cost is visible next to the unfiltered one
     "ann_filtered_topk",
-    # r18 activations (VERDICT r17 #1): the filtered-IVF scale route and
-    # its tuning sweep. NOT in REBUILD_PER_RUN (the mandated decision):
-    # both builders are pure lazy DataFrame composition — ivf_route, the
-    # eligibility semi-join, and the grid re-rank all execute inside the
-    # timed .count(); there is no eager localCheckpoint/collect/commit at
-    # plan-build time (unlike HITS/DBSCAN/TxTable), so the default
-    # build-once-time-thrice bracket measures exactly the engine work.
     "ann_ivf_filtered_topk",
     "ann_filtered_probe_sweep",
-]
-# NOT benched, deliberately: delta_file_pruned_merge (its local timing is
-# dominated by the range-partitioned CREATE, not the merge — the pruning win
-# scales with table size and is invisible at sf0.1; the file-reuse property
-# is pinned by tests/test_acid.py instead) and the iterative graph queries
-# (driver-sequenced rounds measure round-trip latency, not engine
-# throughput — same reason dedup_cluster_components was never benched).
-
-#: streaming machinery section (VERDICT r6 item #5): real micro-batch
-#: pipelines timed END-TO-END (stream start, every foreachBatch apply,
-#: stream stop) so regressions in the micro-batch overhead path become
-#: visible. One run each — the cost is dominated by Structured Streaming
-#: machinery (query startup, epoch scheduling, state rewrites), which a
-#: min-of-3 would not tighten meaningfully, and the end-to-end rebuild is
-#: the measured artifact. Reported under "streaming_queries", OUTSIDE the
-#: headline total, so the cross-round headline comparison stays
-#: apples-to-apples with r1-r6.
-STREAMING_BENCH = [
-    "stream_cdc_chunk_store",  # chunk + anti-join ingest per micro-batch
-    "stream_scd2_apply",  # incremental SCD2 state rewrite per micro-batch
-    # r19 activation (VERDICT r18 #1, placement mandated+documented): the
-    # builder drives its file-source stream EAGERLY (processAllAvailable
-    # inside the query fn, incremental_index.py) — bootstrap write + 3
-    # routed micro-batch appends + WAL commits all happen at plan-build
-    # time and the returned frame is just the index read, so the default
-    # build-once-time-thrice bracket would measure a ~50 ms parquet scan.
-    # STREAMING_BENCH (not REBUILD_PER_RUN) because the cost is Structured
-    # Streaming machinery end-to-end (query startup, epoch scheduling,
-    # foreachBatch applies), exactly this section's one-run policy; a
-    # min-of-3 rebuild would triple-pay startup without tightening the
-    # estimate.
+    "stream_cdc_chunk_store",
+    "stream_scd2_apply",
     "stream_ivf_index_append",
-    # r20 activation (VERDICT r19 #1, placement pre-decided in the query's
-    # docstring): the probe READS through the index the maintenance stream
-    # wrote, and its builder drives that same eager stream via
-    # build_maintained_index (bootstrap + 3 routed epochs + WAL at
-    # plan-build time) — so, exactly like stream_ivf_index_append above,
-    # the default build-once bracket would time only the probe read while
-    # the dominant cost is Structured Streaming machinery. One end-to-end
-    # run per this section's policy.
     "stream_ivf_index_filtered_probe",
 ]
 
@@ -253,41 +160,8 @@ STREAMING_BENCH = [
 #: without tiny-file overhead at sf0.1.
 COPY_FILES = 16
 
-#: queries whose builder performs the measured work EAGERLY (transactional
-#: create+merge commits happen at plan-build time, the returned DataFrame is
-#: only the snapshot read) — these must be rebuilt inside the timed region.
-REBUILD_PER_RUN = {
-    "delta_merge_upsert_read",
-    # builds its TxTable (create+merge+delete commits) in the builder — the
-    # transactional work must sit inside the timed region, like the MERGE
-    "delta_cdc_feed_commits",
-    # the streaming join runs its micro-batches to completion inside the
-    # builder (_run_to_completion); the returned frame is just the sink
-    # read — the measured work must happen inside the timed region.
-    "stream_stream_left_outer_join",
-    # TxGroup create+transact commits run in the builder; the returned
-    # frame is the post-transaction snapshot read
-    "delta_multi_table_tx",
-    # builds + GCs its chunk store in the builder (store writes, refcount
-    # anti-join, physical reclamation)
-    "multimodal_chunk_store_gc",
-    # the HITS fixed point runs EAGERLY at plan-build time (per-round
-    # localCheckpoints); timing only the returned top-k frame would read
-    # ~30 ms for a multi-join iterative kernel — the measured work must
-    # sit inside the timed region
-    "graph_hits_bipartite",
-    # the grid pair relation + core set are eager localCheckpoints and the
-    # connected-components fixed point iterates at plan-build time — same
-    # policy as HITS: rebuild inside the bracket or the timing reads only
-    # the final label union
-    "spatial_dbscan_clusters",
-}
-
-#: timed executions per query; reported number is the min (run 1 pays
-#: whole-stage-codegen JIT, later runs are the resident-pipeline steady
-#: state). 3 rather than 2 because cross-round driver benches have shown
-#: 30-40% machine-contention noise (NOTES_r4.md) — one extra sample
-#: meaningfully tightens the min estimator.
+#: runs per query: run 1 is the cold time, the fastest later run the warm
+#: time.
 RUNS_PER_QUERY = 3
 
 #: hard budget for the single printed JSON line. The driver tail-captures
@@ -296,28 +170,7 @@ RUNS_PER_QUERY = 3
 #: ~2.6 KB and the driver's parse failed, losing the headline total).
 MAX_FINAL_LINE_BYTES = 1500
 
-
-def calibration_seconds(spark, copy_dir: str, runs: int = 5) -> float:
-    """Fixed-plan noise probe: min seconds for a hash-agg count over
-    lineitem. Defined INLINE (never via the registry) so its logical plan is
-    byte-identical across every round — any cross-round movement in this
-    number is machine noise, not code. The driver's BENCH_r{N}.json records
-    it before and after the query loop; to compare query timings across
-    rounds, scale by the calibration ratio first."""
-    from pyspark.sql import functions as F
-
-    df = (
-        spark.read.parquet(os.path.join(copy_dir, "lineitem.parquet"))
-        .filter(F.col("l_quantity") > 0)
-        .groupBy("l_returnflag", "l_linestatus")
-        .count()
-    )
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        df.count()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
+_ROOT = os.path.dirname(os.path.abspath(__file__))
 
 
 def make_parallel_copy(spark, sf_dir: str) -> str:
@@ -336,23 +189,148 @@ def make_parallel_copy(spark, sf_dir: str) -> str:
     return dst
 
 
-def _accompanies_round() -> int:
-    """The round number whose BENCH_r{N}/CORRECTNESS_r{N} records this bench
-    run accompanies = the HIGHEST existing CORRECTNESS round. The driver
-    writes CORRECTNESS_r{N}.json before it runs bench, so at driver time this
-    is N; the r9 scheme used the registry's ``_round_token()`` (= next round)
-    and filed the r9 driver detail as BENCH_DETAIL_r10.json (VERDICT r9 #4).
-    Mid-round session runs happen before the round's CORRECTNESS file exists
-    and would collide with the PREVIOUS driver detail — set
-    SPARK_GRAFT_BENCH_TAG to divert those to BENCH_DETAIL_<tag>.json."""
-    from tmdb_movie_data_pipeline_spark.registry import _round_token as rt
+_SKIPPED = SimpleNamespace(status=lambda: "SKIPPED")
 
-    return rt() - 1
+
+class _StageTolerantContext:
+    """The JVM ``SparkContext`` as ``Tracer`` reads it, with a stage the
+    status store no longer holds read as skipped. Over a 100-query run the
+    store, past ``spark.ui.retainedStages``, can drop a just-finished job's
+    stage before its group is read (seen on ``ml_retrieval_eval``, 19 jobs,
+    after ~1,700 stages); skipped stages, which have no completion time,
+    are the ones its completion-time-ordered cleanup drops first."""
+
+    def __init__(self, jsc):
+        self._jsc = jsc
+
+    def __getattr__(self, name):
+        return getattr(self._jsc, name)
+
+    def statusStore(self):  # noqa: N802
+        return self
+
+    def job(self, job_id):
+        return self._jsc.statusStore().job(job_id)
+
+    def lastStageAttempt(self, stage_id):  # noqa: N802
+        try:
+            return self._jsc.statusStore().lastStageAttempt(stage_id)
+        except Py4JJavaError as exc:
+            if "NoSuchElementException" not in str(exc.java_exception):
+                raise
+            return _SKIPPED
+
+
+class BenchTracer(Tracer):
+    """perfbench's ``Tracer`` over a whole bench run's status store."""
+
+    def __init__(self, spark):
+        super().__init__(spark)
+        self.jsc = _StageTolerantContext(self.jsc)
+
+
+def _run_layers(tr: Tracer, op: str, b_span: dict, a_span: dict, dig) -> dict:
+    """perfbench's per-layer numbers of one run, read from the status
+    stores after its bracket closed."""
+    tr.settle()
+    build = tr.group_stats(f"{op}:build")
+    exe = tr.group_stats(f"{op}:exec")
+    layers = {
+        "build.wall_s": b_span["end"] - b_span["start"],
+        "exec.wall_s": a_span["end"] - a_span["start"],
+        **{f"build.{k}": build[k] for k in ("jobs", "tasks", "executor_run_s")},
+        **{
+            f"exec.{k}": exe[k]
+            for k in ("jobs", "stages", "tasks", "executor_run_s")
+        },
+        **tr.plan_phases(dig, a_span),
+    }
+    for part in (build["python"], exe["python"]):
+        for k, v in part.items():
+            layers[k] = layers.get(k, 0.0) + v
+    return {k: round(v, 4) for k, v in layers.items()}
+
+
+def bench_query(spark, tr: Tracer, name: str, sf_dir: str) -> dict:
+    """Time ``name`` RUNS_PER_QUERY times with the builder-plus-digest
+    operation; returns its cold/warm seconds, output and layers."""
+    runs = []
+    for i in range(1, RUNS_PER_QUERY + 1):
+        op = f"{name}#{i}"
+        tr.begin_op()
+        with tr.span("op", op) as op_span:
+            with tr.span("build", op, group=f"{op}:build") as b_span:
+                df = run_query(spark, name, sf_dir)
+            with tr.span("action", op, group=f"{op}:exec") as a_span:
+                dig = digest_frame(df)
+                out = collect_digest(dig)
+        dt = op_span["end"] - op_span["start"]
+        runs.append((dt, out, _run_layers(tr, op, b_span, a_span, dig)))
+    best = min(runs[1:], key=lambda r: r[0])
+    outs = [list(r[1]) for r in runs]
+    rec = {
+        "cold_s": round(runs[0][0], 3),
+        "warm_s": round(best[0], 3),
+        "rows": outs[0][0],
+        "digest": outs[0][1],
+        "unstable": any(o != outs[0] for o in outs),
+        "cold": runs[0][2],
+        "warm": best[2],
+    }
+    if rec["unstable"]:
+        rec["outputs"] = outs
+    return rec
+
+
+def totals(records: dict) -> dict:
+    """The headline ``value`` (sum of warm times) and the cold total."""
+    return {
+        "metric": METRIC,
+        "value": round(sum(r["warm_s"] for r in records.values()), 3),
+        "cold_total_sec": round(sum(r["cold_s"] for r in records.values()), 3),
+        "unit": "sec",
+    }
+
+
+def final_line(records: dict, lsh_stage_build: float, sf: float, detail_file: str) -> str:
+    """The one JSON line the driver parses: totals, the slowest warm times
+    and where the detail went, within MAX_FINAL_LINE_BYTES."""
+    warm = {n: r["warm_s"] for n, r in records.items()}
+    line = json.dumps(
+        {
+            **totals(records),
+            "sf": sf,
+            "lsh_stage_build_sec": lsh_stage_build,
+            "n_queries": len(records),
+            "runs_per_query": RUNS_PER_QUERY,
+            "unstable": sum(r["unstable"] for r in records.values()),
+            "slowest_warm_sec": dict(sorted(warm.items(), key=lambda kv: -kv[1])[:8]),
+            "detail_file": detail_file,
+        },
+        separators=(",", ":"),
+    )
+    assert len(line.encode()) <= MAX_FINAL_LINE_BYTES, (
+        f"final bench line {len(line.encode())} B exceeds the "
+        f"{MAX_FINAL_LINE_BYTES} B driver tail-capture budget"
+    )
+    return line
+
+
+def detail_file_name(n: int) -> str:
+    """``BENCH_DETAIL_r{n}.json``; if a file of that name exists, the first
+    free one of ``BENCH_DETAIL_session_r{n}.json``, ``…_2.json``,
+    ``…_3.json``, … — an existing record is never overwritten."""
+    stem = f"BENCH_DETAIL_session_r{n:02d}"
+    names = itertools.chain(
+        [f"BENCH_DETAIL_r{n:02d}.json", f"{stem}.json"],
+        (f"{stem}_{i}.json" for i in itertools.count(2)),
+    )
+    return next(c for c in names if not os.path.exists(os.path.join(_ROOT, c)))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").split("sf")[-1]
+    sf = float(sf_dir.rstrip("/").split("sf")[-1])
     # bench runs alone on the box: keep the larger heap and the FULL idle
     # Python-worker pool (the 6g heap / 8-worker cap session defaults are
     # settings for a box shared with the verification oracle). With the
@@ -373,15 +351,10 @@ def main() -> None:
 
     copy_dir = make_parallel_copy(spark, sf_dir)  # also warms JVM + footers
     try:
-        cal_pre = calibration_seconds(spark, copy_dir)
-        qs = all_queries()
-
-        # Cold staged-LSH build cost (VERDICT r7 #6 / r8 #6): the candidate
-        # pair stage is cached per fixture fingerprint, so its build cost is
-        # invisible inside the min-of-3 query timings (run 1 builds, runs
-        # 2-3 hit). copy_dir is a fresh temp dir — its fingerprint has never
-        # been built — so this first call IS the cold build, timed here
-        # explicitly before any dedup/graph consumer runs.
+        # Cold staged-LSH build: the candidate-pair stage is cached per
+        # fixture fingerprint, so inside the query runs only the first
+        # consumer would pay it. copy_dir is a fresh temp dir whose
+        # fingerprint has never been built, so this call IS the cold build.
         from tmdb_movie_data_pipeline_spark.operators.dedup import (
             lsh_pairs_staged,
         )
@@ -389,216 +362,30 @@ def main() -> None:
         t0 = time.perf_counter()
         lsh_pairs_staged(spark, copy_dir).count()
         lsh_stage_build = round(time.perf_counter() - t0, 3)
-        timings: dict[str, float] = {}
-        total = 0.0
+
+        tr = BenchTracer(spark)
+        records = {}
         for name in BENCH_QUERIES:
-            # build the plan ONCE and execute RUNS_PER_QUERY times: run 1
-            # pays whole-stage-codegen JIT (janino compiles of wide
-            # expression batteries run multiple seconds and are NOT
-            # cache-hit across plan rebuilds); later runs are the steady
-            # state a resident pipeline sees.
-            df = None if name in REBUILD_PER_RUN else qs[name](spark, copy_dir)
-            best = float("inf")
-            for _ in range(RUNS_PER_QUERY):
-                t0 = time.perf_counter()
-                (qs[name](spark, copy_dir) if df is None else df).count()
-                best = min(best, time.perf_counter() - t0)
-            dt = round(best, 3)
-            timings[name] = dt
-            total += dt
-
-        # VERDICT r10 #6: delta_cdc_feed_commits is a per-commit manifest
-        # loop (constant driver overhead per commit, data never loops) but
-        # its commit count is fixture-fixed — record commits alongside
-        # seconds so any future growth in its timing is attributable to
-        # commits x per-commit cost, not mistaken for a data regression.
-        cdc_commits = int(
-            qs["delta_cdc_feed_commits"](spark, copy_dir)
-            .select("commit_version")
-            .distinct()
-            .count()
-        )
-
-        # VERDICT r15 #3: the headline delta_cdc_feed_commits number is
-        # BUILD-dominated (REBUILD_PER_RUN times create+merge+delete, which
-        # since r15 pay the write-time change-row recording pass), while the
-        # feed READ — the path the query is named for — is a flat
-        # change-file scan. Bracket the two phases separately so the
-        # recorded figure attributes where the time goes; the headline
-        # timing above stays the total (build + read) for cross-round
-        # comparability.
-        from tmdb_movie_data_pipeline_spark.operators.merge import (
-            _cdc_assemble_feed,
-            _cdc_build_table,
-        )
-
-        t0 = time.perf_counter()
-        cdc_table = _cdc_build_table(spark, copy_dir)
-        cdc_build_sec = round(time.perf_counter() - t0, 3)
-        # ADVICE r16 #1: the read bracket follows the headline min-of-RUNS
-        # policy (a single run pays first-run whole-stage-codegen JIT and
-        # reads noisy/inflated vs steady state); the table is already built,
-        # so repeats cost only the change-file scan. The BUILD bracket stays
-        # single-run by nature — rebuilding would re-commit the table.
-        best_read = float("inf")
-        for _ in range(RUNS_PER_QUERY):
-            t0 = time.perf_counter()
-            _cdc_assemble_feed(cdc_table).count()
-            best_read = min(best_read, time.perf_counter() - t0)
-        cdc_read_sec = round(best_read, 3)
-
-        # skewed-shuffle-join pair: same result (oracle-checked as
-        # skew_salted_join), different physical plan — demonstrates the
-        # static salting win when broadcast/AQE-skew aren't available
-        from tmdb_movie_data_pipeline_spark.operators.skew import bench_skew_pair
-
-        skew = bench_skew_pair(spark, copy_dir)
-        timings.update(skew)
-        total += sum(skew.values())
-
-        # streaming section: end-to-end micro-batch pipelines, one run each
-        # (see STREAMING_BENCH note) — kept out of the headline total
-        streaming: dict[str, float] = {}
-        for name in STREAMING_BENCH:
-            t0 = time.perf_counter()
-            qs[name](spark, copy_dir).count()
-            streaming[name] = round(time.perf_counter() - t0, 3)
-
-        cal_post = calibration_seconds(spark, copy_dir)
-
-        # Full per-query detail goes to a repo FILE the snapshot commit
-        # picks up; the PRINTED line is kept compact. VERDICT r8 #3: the
-        # driver tail-captures only the last 2000 bytes of stdout, and the
-        # r8 single-line output (~2.6 KB with 56 per-query timings) was
-        # truncated from the head — losing the headline total. The final
-        # line below carries totals + the slowest queries only and is
-        # asserted under the budget (tests/test_bench_contract.py).
+            rec = records[name] = bench_query(spark, tr, name, copy_dir)
+            print(f"# {name}: cold {rec['cold_s']} s, warm {rec['warm_s']} s", file=sys.stderr)
+        # the round whose BENCH_r{N}/CORRECTNESS_r{N} records this run
+        # accompanies: the driver writes CORRECTNESS_r{N}.json first
+        rnd = _round_token() - 1
+        detail_name = detail_file_name(rnd)
+        line = final_line(records, lsh_stage_build, sf, detail_name)
         detail = {
-            "metric": "headline_queries_total_runtime",
-            # the round whose BENCH_r{N}/CORRECTNESS_r{N} this accompanies
-            # (embedded per VERDICT r9 #4 so the filename is auditable)
-            "accompanies_round": _accompanies_round(),
-            "value": round(total, 3),
-            "unit": "sec",
-            "queries": timings,
-            "sf": float(sf),
+            **totals(records),
+            "accompanies_round": rnd,
+            "sf": sf,
             "runs_per_query": RUNS_PER_QUERY,
-            "timing": (
-                f"min of {RUNS_PER_QUERY} "
-                "(steady state; run 1 pays codegen JIT); skew pair: "
-                "median of 5, variants interleaved (VERDICT r7 #2)"
-            ),
+            "timing": "builder call + digest action; cold = run 1, warm = min of later runs",
             "inputs": f"repartitioned temp copy, {COPY_FILES} files/table",
-            # end-to-end micro-batch pipelines (1 run each), not in
-            # "value" — see the STREAMING_BENCH policy note
-            "streaming_queries": streaming,
-            "streaming_total_sec": round(sum(streaming.values()), 3),
-            # distinct commit versions PRESENT in the CDC feed output this
-            # run (the exhibit always diffs versions()[1:]; a version whose
-            # change set is empty at this SF contributes no rows): seconds
-            # scale as commits x (2 anti-joins + 1 join) — compare timings
-            # across rounds only at equal counts
-            "delta_cdc_feed_commits_n_commits": cdc_commits,
-            # phase split (VERDICT r15 #3): the query's headline number is
-            # the build+read total; build = table commits incl. the
-            # write-time change-row recording, read = the change-file scan
-            # the query is named for. Compare the READ number when judging
-            # the r15 O(changed-rows) rewrite; build growth tracks commit
-            # count x recording cost.
-            "delta_cdc_feed_commits_build_sec": cdc_build_sec,
-            "delta_cdc_feed_commits_read_sec": cdc_read_sec,
-            # cold candidate-pair stage build (cache guaranteed cold: the
-            # temp copy's fingerprint is fresh) — the cost every dedup/graph
-            # consumer amortizes via the per-fixture cache
             "lsh_stage_build_sec": lsh_stage_build,
-            # fixed-plan noise probe (see calibration_seconds): this
-            # query never changes across rounds, so divide any
-            # cross-round timing comparison by the calibration ratio
-            # before reading it as a regression.
-            "calibration_sec_pre": cal_pre,
-            "calibration_sec_post": cal_post,
+            "unstable": sorted(n for n, r in records.items() if r["unstable"]),
+            "queries": records,
         }
-        tag = os.environ.get("SPARK_GRAFT_BENCH_TAG")
-        detail_name = (
-            f"BENCH_DETAIL_{tag}.json"
-            if tag
-            else f"BENCH_DETAIL_r{_accompanies_round():02d}.json"
-        )
-        # No-clobber guard: an UNTAGGED run whose round-named detail file is
-        # already git-TRACKED is a mid-round session run about to overwrite a
-        # committed driver record (it happened once in r10 before this guard
-        # existed) — divert it to the session name. The driver itself is
-        # never diverted: its round's detail file doesn't exist yet when it
-        # runs (CORRECTNESS_r{N}.json is written first, so the name advances
-        # past every committed record).
-        if not tag:
-            import subprocess
-
-            here = os.path.dirname(os.path.abspath(__file__))
-
-            def _tracked(name: str) -> bool:
-                return subprocess.run(
-                    ["git", "-C", here, "ls-files", "--error-unmatch", name],
-                    capture_output=True,
-                ).returncode == 0
-
-            def _taken(name: str) -> bool:
-                # a name is off-limits when git tracks it OR it already
-                # exists on disk untracked (ADVICE r14: a not-yet-committed
-                # probe record is still a record — the next run must not
-                # silently clobber it)
-                return _tracked(name) or os.path.exists(
-                    os.path.join(
-                        os.path.dirname(os.path.abspath(__file__)), name
-                    )
-                )
-
-            if _taken(detail_name):
-                detail_name = detail_name.replace(
-                    "BENCH_DETAIL_", "BENCH_DETAIL_session_"
-                )
-                # the session name can ALSO be a committed record (a prior
-                # session of the same round committed it — this bit r13:
-                # an untagged sf0.001 probe overwrote the committed
-                # BENCH_DETAIL_session_r12.json); keep probing _2, _3, ...
-                # until a free name, never clobber a tracked or on-disk one.
-                # Numeric suffixes (ADVICE r13): a chr() walk past 'z'
-                # drifts into punctuation; integers never do.
-                stem, ext = detail_name.rsplit(".", 1)
-                suffix = 2
-                while _taken(detail_name):
-                    detail_name = f"{stem}_{suffix}.{ext}"
-                    suffix += 1
-        detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), detail_name
-        )
-        with open(detail_path, "w") as fh:
+        with open(os.path.join(_ROOT, detail_name), "w") as fh:
             json.dump(detail, fh, indent=1, sort_keys=True)
-
-        slowest = dict(
-            sorted(timings.items(), key=lambda kv: -kv[1])[:8]
-        )
-        line = json.dumps(
-            {
-                "metric": "headline_queries_total_runtime",
-                "value": round(total, 3),
-                "unit": "sec",
-                "sf": float(sf),
-                "n_queries": len(timings),
-                "runs_per_query": RUNS_PER_QUERY,
-                "streaming_total_sec": round(sum(streaming.values()), 3),
-                "lsh_stage_build_sec": lsh_stage_build,
-                "calibration_sec_pre": cal_pre,
-                "calibration_sec_post": cal_post,
-                "slowest_sec": slowest,
-                "detail_file": detail_name,
-            },
-            separators=(",", ":"),
-        )
-        assert len(line.encode()) <= MAX_FINAL_LINE_BYTES, (
-            f"final bench line {len(line.encode())} B exceeds the "
-            f"{MAX_FINAL_LINE_BYTES} B driver tail-capture budget"
-        )
         print(line)
     finally:
         shutil.rmtree(copy_dir, ignore_errors=True)

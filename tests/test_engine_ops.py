@@ -661,9 +661,9 @@ def test_join_cardinality_estimator_is_scaled_sample(spark, sf_dir):
 def test_modularity_contributions_are_bounded_and_sum_sane(spark, sf_dir):
     """Q = Σ q_contrib_ppm must land in [-1e6, 1e6]; per-community intra
     edges cannot exceed the community's degree sum / 2."""
-    from tmdb_movie_data_pipeline_spark.registry import all_queries, deferred_queries
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
-    rows = {**all_queries(), **deferred_queries()}["graph_modularity"](spark, sf_dir).collect()
+    rows = all_queries()["graph_modularity"](spark, sf_dir).collect()
     assert rows
     q = sum(r.q_contrib_ppm for r in rows)
     assert -1_000_000 <= q <= 1_000_000
@@ -673,9 +673,9 @@ def test_modularity_contributions_are_bounded_and_sum_sane(spark, sf_dir):
 
 def test_tvd_drift_halves_to_at_most_one(spark, sf_dir):
     """TVD = Σ abs_diff_ppm / 2 is a probability distance: <= 1e6."""
-    from tmdb_movie_data_pipeline_spark.registry import all_queries, deferred_queries
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
-    rows = {**all_queries(), **deferred_queries()}["profile_drift_tvd"](spark, sf_dir).collect()
+    rows = all_queries()["profile_drift_tvd"](spark, sf_dir).collect()
     assert sum(r.abs_diff_ppm for r in rows) // 2 <= 1_000_000
 
 
@@ -683,9 +683,9 @@ def test_markov_stationary_mass_is_conserved_up_to_truncation(spark, sf_dir):
     """Total fixed-point mass starts at |types|*S and only shrinks by
     integer-division truncation — never grows, never collapses."""
     from tmdb_movie_data_pipeline_spark.operators.events import _MK_SCALE
-    from tmdb_movie_data_pipeline_spark.registry import all_queries, deferred_queries
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
-    rows = {**all_queries(), **deferred_queries()}["events_markov_stationary"](spark, sf_dir).collect()
+    rows = all_queries()["events_markov_stationary"](spark, sf_dir).collect()
     total = sum(r.stationary_u for r in rows)
     n = len(rows)
     assert total <= n * _MK_SCALE
@@ -695,9 +695,9 @@ def test_markov_stationary_mass_is_conserved_up_to_truncation(spark, sf_dir):
 def test_auc_matches_direct_pair_count(spark, sf_dir):
     """AUC from the rank identity equals the direct P(score+ > score-)
     pair count (ties half) computed in pure Python on the fixture."""
-    from tmdb_movie_data_pipeline_spark.registry import all_queries, deferred_queries
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
-    row = {**all_queries(), **deferred_queries()}["ml_auc_roc"](spark, sf_dir).collect()[0]
+    row = all_queries()["ml_auc_roc"](spark, sf_dir).collect()[0]
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "n_chars", "lang"
     ).collect()
@@ -925,12 +925,7 @@ def test_shapley_attribution_efficiency_identity():
     lattice, or marginal-pair bug breaks this identity."""
     import duckdb
 
-    # activation-agnostic lookup (the query moved deferred -> active in
-    # r11; a test must never encode WHICH side of the rotation a name is on)
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_oracles,
-        deferred_oracles,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_oracles
 
     con = duckdb.connect()
     con.execute(
@@ -938,7 +933,7 @@ def test_shapley_attribution_efficiency_identity():
         "read_parquet('/root/testdata/sf0.001/events.parquet')"
     )
     rows = con.execute(
-        {**all_oracles(), **deferred_oracles()}["events_shapley_attribution"]
+        all_oracles()["events_shapley_attribution"]
     ).fetchall()
     v_full, v_empty = con.execute(
         """
@@ -960,11 +955,7 @@ def test_jonckheere_terpstra_matches_brute_force():
     (both use the doubled exceedance identity) cannot hide from this."""
     import duckdb
 
-    # activation-agnostic lookup (the query moved deferred -> active in r11)
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_oracles,
-        deferred_oracles,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_oracles
 
     con = duckdb.connect()
     con.execute(
@@ -988,7 +979,7 @@ def test_jonckheere_terpstra_matches_brute_force():
                 for y in groups.get(j, []):
                     jt2 += 2 if x < y else (1 if x == y else 0)
     n_total, got_jt2, e_jt_x4 = con.execute(
-        {**all_oracles(), **deferred_oracles()}[
+        all_oracles()[
             "stats_jonckheere_terpstra"
         ]
     ).fetchone()
@@ -1047,10 +1038,7 @@ def test_friedman_matches_brute_force():
     use the doubled-rank formula) cannot hide from this."""
     import duckdb
 
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_oracles,
-        deferred_oracles,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_oracles
 
     con = duckdb.connect()
     con.execute(
@@ -1081,7 +1069,7 @@ def test_friedman_matches_brute_force():
         r * r for r in col_r.values()
     ) - 3.0 * n_blocks * (k + 1)
     rows = con.execute(
-        {**all_oracles(), **deferred_oracles()}["stats_friedman_test"]
+        all_oracles()["stats_friedman_test"]
     ).fetchall()
     con.close()
     got_ppm = {r[3] for r in rows}
@@ -1101,10 +1089,7 @@ def test_kruskal_wallis_matches_brute_force():
     r11 session: both engines hash-agreed on the wrong H)."""
     import duckdb
 
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_oracles,
-        deferred_oracles,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_oracles
 
     con = duckdb.connect()
     con.execute(
@@ -1130,7 +1115,7 @@ def test_kruskal_wallis_matches_brute_force():
         sum(avg_rank(v) for v in vs) ** 2 / len(vs) for vs in groups.values()
     ) - 3.0 * (n + 1)
     rows = con.execute(
-        {**all_oracles(), **deferred_oracles()}["stats_kruskal_wallis"]
+        all_oracles()["stats_kruskal_wallis"]
     ).fetchall()
     con.close()
     got = {r[3] for r in rows}
@@ -1232,12 +1217,9 @@ def test_cuped_matches_numpy_reference(spark, sf_dir):
     independent reference."""
     import duckdb
 
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_queries,
-        deferred_queries,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
-    row = {**all_queries(), **deferred_queries()}["events_cuped_variance_reduction"](
+    row = all_queries()["events_cuped_variance_reduction"](
         spark, sf_dir
     ).collect()[0]
     con = duckdb.connect()
@@ -1412,12 +1394,9 @@ def test_hits_matches_python_reference(spark, sf_dir):
         _HITS_SCALE,
         _HITS_TOP,
     )
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_queries,
-        deferred_queries,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
-    rows = {**all_queries(), **deferred_queries()}["graph_hits_bipartite"](
+    rows = all_queries()["graph_hits_bipartite"](
         spark, sf_dir
     ).collect()
     con = duckdb.connect()
@@ -1477,12 +1456,9 @@ def test_hits_matches_python_reference(spark, sf_dir):
 def test_cochran_armitage_matches_float_reference(spark, sf_dir):
     """CA trend z² vs the textbook float formula on the observed 5-row
     contingency table."""
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_queries,
-        deferred_queries,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
-    rows = {**all_queries(), **deferred_queries()}["stats_cochran_armitage_trend"](
+    rows = all_queries()["stats_cochran_armitage_trend"](
         spark, sf_dir
     ).collect()
     n_i = {r["dose"]: r["n"] for r in rows}
@@ -1503,12 +1479,9 @@ def test_cochran_armitage_matches_float_reference(spark, sf_dir):
 def test_page_trend_matches_float_reference(spark, sf_dir):
     """Page's signed z² vs the float L-statistic algebra (L from the
     engine's own doubled rank sums, E and Var from Page 1963)."""
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_queries,
-        deferred_queries,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
-    rows = {**all_queries(), **deferred_queries()}["stats_page_trend_test"](
+    rows = all_queries()["stats_page_trend_test"](
         spark, sf_dir
     ).collect()
     k = len(rows)
@@ -1540,10 +1513,7 @@ def test_dsir_matches_python_reference(spark, sf_dir):
         _DSIR_TOP,
         _TOKENS_SQL,
     )
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_queries,
-        deferred_queries,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
     con = duckdb.connect()
     con.execute(
@@ -1588,7 +1558,7 @@ def test_dsir_matches_python_reference(spark, sf_dir):
     ]
     got = [
         tuple(r)
-        for r in {**all_queries(), **deferred_queries()}["llm_dsir_importance_weights"](
+        for r in all_queries()["llm_dsir_importance_weights"](
             spark, sf_dir
         ).collect()
     ]
@@ -2270,14 +2240,11 @@ def test_good_turing_matches_python_reference(spark, sf_dir):
     import duckdb
 
     from tmdb_movie_data_pipeline_spark.operators.text import _TOKENS_SQL
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_queries,
-        deferred_queries,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
     rows = {
         r["lang"]: r
-        for r in {**all_queries(), **deferred_queries()}[
+        for r in all_queries()[
             "llm_good_turing_missing_mass"
         ](spark, sf_dir).collect()
     }
@@ -2326,14 +2293,11 @@ def test_sprt_matches_float_reference(spark, sf_dir):
     import duckdb
     import math
 
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_queries,
-        deferred_queries,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
     rows = {
         r["arm"]: r
-        for r in {**all_queries(), **deferred_queries()}[
+        for r in all_queries()[
             "events_sprt_sequential"
         ](spark, sf_dir).collect()
     }

@@ -87,7 +87,7 @@ def test_zorder_layout_prunes_two_dims(spark, tmp_path):
 def test_catalog_static_fields_match_registry():
     """CATALOG.json (VERDICT r10 #8) must stay in sync with the live
     registry on its REGISTRY-STATIC fields: same name set, same
-    module:line, category, oracle flag, and active/queued split — so
+    module:line, category and oracle flag — so
     registering a query without regenerating the catalog reds CI.
 
     History fields (first/last green round, bench appearances) are a
@@ -132,11 +132,7 @@ def test_catalog_reconfirm_debt_internally_consistent():
     debt = cat["reconfirm_debt"]
     token = cat["as_of_round"]
     assert debt["threshold_round"] == token - 1
-    active = {
-        n: row
-        for n, row in cat["queries"].items()
-        if row["driver_visible"]
-    }
+    active = cat["queries"]
     last = {
         n: row["last_green_round"]
         for n, row in active.items()

@@ -15,12 +15,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from tmdb_movie_data_pipeline_spark.registry import (
-    all_oracles,
-    all_queries,
-    deferred_oracles,
-    deferred_queries,
-)
+from tmdb_movie_data_pipeline_spark.registry import all_oracles, all_queries
 from tmdb_movie_data_pipeline_spark.schemas import TESTDATA_TABLES
 
 
@@ -77,10 +72,8 @@ def _canon_frame(df: pd.DataFrame) -> list[tuple]:
     return sorted(out)
 
 
-# deferred (next-round queue) entries face the IDENTICAL local gate —
-# deferral only changes when the driver sees them
-QUERIES = {**all_queries(), **deferred_queries()}
-ORACLES = {**all_oracles(), **deferred_oracles()}
+QUERIES = all_queries()
+ORACLES = all_oracles()
 
 
 #: entries that legitimately take the driver's weaker rows-only check —
@@ -95,7 +88,7 @@ def _assert_atomic_schema(name: str, schema) -> None:
     """Driver-contract guard (VERDICT r6 item #2): the driver canonicalizes
     results with pandas ``sort_values`` over every column, which raises
     ``TypeError: unhashable type`` on list/dict cells — so NO registered
-    query (active or deferred) may return an array/map/struct top-level
+    query may return an array/map/struct top-level
     column. Flatten to a delimited string (``F.array_join``) or explode to
     rows instead; text_inverted_index was the r6 casualty."""
     from pyspark.sql.types import ArrayType, MapType, StructType
@@ -110,13 +103,6 @@ def _assert_atomic_schema(name: str, schema) -> None:
         f"({[str(schema[b].dataType) for b in bad]}) — the driver "
         "canonicalizer crashes on these; flatten to string or explode"
     )
-
-
-def test_deferred_names_do_not_reach_the_driver():
-    from tmdb_movie_data_pipeline_spark.registry import verification_order
-
-    leaked = set(deferred_queries()) & set(verification_order())
-    assert not leaked, f"deferred queries leaked into the driver order: {leaked}"
 
 
 def test_every_query_has_an_oracle():

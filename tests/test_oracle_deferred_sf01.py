@@ -2,9 +2,8 @@
 (ADVICE r6, widened r10): until a query has a green driver row, its only
 verification is local — so it must be hash-gated at BOTH fixture scales,
 including sf0.01, the scale the driver actually runs. That set is the
-deferred queue PLUS never-verified active queries (activation rounds are
-exactly when sf0.01-only failures like the r8 DuckDB-OOM burst would
-surface). Driver-verified actives get their sf0.01 check from the driver
+never-verified registered queries (activation rounds are exactly when
+sf0.01-only failures like the r8 DuckDB-OOM burst would surface). Driver-verified actives get their sf0.01 check from the driver
 itself, so the extra cost here stays bounded by the unverified frontier.
 """
 
@@ -16,26 +15,21 @@ from tmdb_movie_data_pipeline_spark.registry import (
     _driver_verified_names,
     all_oracles,
     all_queries,
-    deferred_oracles,
-    deferred_queries,
 )
 
 from conftest import SF_MEDIUM  # noqa: E402
 from test_oracle import _assert_atomic_schema, _canon_frame, _duck  # noqa: E402
 
 _verified = _driver_verified_names()
-QUERIES = {
-    **deferred_queries(),
-    **{n: f for n, f in all_queries().items() if n not in _verified},
-}
-ORACLES = {**deferred_oracles(), **all_oracles()}
+QUERIES = {n: f for n, f in all_queries().items() if n not in _verified}
+ORACLES = all_oracles()
 #: names with no oracle (rows-only driver check) still deserve an sf0.01
 #: smoke execution so activation can't crash on scale-dependent code paths
 _NO_ORACLE = sorted(set(QUERIES) - set(ORACLES))
 
 
 # Defined only when an unverified frontier EXISTS (r13 time-dependence
-# audit): with an empty queue, the moment the driver greens the last
+# audit): the moment the driver greens the last
 # never-verified active name this module's frontier goes empty and an
 # unconditional empty parametrize would flip this test from pass to a
 # standing-skip placeholder with no code change — the same

@@ -34,10 +34,7 @@ import re
 
 import pytest
 
-from tmdb_movie_data_pipeline_spark.registry import (
-    all_queries,
-    deferred_queries,
-)
+from tmdb_movie_data_pipeline_spark.registry import all_queries
 
 #: modules whose builders return the plan of the query's work (the
 #: builder may still run jobs on call; see the module docstring)
@@ -72,7 +69,7 @@ _LINTED_MODULES = {
 
 
 def _lintable() -> list[str]:
-    qs = {**all_queries(), **deferred_queries()}
+    qs = all_queries()
     return sorted(
         n
         for n, fn in qs.items()
@@ -82,7 +79,7 @@ def _lintable() -> list[str]:
 
 @pytest.mark.parametrize("name", _lintable())
 def test_no_cartesian_product_anywhere(spark, sf_dir, name):
-    qs = {**all_queries(), **deferred_queries()}
+    qs = all_queries()
     df = qs[name](spark, sf_dir)
     plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"

@@ -502,18 +502,7 @@ def test_cumulative_distinct_two_bounded_exchanges(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
-# -- deferred (round-7 queue) plan pins: ready before activation --------------
-
-
-def _deferred(name):
-    # queue entries activate in later rounds (deferred -> active), so look
-    # the name up in whichever registry currently holds it
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_queries,
-        deferred_queries,
-    )
-
-    return {**all_queries(), **deferred_queries()}[name]
+# -- plan pins of the round-7 activations ------------------------------------
 
 
 def test_grouped_order_statistics_have_no_unpartitioned_window(spark, sf_dir):
@@ -521,7 +510,7 @@ def test_grouped_order_statistics_have_no_unpartitioned_window(spark, sf_dir):
     # window spec must carry a partition column — zero single-partition
     # windows anywhere in the plan
     for name in ("agg_grouped_median", "agg_grouped_quartiles"):
-        plan = _plan(_deferred(name)(spark, sf_dir))
+        plan = _plan(all_queries()[name](spark, sf_dir))
         specs = re.findall(r"windowspecdefinition\((\S+?),", plan)
         assert specs, plan
         for first_arg in specs:
@@ -532,13 +521,13 @@ def test_grouped_order_statistics_have_no_unpartitioned_window(spark, sf_dir):
 
 
 def test_weighted_median_windows_are_bucket_partitioned(spark, sf_dir):
-    plan = _plan(_deferred("agg_weighted_median")(spark, sf_dir))
+    plan = _plan(all_queries()["agg_weighted_median"](spark, sf_dir))
     parted = re.findall(r"windowspecdefinition\(_b#\d+L,", plan)
     assert len(parted) >= 1, plan
 
 
 def test_link_prediction_wedge_join_is_equi(spark, sf_dir):
-    plan = _plan(_deferred("graph_link_prediction")(spark, sf_dir))
+    plan = _plan(all_queries()["graph_link_prediction"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "TakeOrderedAndProject" in plan  # top-N, not global sort
@@ -553,7 +542,7 @@ def test_bigram_and_bpe_stay_jvm_side(spark, sf_dir):
 def test_bucketed_colocated_join_has_no_exchange_below_join(spark, sf_dir):
     # registered bucketed join: the only Exchange sits ABOVE the
     # SortMergeJoin (final groupBy); the join reads co-located buckets
-    plan = _plan(_deferred("join_bucketed_colocated")(spark, sf_dir))
+    plan = _plan(all_queries()["join_bucketed_colocated"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     ex_pos = [i for i, ln in enumerate(tree.splitlines()) if "Exchange" in ln]
     smj_pos = [
@@ -570,7 +559,7 @@ def test_longest_dup_run_is_window_join_bounded(spark, sf_dir):
     """No all-pairs anywhere: the cross-doc test is a hash-agg + equi-join
     on the window hash, never a cartesian/NLJ; scan reads only (doc_id,
     text)."""
-    df = _deferred("dedup_longest_dup_run")(spark, sf_dir)
+    df = all_queries()["dedup_longest_dup_run"](spark, sf_dir)
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -581,7 +570,7 @@ def test_minimizer_pairs_join_is_equi_not_nlj(spark, sf_dir):
     """The fingerprint pair join must be keyed on the minimizer hash (an
     equi-join with the id inequality as a post-filter), never a nested
     loop over doc pairs."""
-    plan = _plan(_deferred("dedup_minimizer_pairs")(spark, sf_dir))
+    plan = _plan(all_queries()["dedup_minimizer_pairs"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert (
@@ -594,7 +583,7 @@ def test_minimizer_pairs_join_is_equi_not_nlj(spark, sf_dir):
 def test_poisson_bootstrap_is_map_only_plus_aggregates(spark, sf_dir):
     """The B-fold resample is a map-side explode: no join, no window —
     just the replicate aggregate (partial+final) and the final fold."""
-    plan = _plan(_deferred("stats_poisson_bootstrap")(spark, sf_dir))
+    plan = _plan(all_queries()["stats_poisson_bootstrap"](spark, sf_dir))
     for node in (
         "SortMergeJoin",
         "BroadcastHashJoin",
@@ -610,21 +599,21 @@ def test_poisson_bootstrap_is_map_only_plus_aggregates(spark, sf_dir):
 def test_column_stats_scans_orders_exactly_once(spark, sf_dir):
     """Profiling N columns must not become N scans: the stack fans out
     map-side, so exactly one parquet scan of orders exists."""
-    plan = _plan(_deferred("profile_column_stats")(spark, sf_dir))
+    plan = _plan(all_queries()["profile_column_stats"](spark, sf_dir))
     assert _nodes(plan, "Scan parquet") == 1
 
 
 def test_oov_rate_probes_lm_via_broadcast(spark, sf_dir):
     """The LM membership probe is vocabulary-bounded — it must reach the
     bigram relation through a broadcast join, never a shuffled one."""
-    plan = _plan(_deferred("text_oov_bigram_rate")(spark, sf_dir))
+    plan = _plan(all_queries()["text_oov_bigram_rate"](spark, sf_dir))
     assert _nodes(plan, "BroadcastHashJoin") >= 1
     assert "CartesianProduct" not in plan
 
 
 def test_clustering_coefficient_has_no_cartesian(spark, sf_dir):
     """Wedge closure over oriented edges: equi-joins only."""
-    plan = _plan(_deferred("graph_clustering_coefficient")(spark, sf_dir))
+    plan = _plan(all_queries()["graph_clustering_coefficient"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -795,7 +784,7 @@ def test_harmonic_centrality_has_no_cartesian(spark, sf_dir):
 def test_rag_chunking_is_map_only(spark, sf_dir):
     """Chunk slicing is a pure per-row transform: ZERO exchanges in the
     whole plan — the shape a 100 TB re-chunking pass needs."""
-    plan = _plan(_deferred("llm_rag_chunk_overlap")(spark, sf_dir))
+    plan = _plan(all_queries()["llm_rag_chunk_overlap"](spark, sf_dir))
     assert _nodes(plan, "Exchange") == 0
     assert _nodes(plan, "Scan parquet") == 1
 
@@ -804,7 +793,7 @@ def test_ols_normal_equations_is_one_scan_one_agg(spark, sf_dir):
     """The multivariate solve is nine partial-aggregable moments: one
     scan, one aggregation exchange, and driver-free rational arithmetic
     on the single row."""
-    plan = _plan(_deferred("ml_ols_normal_equations")(spark, sf_dir))
+    plan = _plan(all_queries()["ml_ols_normal_equations"](spark, sf_dir))
     assert _nodes(plan, "Scan parquet") == 1
     assert _nodes(plan, "Exchange") == 1
     assert _nodes(plan, "Sort") == 0
@@ -813,7 +802,7 @@ def test_ols_normal_equations_is_one_scan_one_agg(spark, sf_dir):
 def test_equi_depth_histogram_windows_over_value_domain(spark, sf_dir):
     """One scan to the value histogram; the only Sort is the cumulative
     window's local over that domain-sized relation."""
-    plan = _plan(_deferred("agg_equi_depth_histogram")(spark, sf_dir))
+    plan = _plan(all_queries()["agg_equi_depth_histogram"](spark, sf_dir))
     assert _nodes(plan, "Scan parquet") == 1
     assert _nodes(plan, "Sort") <= 1
     assert _nodes(plan, "CartesianProduct") == 0
@@ -822,7 +811,7 @@ def test_equi_depth_histogram_windows_over_value_domain(spark, sf_dir):
 def test_assortativity_has_no_pair_product(spark, sf_dir):
     """Degree joins are vertex-keyed equi-joins; no cartesian or
     sort-merge pair product anywhere."""
-    plan = _plan(_deferred("graph_degree_assortativity")(spark, sf_dir))
+    plan = _plan(all_queries()["graph_degree_assortativity"](spark, sf_dir))
     assert _nodes(plan, "CartesianProduct") == 0
     assert _nodes(plan, "SortMergeJoin") == 0
 
@@ -830,7 +819,7 @@ def test_assortativity_has_no_pair_product(spark, sf_dir):
 def test_spatial_knn_reuses_staged_pairs(spark, sf_dir):
     """Top-k per point runs over the staged pair relation (no re-scan);
     the Sorts are the per-point window locals."""
-    plan = _plan(_deferred("spatial_knn_within_radius")(spark, sf_dir))
+    plan = _plan(all_queries()["spatial_knn_within_radius"](spark, sf_dir))
     assert _nodes(plan, "CartesianProduct") == 0
     assert _nodes(plan, "Sort") <= 2
 
@@ -839,7 +828,7 @@ def test_allen_algebra_is_banded_not_nested_loop(spark, sf_dir):
     """The 13-way classification must reach pairs through the hour-band
     equi-join (same discipline as join_interval_overlap), never a
     BroadcastNestedLoopJoin over the session cross product."""
-    plan = _plan(_deferred("join_allen_interval_algebra")(spark, sf_dir))
+    plan = _plan(all_queries()["join_allen_interval_algebra"](spark, sf_dir))
     assert _nodes(plan, "BroadcastNestedLoopJoin") == 0
     assert _nodes(plan, "CartesianProduct") == 0
 
@@ -890,14 +879,14 @@ def test_set_verifier_stays_pair_keyed(spark, sf_dir, name):
     per candidate pair: its joins key on document ids, never on a
     (document, shingle) pair, and only the MinHash signatures explode
     shingles."""
-    _assert_pair_keyed(_deferred(name)(spark, sf_dir), *_SET_VERIFIERS[name])
+    _assert_pair_keyed(all_queries()[name](spark, sf_dir), *_SET_VERIFIERS[name])
 
 
 def test_weighted_jaccard_stays_pair_keyed(spark, sf_dir):
     """The IDF-weighted verify keeps the same discipline: the overlap is
     per candidate pair, and the only shingle-keyed joins attach the
     vocabulary-sized weight relation — no cartesian anywhere."""
-    df = _deferred("dedup_weighted_jaccard_pairs")(spark, sf_dir)
+    df = all_queries()["dedup_weighted_jaccard_pairs"](spark, sf_dir)
     _assert_pair_keyed(df, generates=None, nested_loops=0)
 
 
@@ -905,7 +894,7 @@ def test_pmi_pair_generation_is_map_side(spark, sf_dir):
     """Collocation pairs expand via the nested array transform BEFORE any
     exchange — the only joins in the plan attach the vocabulary-sized
     unigram relation and the 1-row total, after both groupBys."""
-    plan = _plan(_deferred("text_pmi_lift_pairs")(spark, sf_dir))
+    plan = _plan(all_queries()["text_pmi_lift_pairs"](spark, sf_dir))
     # pair pass + staged unigram pass; the total derives from the staged
     # unigrams, so it costs no third corpus scan
     assert _nodes(plan, "Scan parquet") <= 2
@@ -921,7 +910,7 @@ def test_isotonic_fit_is_histogram_bounded(spark, sf_dir):
     hides it from downstream plans), the span enumeration joins
     broadcast-side over the B-row frame, and no corpus-sized shuffle or
     cartesian exists anywhere."""
-    plan = _plan(_deferred("ml_isotonic_calibration")(spark, sf_dir))
+    plan = _plan(all_queries()["ml_isotonic_calibration"](spark, sf_dir))
     assert _nodes(plan, "Scan parquet") <= 1
     assert _nodes(plan, "CartesianProduct") == 0
     assert _nodes(plan, "SortMergeJoin") == 0
@@ -933,7 +922,7 @@ def test_rolling_ols_single_window_pass(spark, sf_dir):
     """Five frame sums share ONE window operator over the daily relation
     (Catalyst shares the frame buffer): one exchange for the daily rollup,
     one for the per-type window, one Sort feeding it."""
-    plan = _plan(_deferred("window_rolling_ols_slope")(spark, sf_dir))
+    plan = _plan(all_queries()["window_rolling_ols_slope"](spark, sf_dir))
     assert _nodes(plan, "Window") == 1
     assert _nodes(plan, "Sort") <= 1
 
@@ -947,7 +936,7 @@ def test_modality_transforms_are_map_only(spark, sf_dir):
         "multimodal_pcm_silence_trim",
         "multimodal_scene_change_detect",
     ):
-        plan = _plan(_deferred(name)(spark, sf_dir))
+        plan = _plan(all_queries()[name](spark, sf_dir))
         assert _nodes(plan, "Exchange") == 0, name
         assert _nodes(plan, "Scan parquet") == 1, name
 
@@ -957,7 +946,7 @@ def test_probe_sweep_reuses_one_scored_relation(spark, sf_dir):
     is a broadcast theta on the tiny grid); no cartesian product, and the
     ground-truth side is the same deliberate broadcast Qxcorpus the exact
     baseline pays."""
-    plan = _plan(_deferred("ann_ivf_probe_sweep")(spark, sf_dir))
+    plan = _plan(all_queries()["ann_ivf_probe_sweep"](spark, sf_dir))
     assert _nodes(plan, "CartesianProduct") == 0
 
 
@@ -967,7 +956,7 @@ def test_permutation_test_shuffles_only_moments(spark, sf_dir):
     carry per-permutation MOMENT rows. The observed side attaches as a
     broadcast 1-row aggregate — no cartesian product, no extra scan-wide
     shuffle."""
-    plan = _plan(_deferred("stats_permutation_diff_test")(spark, sf_dir))
+    plan = _plan(all_queries()["stats_permutation_diff_test"](spark, sf_dir))
     assert _nodes(plan, "CartesianProduct") == 0
     assert _nodes(plan, "Generate") >= 1  # the explode IS the fan-out
     # two aggregation exchanges (per-b moments, final fold) + the 1-row
@@ -979,7 +968,7 @@ def test_mmr_greedy_composes_bounded_joins(spark, sf_dir):
     """The 4-step greedy loop composes ONE lazy plan whose joins are all
     over pool-bounded relations (|Q| x POOL rows); no cartesian product
     may appear even though the plan tree is deep."""
-    plan = _plan(_deferred("ml_mmr_diversified_topk")(spark, sf_dir))
+    plan = _plan(all_queries()["ml_mmr_diversified_topk"](spark, sf_dir))
     assert _nodes(plan, "CartesianProduct") == 0
 
 
@@ -987,7 +976,7 @@ def test_unimax_is_single_scan(spark, sf_dir):
     """Water-filling runs entirely over the |langs|-row relation: exactly
     one scan of documents feeds one aggregate; every window after that is
     constant-size."""
-    plan = _plan(_deferred("llm_unimax_language_caps")(spark, sf_dir))
+    plan = _plan(all_queries()["llm_unimax_language_caps"](spark, sf_dir))
     assert _nodes(plan, "Scan parquet") == 1
     assert _nodes(plan, "CartesianProduct") == 0
 
@@ -996,7 +985,7 @@ def test_outlier_clip_ranks_over_histogram_not_rows(spark, sf_dir):
     """The p1/p99 ranks come from the (pos, distinct-value) HISTOGRAM:
     the plan must aggregate BEFORE any window sort (the window's input is
     the histogram aggregate, never the raw exploded rows)."""
-    plan = _plan(_deferred("ml_embedding_outlier_clip")(spark, sf_dir))
+    plan = _plan(all_queries()["ml_embedding_outlier_clip"](spark, sf_dir))
     assert _nodes(plan, "CartesianProduct") == 0
     assert _nodes(plan, "Window") >= 1
     # the histogram groupBy must sit below the window: find first Window
@@ -1018,7 +1007,7 @@ def test_good_turing_is_two_partial_aggregates_no_window(spark, sf_dir):
     # bigram GT: groupBy(lang, bigram) then the per-lang rollup — both
     # partial-aggregable (map-side combine), ZERO windows, zero Python,
     # and exactly two exchanges (the two groupBy key changes)
-    plan = _plan(_deferred("llm_good_turing_missing_mass")(spark, sf_dir))
+    plan = _plan(all_queries()["llm_good_turing_missing_mass"](spark, sf_dir))
     assert "partial_" in plan
     assert "Window" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -1030,7 +1019,7 @@ def test_sprt_windows_run_over_the_daily_relation_only(spark, sf_dir):
     # the cumulative windows and the crossing join see only the bounded
     # daily relation — the raw-events scan must feed an Aggregate before
     # any Window appears
-    plan = _plan(_deferred("events_sprt_sequential")(spark, sf_dir))
+    plan = _plan(all_queries()["events_sprt_sequential"](spark, sf_dir))
     assert "partial_" in plan
     assert "CartesianProduct" not in plan
     first_window = plan.find("Window")

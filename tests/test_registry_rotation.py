@@ -331,14 +331,11 @@ def test_round_strides_recorded_and_continuous():
 
 def test_every_registered_query_appears_in_coverage_doc():
     """COVERAGE.md is the judge-facing operator inventory — every
-    registered query (active or deferred) must have a backticked mention,
+    registered query must have a backticked mention,
     except the TPC-H shapes covered by the explicit grouped row."""
     from pathlib import Path
 
-    from tmdb_movie_data_pipeline_spark.registry import (
-        all_queries,
-        deferred_queries,
-    )
+    from tmdb_movie_data_pipeline_spark.registry import all_queries
 
     cov = (Path(__file__).resolve().parent.parent / "COVERAGE.md").read_text()
     grouped = {  # the `q1`-`q22` TPC-H breadth row covers these
@@ -346,7 +343,7 @@ def test_every_registered_query_appears_in_coverage_doc():
     }
     missing = [
         n
-        for n in sorted(set(all_queries()) | set(deferred_queries()))
+        for n in sorted(all_queries())
         if f"`{n}`" not in cov
         and not any(n.startswith(g) for g in grouped)
     ]
@@ -490,9 +487,7 @@ def test_rotation_family_survives_next_driver_file(tmp_path, monkeypatch):
                 assert checked_in["queries"][name][f] == row[f]
         assert live["as_of_round"] == token + 1
         debt = live["reconfirm_debt"]
-        active = {
-            n for n, r in live["queries"].items() if r["driver_visible"]
-        }
+        active = set(live["queries"])
         last = {
             n: live["queries"][n]["last_green_round"]
             for n in active

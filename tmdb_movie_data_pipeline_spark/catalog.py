@@ -1,7 +1,7 @@
 """Machine-readable query catalog (VERDICT r10 #8).
 
-379-active/37-queued crossed the point where COVERAGE.md's prose tables
-convey the inventory; this module generates ``CATALOG.json`` — one row
+Past ~380 registered queries COVERAGE.md's prose tables stopped
+conveying the inventory; this module generates ``CATALOG.json`` — one row
 per registered query: where it lives, its category, whether it has a
 DuckDB oracle, its driver-verification history (first-green /
 last-confirmed round), and which bench records measured it. The file is
@@ -12,10 +12,10 @@ old jq invocation.
 
 Two kinds of fields, with different staleness rules:
 
-* REGISTRY-STATIC fields (name, module, line, category, has_oracle,
-  driver_visible) are pinned by CI: tests/test_layout.py regenerates
-  them and diffs against the checked-in file, so adding a query without
-  regenerating the catalog reds CI.
+* REGISTRY-STATIC fields (name, module, line, category, has_oracle) are
+  pinned by CI: tests/test_layout.py regenerates them and diffs against
+  the checked-in file, so adding a query without regenerating the catalog
+  reds CI.
 * HISTORY fields (first/last green round, bench appearances) are a
   snapshot stamped ``as_of_round``; the driver writing a new
   CORRECTNESS/BENCH file between sessions must NOT red CI (the r8–r10
@@ -95,20 +95,13 @@ def _bench_appearances() -> dict[str, list[str]]:
 
 
 def build_catalog() -> dict[str, Any]:
-    from .registry import (
-        _round_token,
-        all_oracles,
-        all_queries,
-        deferred_oracles,
-        deferred_queries,
-    )
+    from .registry import _round_token, all_oracles, all_queries
 
-    active, queued = all_queries(), deferred_queries()
-    oracles = {**all_oracles(), **deferred_oracles()}
+    active, oracles = all_queries(), all_oracles()
     hist = _correctness_history()
     bench = _bench_appearances()
     rows: dict[str, Any] = {}
-    for name, fn in {**active, **queued}.items():
+    for name, fn in active.items():
         code = fn.__code__
         rel = Path(code.co_filename).resolve().relative_to(_ROOT)
         h = hist.get(name, {})
@@ -117,7 +110,6 @@ def build_catalog() -> dict[str, Any]:
             "module": f"{rel}:{code.co_firstlineno}",
             "category": fn.__module__.rsplit(".", 1)[-1],
             "has_oracle": name in oracles,
-            "driver_visible": name in active,
             # -- history snapshot (as_of_round; NOT CI-pinned) --
             "first_green_round": h.get("first_green_round"),
             "last_green_round": h.get("last_green_round"),
@@ -129,7 +121,6 @@ def build_catalog() -> dict[str, Any]:
     return {
         "as_of_round": token,
         "n_active": len(active),
-        "n_queued": len(queued),
         "reconfirm_debt": _reconfirm_debt(rows, set(active), token),
         "queries": dict(sorted(rows.items())),
     }
@@ -164,7 +155,7 @@ def _reconfirm_debt(
     }
 
 
-STATIC_FIELDS = ("module", "category", "has_oracle", "driver_visible")
+STATIC_FIELDS = ("module", "category", "has_oracle")
 
 
 def main() -> None:

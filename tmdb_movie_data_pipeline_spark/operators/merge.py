@@ -637,31 +637,16 @@ def cdc_feed_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot reads, O(commits × snapshot-join). The write side pays one
     change-row pass over the files the commit already touched. The loop
     over versions is a driver loop over the MANIFEST, never over data."""
-    return _cdc_assemble_feed(_cdc_build_table(spark, sf_dir))
-
-
-def _cdc_build_table(spark: SparkSession, sf_dir: str):
-    """The WRITE side of the CDC exhibit: create the change-feed table and
-    run the merge + delete commits (each recording its typed change rows
-    at commit time). Split out so bench.py can bracket the build and the
-    feed read separately (VERDICT r15 watch-item #2: the committed number
-    is build-dominated — the query is REBUILD_PER_RUN, so create+merge+
-    delete sit inside the timed bracket — while the read side is a flat
-    change-file scan)."""
     from ..plans.acid import TxTable
 
+    # write side: each commit records its typed change rows at commit time
     t = TxTable.create(
         spark, _tx_table_path(), _tx_base(spark, sf_dir), change_feed=True
     )
     t.merge(_tx_source(spark, sf_dir), "c_custkey")
     t.delete_range("c_custkey", _DIFF_DEL_LO, _DIFF_DEL_HI)
-    return t
-
-
-def _cdc_assemble_feed(t) -> DataFrame:
-    """The READ side: assemble the feed from the recorded change files
-    (O(changed rows) total), with the adjacent-snapshot diff as the
-    per-commit fallback for commits recorded without the property."""
+    # read side: the recorded change files, with the adjacent-snapshot diff
+    # as the per-commit fallback for commits recorded without the property
     feeds = []
     for v in t.versions()[1:]:
         ch = t.change_rows(v)

@@ -120,10 +120,10 @@ def skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # key genuinely serializes a stage is a SHUFFLE JOIN whose fact side
 # concentrates on one key, when the dim side can't broadcast and AQE's
 # skew-join splitting isn't available (pinned partitioning mid-pipeline,
-# streaming micro-batches, pre-3.0 clusters). The pair below is benchmarked
-# with broadcast + AQE skew handling disabled to isolate exactly that case;
-# the salted variant is also oracle-checked (salting must not change
-# results — phase-2 combine is exact integer math).
+# streaming micro-batches, pre-3.0 clusters). ``skew_salted_join`` spreads
+# the hot key over ``_SKEW_SALT`` sub-partitions; its oracle is the direct
+# join, so salting must not change results (phase-2 combine is exact
+# integer math).
 
 _SKEW_DIM_N = 1000
 _SKEW_SALT = 16
@@ -132,7 +132,7 @@ _SKEW_SALT = 16
 #: ~10 ms, far under the job's fixed overhead, so the straggler is invisible
 #: locally. ×16 the hot task handles ~8M join rows and genuinely serializes
 #: the stage, which is the regime salting exists for (at 100 TB the raw key
-#: count is already there; the fan-out only recreates it at bench scale).
+#: count is already there; the fan-out only recreates it at sf0.1).
 _SKEW_FANOUT = 16
 
 
@@ -158,30 +158,6 @@ def _skew_dim(spark: SparkSession) -> DataFrame:
     )
 
 
-def skew_join_plan(
-    spark: SparkSession, sf_dir: str, salt: int | None
-) -> DataFrame:
-    """Weighted join-aggregate over the skewed key; ``salt=None`` is the
-    naive plan (hot key 0 → one straggler task), ``salt=N`` spreads the hot
-    key over N sub-partitions by replicating the dim side N×."""
-    fact = _skew_fact(spark, sf_dir)
-    dim = _skew_dim(spark)
-    if salt is not None:
-        fact = fact.withColumn(
-            "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt))
-        )
-        dim = dim.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        joined = fact.join(dim, ["k", "_salt"])
-    else:
-        joined = fact.join(dim, ["k"])
-    return joined.groupBy("k").agg(
-        F.sum(F.col("v") * F.col("w")).cast("long").alias("weighted_cents"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
 @register(
     "skew_salted_join",
     oracle=f"""
@@ -202,49 +178,21 @@ def skew_join_plan(
     """,
 )
 def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salting must be invisible in the result: the {salt}-way salted join
-    equals the direct join exactly (integer weights/cents, exact combine)."""
-    return skew_join_plan(spark, sf_dir, _SKEW_SALT)
-
-
-def bench_skew_pair(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Time unsalted vs salted under the conditions salting exists for:
-    no broadcast, no AQE skew-join splitting. Returns seconds per variant.
-
-    MEDIAN of 5 with the two variants interleaved (VERDICT r7 #2: min-of-2
-    on a 9.6 M-row shuffle join with AQE off is GC-sensitive — r7 published
-    an inverted exhibit, salted 3.36 s vs unsalted 3.14 s, purely from a
-    noisy pair of samples while the plan was byte-unchanged; interleaving
-    spreads JIT/GC drift evenly across both variants and the median
-    rejects a single stalled run)."""
-    import statistics
-    import time
-
-    saved = {
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-        "spark.sql.adaptive.skewJoin.enabled": spark.conf.get(
-            "spark.sql.adaptive.skewJoin.enabled"
-        ),
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    try:
-        variants = (
-            ("skew_join_unsalted", None),
-            ("skew_join_salted", _SKEW_SALT),
+    """Weighted join-aggregate over the skewed key, with the hot key spread
+    over ``_SKEW_SALT`` sub-partitions by replicating the dim side that many
+    times. Salting must be invisible in the result: it equals the direct
+    join exactly (integer weights/cents, exact combine)."""
+    fact = _skew_fact(spark, sf_dir).withColumn(
+        "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(_SKEW_SALT))
+    )
+    dim = _skew_dim(spark).withColumn(
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(_SKEW_SALT - 1)))
+    )
+    return (
+        fact.join(dim, ["k", "_salt"])
+        .groupBy("k")
+        .agg(
+            F.sum(F.col("v") * F.col("w")).cast("long").alias("weighted_cents"),
+            F.count(F.lit(1)).alias("n"),
         )
-        samples: dict[str, list[float]] = {label: [] for label, _ in variants}
-        for _ in range(5):  # interleaved A,B,A,B,... rounds
-            for label, salt in variants:
-                t0 = time.perf_counter()
-                skew_join_plan(spark, sf_dir, salt).count()
-                samples[label].append(time.perf_counter() - t0)
-        return {
-            label: round(statistics.median(ts), 3)
-            for label, ts in samples.items()
-        }
-    finally:
-        for key, val in saved.items():
-            spark.conf.set(key, val)
+    )

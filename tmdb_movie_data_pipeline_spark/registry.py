@@ -24,47 +24,20 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
-#: fully implemented + locally oracle-verified queries QUEUED for a future
-#: round: the driver verifies ~50 registry entries per round and CI caps
-#: never-verified entries at 45, so work completed past that budget parks
-#: here (invisible to the driver) and activates next round by dropping the
-#: ``deferred=True`` flag. The local pytest gate exercises these exactly
-#: like active queries — deferral changes WHEN the driver sees them, never
-#: whether they are correct.
-_DEFERRED_QUERIES: dict[str, QueryFn] = {}
-_DEFERRED_ORACLES: dict[str, str] = {}
 
 
-def register(
-    name: str, oracle: str | None = None, deferred: bool = False
-) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a driver-facing query, optionally with its oracle.
-
-    ``deferred=True`` parks the query in the next-round queue (see
-    ``_DEFERRED_QUERIES``): locally gated now, surfaced to the driver when
-    a future round's rotation budget allows."""
+def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Decorator: register a driver-facing query, optionally with its oracle."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in _QUERIES or name in _DEFERRED_QUERIES:
+        if name in _QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        q = _DEFERRED_QUERIES if deferred else _QUERIES
-        o = _DEFERRED_ORACLES if deferred else _ORACLES
-        q[name] = fn
+        _QUERIES[name] = fn
         if oracle is not None:
-            o[name] = oracle
+            _ORACLES[name] = oracle
         return fn
 
     return deco
-
-
-def deferred_queries() -> dict[str, QueryFn]:
-    _ensure_loaded()
-    return dict(_DEFERRED_QUERIES)
-
-
-def deferred_oracles() -> dict[str, str]:
-    _ensure_loaded()
-    return dict(_DEFERRED_ORACLES)
 
 
 # The driver's correctness harness caps each round's verification at ~50

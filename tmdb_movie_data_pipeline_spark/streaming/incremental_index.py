@@ -330,11 +330,9 @@ def _register_query() -> None:
         Oracle = the SAME batch filtered-IVF SQL as `ann_ivf_filtered_topk`
         — equality is exactly arrival-independence lifted to the query
         level: the maintained lists are bit-identical to batch routing, so
-        every downstream read of them is too. BENCH placement when
-        activated (decide-and-document, the r19 precedent): STREAMING_BENCH
-        — the builder drives the maintenance stream eagerly via
-        build_maintained_index, so the build-once bracket would time only
-        the probe read."""
+        every downstream read of them is too. The builder drives the
+        maintenance stream eagerly via build_maintained_index, so its
+        cost sits in the builder call, not in the probe read."""
         from ..io import load_table
         from ..operators.similarity import (
             _FILTER_LANG,
