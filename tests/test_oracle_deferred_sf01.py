@@ -3,8 +3,9 @@
 verification is local — so it must be hash-gated at BOTH fixture scales,
 including sf0.01, the scale the driver actually runs. That set is the
 never-verified registered queries (activation rounds are exactly when
-sf0.01-only failures like the r8 DuckDB-OOM burst would surface). Driver-verified actives get their sf0.01 check from the driver
-itself, so the extra cost here stays bounded by the unverified frontier.
+sf0.01-only failures like the r8 DuckDB-OOM burst would surface).
+Driver-verified queries get their sf0.01 check from the driver itself, so
+the extra cost here stays bounded by the unverified frontier.
 """
 
 from __future__ import annotations
