@@ -181,3 +181,32 @@ def test_engine_reads_only_deployment_env_vars():
         ("__main__.py", "LANGUAGE"),
         ("__main__.py", None),
     }
+
+
+def test_embedding_components_spelled_only_by_the_shared_helpers():
+    """The embedding array's components are read in one place per engine:
+    ``similarity._flat`` (Spark, 0-based) and ``similarity._flat_duck``
+    (DuckDB, 1-based). Any other ``embedding[`` in the package is a copy of
+    the flat-column rule that those helpers own."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "tmdb_movie_data_pipeline_spark"
+    sim = pkg / "operators" / "similarity.py"
+    helpers = {
+        node.name: range(node.lineno, node.end_lineno + 1)
+        for node in ast.parse(sim.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name in ("_flat", "_flat_duck")
+    }
+    seen, stray = set(), []
+    for path in sorted(pkg.rglob("*.py")):
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if "embedding[" not in line:
+                continue
+            owner = [h for h, lines in helpers.items() if path == sim and n in lines]
+            if owner:
+                seen.update(owner)
+            else:
+                stray.append(f"{path.relative_to(pkg)}:{n}")
+    assert not stray, f"embedding components spelled outside the helpers: {stray}"
+    assert seen == {"_flat", "_flat_duck"}

@@ -280,6 +280,33 @@ def test_score_bucket_skips_zero_norm_vectors():
     assert pairs == {(3, 4)}, f"only the real pair may survive: {pairs}"
 
 
+def test_quantizer_rounds_exact_ties_like_spark(spark):
+    """The numpy quantizer behind both in-bucket re-scorers rounds exact
+    .5 ties half away from zero, as Spark's ROUND does on doubles, so the
+    integer components equal the SQL side's on every value; np.rint
+    (half to even) would split the engines on these ties."""
+    import numpy as np
+
+    from tmdb_movie_data_pipeline_spark.operators.similarity import (
+        DUP_QUANT_SCALE,
+        _quantize,
+    )
+
+    cand = [s * (k + 0.5) / DUP_QUANT_SCALE for k in range(2000) for s in (1, -1)]
+    xs = [x for x in cand if (x * 1e6) % 1 == 0.5]  # exact IEEE ties only
+    assert sum(x > 0 for x in xs) > 100 and sum(x < 0 for x in xs) > 100
+    rows = (
+        spark.createDataFrame(list(enumerate(xs)), "i long, x double")
+        .selectExpr("i", f"CAST(ROUND(x * {DUP_QUANT_SCALE}) AS BIGINT) AS q")
+        .orderBy("i")
+        .collect()
+    )
+    want = np.array([r.q for r in rows], dtype=np.int64)
+    assert _quantize(xs).tolist() == want.tolist()
+    scaled = np.array(xs) * DUP_QUANT_SCALE
+    assert (np.rint(scaled) != want).any(), "no tie where half-to-even differs"
+
+
 # -- closed-form EWMA == sequential recurrence --------------------------------
 
 

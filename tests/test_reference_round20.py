@@ -27,10 +27,10 @@ def _fresh_index(spark, sf_dir, state_dir):
     from tmdb_movie_data_pipeline_spark.operators.similarity import (
         CENTROID_BASE,
         N_CENTROIDS,
+        _flat,
     )
     from tmdb_movie_data_pipeline_spark.streaming.incremental_index import (
         IncrementalIvfIndex,
-        _flat,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")

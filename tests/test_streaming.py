@@ -340,11 +340,11 @@ def test_ivf_index_checkpoint_restart_is_noop(spark, sf_dir, tmp_path):
         APPEND_MOD,
         APPEND_REM,
         IncrementalIvfIndex,
-        _flat,
     )
     from tmdb_movie_data_pipeline_spark.operators.similarity import (
         CENTROID_BASE,
         N_CENTROIDS,
+        _flat,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -408,12 +408,12 @@ def test_ivf_index_epoch_redelivery_is_idempotent(spark, sf_dir, tmp_path):
     from tmdb_movie_data_pipeline_spark.operators.similarity import (
         CENTROID_BASE,
         N_CENTROIDS,
+        _flat,
     )
     from tmdb_movie_data_pipeline_spark.streaming.incremental_index import (
         APPEND_MOD,
         APPEND_REM,
         IncrementalIvfIndex,
-        _flat,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")

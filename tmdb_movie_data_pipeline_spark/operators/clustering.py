@@ -30,7 +30,7 @@ from pyspark.sql.window import Window as W
 
 from ..io import load_table
 from ..registry import register
-from .similarity import DIM
+from .similarity import DIM, DUP_QUANT_SCALE, _flat, _flat_duck
 from .text import _TOKENS_SQL, tokens_col
 
 __all__ = ["kmeans_lloyd", "kmeans_centroid_sums"]
@@ -38,7 +38,7 @@ __all__ = ["kmeans_lloyd", "kmeans_centroid_sums"]
 K_CLUSTERS = 8
 KMEANS_ITERS = 2
 _INIT_BASE = 100  # deterministic init: vec_id in [100, 108) seed the codebook
-_QSCALE = 1_000_000  # micro-units for order-free integer centroid sums
+_QSCALE = DUP_QUANT_SCALE  # micro-units for order-free integer centroid sums
 
 
 def _dist_sql(e: str, c: str) -> str:
@@ -47,32 +47,32 @@ def _dist_sql(e: str, c: str) -> str:
     return " + ".join(f"(({e}{i} - {c}{i}) * ({e}{i} - {c}{i}))" for i in range(DIM))
 
 
+#: the update step's new centroid coordinates from the integer sums — one
+#: IEEE division each, the same text on both engines
+_CENTROID_COLS = [
+    f"CAST(s_{i} AS DOUBLE) / CAST(n * {_QSCALE} AS DOUBLE) AS _c{i}" for i in range(DIM)
+]
+
+
 def kmeans_lloyd(spark: SparkSession, sf_dir: str, iters: int = KMEANS_ITERS) -> DataFrame:
     """Run ``iters`` Lloyd rounds; returns (cid, n, s_0..s_{D-1}) — cluster
     sizes and quantized-integer coordinate sums of the LAST round."""
     if iters < 1:
         raise ValueError(f"kmeans_lloyd needs iters >= 1, got {iters}")
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
+    vecs = _flat(load_table(spark, sf_dir, "embeddings"), "e", "vec_id").selectExpr(
         "vec_id",
-        *[F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"_e{i}") for i in range(DIM)],
-        *[
-            F.expr(f"CAST(ROUND(CAST(embedding[{i}] AS DOUBLE) * {_QSCALE}) AS BIGINT)").alias(
-                f"_q{i}"
-            )
-            for i in range(DIM)
-        ],
+        *(f"_e{i}" for i in range(DIM)),
+        *(f"CAST(ROUND(_e{i} * {_QSCALE}) AS BIGINT) AS _q{i}" for i in range(DIM)),
     ).localCheckpoint(eager=True)
     cent = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter((F.col("vec_id") >= _INIT_BASE) & (F.col("vec_id") < _INIT_BASE + K_CLUSTERS))
-        .select(
-            (F.col("vec_id") - _INIT_BASE).alias("cid"),
-            *[
-                F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"_c{i}")
-                for i in range(DIM)
-            ],
+        _flat(
+            load_table(spark, sf_dir, "embeddings").filter(
+                (F.col("vec_id") >= _INIT_BASE) & (F.col("vec_id") < _INIT_BASE + K_CLUSTERS)
+            ),
+            "c",
+            f"vec_id - {_INIT_BASE} AS cid",
         )
+        .drop("nrm_c")
         .localCheckpoint(eager=True)
     )
     sums = None
@@ -98,31 +98,14 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str, iters: int = KMEANS_ITERS) ->
             )
             .localCheckpoint(eager=True)
         )
-        cent = sums.select(
-            "cid",
-            *[
-                (
-                    F.col(f"s_{i}").cast("double")
-                    / (F.col("n") * F.lit(_QSCALE)).cast("double")
-                ).alias(f"_c{i}")
-                for i in range(DIM)
-            ],
-        ).localCheckpoint(eager=True)
+        cent = sums.selectExpr("cid", *_CENTROID_COLS).localCheckpoint(eager=True)
     return sums
 
 
 def _oracle_sql() -> str:
-    e_cols = ", ".join(f"CAST(embedding[{i + 1}] AS DOUBLE) AS _e{i}" for i in range(DIM))
-    q_cols = ", ".join(
-        f"CAST(ROUND(CAST(embedding[{i + 1}] AS DOUBLE) * {_QSCALE}) AS BIGINT) AS _q{i}"
-        for i in range(DIM)
-    )
-    c0_cols = ", ".join(f"CAST(embedding[{i + 1}] AS DOUBLE) AS _c{i}" for i in range(DIM))
     dist = _dist_sql("v._e", "c._c")
     sum_cols = ", ".join(f"SUM(v._q{i}) AS s_{i}" for i in range(DIM))
-    cd_cols = ", ".join(
-        f"CAST(s_{i} AS DOUBLE) / CAST(n * {_QSCALE} AS DOUBLE) AS _c{i}" for i in range(DIM)
-    )
+    cd_cols = ", ".join(_CENTROID_COLS)
     rounds = []
     prev = "c0"
     for it in range(1, KMEANS_ITERS + 1):
@@ -147,10 +130,10 @@ def _oracle_sql() -> str:
     sum_case = " ".join(f"WHEN {i} THEN s_{i}" for i in range(DIM))
     return f"""
     WITH v AS (
-        SELECT vec_id, {e_cols}, {q_cols} FROM embeddings
+        SELECT vec_id, {_flat_duck("_e")}, {_flat_duck("_q", quantized=True)} FROM embeddings
     ),
     c0 AS (
-        SELECT vec_id - {_INIT_BASE} AS cid, {c0_cols} FROM embeddings
+        SELECT vec_id - {_INIT_BASE} AS cid, {_flat_duck("_c")} FROM embeddings
         WHERE vec_id >= {_INIT_BASE} AND vec_id < {_INIT_BASE + K_CLUSTERS}
     ),
     {", ".join(rounds)}

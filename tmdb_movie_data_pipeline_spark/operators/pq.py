@@ -29,7 +29,17 @@ from pyspark.sql.window import Window as W
 
 from ..io import load_table
 from ..registry import register
-from .similarity import DIM, N_QUERIES, TOP_K
+from .similarity import (
+    DIM,
+    IVF_ROUTE_SQL,
+    N_PROBE,
+    N_QUERIES,
+    TOP_K,
+    _flat,
+    _flat_duck,
+    _probe_candidates,
+    ivf_route,
+)
 
 __all__ = ["pq_encode", "pq_adc_topk"]
 
@@ -50,30 +60,20 @@ def _block_dist(e: str, c: str, b: int) -> str:
     )
 
 
-def _flat(df: DataFrame, prefix: str, id_alias: str) -> DataFrame:
-    return df.select(
-        F.col("vec_id").alias(id_alias),
-        *[
-            F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"{prefix}{i}")
-            for i in range(DIM)
-        ],
-    )
-
-
 def _codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _flat(
         load_table(spark, sf_dir, "embeddings").filter(
             (F.col("vec_id") >= _CB_BASE) & (F.col("vec_id") < _CB_BASE + PQ_K)
         ),
-        "_c",
-        "cid",
-    ).withColumn("cid", F.col("cid") - _CB_BASE)
+        "c",
+        f"vec_id - {_CB_BASE} AS cid",
+    )
 
 
 def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, block, code): every vector's M nearest-sub-centroid ids —
     all M argmins in one aggregate pass over corpus × broadcast codebook."""
-    vecs = _flat(load_table(spark, sf_dir, "embeddings"), "_e", "vec_id")
+    vecs = _flat(load_table(spark, sf_dir, "embeddings"), "e", "vec_id")
     cb = _codebook(spark, sf_dir)
     paired = vecs.crossJoin(F.broadcast(cb))
     aggs = [
@@ -95,9 +95,34 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.col("block").cast("long").alias("block"), F.col("code").cast("long").alias("code"))
 
 
-def _sql_flat(alias: str, prefix: str) -> str:
-    return ", ".join(
-        f"CAST({alias}.embedding[{i + 1}] AS DOUBLE) AS {prefix}{i}" for i in range(DIM)
+#: the flat vector (fv) and codebook (fc) CTEs every PQ oracle reads
+_FV_FC_SQL = f"""fv AS (SELECT vec_id, {_flat_duck("_e", "embeddings.")} FROM embeddings),
+    fc AS (SELECT vec_id - {_CB_BASE} AS cid, {_flat_duck("_c", "embeddings.")}
+           FROM embeddings
+           WHERE vec_id >= {_CB_BASE} AND vec_id < {_CB_BASE + PQ_K})"""
+
+
+def _codes_cte() -> str:
+    return " UNION ALL ".join(
+        f"""SELECT vec_id, {b} AS block, cid AS code
+        FROM (
+            SELECT v.vec_id, c.cid,
+                   ROW_NUMBER() OVER (PARTITION BY v.vec_id
+                                      ORDER BY ({_block_dist("v._e", "c._c", b)}) ASC,
+                                               c.cid ASC) AS rn
+            FROM fv v, fc c
+        ) WHERE rn = 1"""
+        for b in range(PQ_M)
+    )
+
+
+def _lut_cte() -> str:
+    return " UNION ALL ".join(
+        f"""SELECT q.vec_id AS query_id, {b} AS block, c.cid AS code,
+               CAST(ROUND(({_block_dist("q._e", "c._c", b)}) * {_QSCALE}) AS BIGINT)
+                   AS qdist
+        FROM fv q, fc c WHERE q.vec_id < {N_QUERIES}"""
+        for b in range(PQ_M)
     )
 
 
@@ -116,14 +141,9 @@ def _encode_oracle() -> str:
         for b in range(PQ_M)
     )
     return f"""
-    WITH fv AS (SELECT vec_id, {_sql_flat("embeddings", "_e")} FROM embeddings),
-    fc AS (SELECT vec_id - {_CB_BASE} AS cid, {_sql_flat("embeddings", "_c")}
-           FROM embeddings
-           WHERE vec_id >= {_CB_BASE} AND vec_id < {_CB_BASE + PQ_K}),
-    {{body}}
-    """.replace(
-        "{body}", f"codes AS ({branches}) SELECT * FROM codes"
-    )
+    WITH {_FV_FC_SQL},
+    codes AS ({branches}) SELECT * FROM codes
+    """
 
 
 @register("pq_encode_codes", oracle=_encode_oracle())
@@ -136,8 +156,8 @@ def _lut(spark: SparkSession, sf_dir: str) -> DataFrame:
     query subvector to each sub-centroid — the ADC lookup table."""
     q = _flat(
         load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < N_QUERIES),
-        "_e",
-        "query_id",
+        "e",
+        "vec_id AS query_id",
     )
     cb = _codebook(spark, sf_dir)
     paired = q.crossJoin(F.broadcast(cb))
@@ -159,28 +179,9 @@ def _lut(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_pq_adc_topk",
     oracle=f"""
-    WITH fv AS (SELECT vec_id, {_sql_flat("embeddings", "_e")} FROM embeddings),
-    fc AS (SELECT vec_id - {_CB_BASE} AS cid, {_sql_flat("embeddings", "_c")}
-           FROM embeddings
-           WHERE vec_id >= {_CB_BASE} AND vec_id < {_CB_BASE + PQ_K}),
-    codes AS ({" UNION ALL ".join(
-        f'''SELECT vec_id, {b} AS block, cid AS code
-        FROM (
-            SELECT v.vec_id, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                      ORDER BY ({_block_dist("v._e", "c._c", b)}) ASC,
-                                               c.cid ASC) AS rn
-            FROM fv v, fc c
-        ) WHERE rn = 1'''
-        for b in range(PQ_M)
-    )}),
-    lut AS ({" UNION ALL ".join(
-        f'''SELECT q.vec_id AS query_id, {b} AS block, c.cid AS code,
-               CAST(ROUND(({_block_dist("q._e", "c._c", b)}) * {_QSCALE}) AS BIGINT)
-                   AS qdist
-        FROM fv q, fc c WHERE q.vec_id < {N_QUERIES}'''
-        for b in range(PQ_M)
-    )}),
+    WITH {_FV_FC_SQL},
+    codes AS ({_codes_cte()}),
+    lut AS ({_lut_cte()}),
     scored AS (
         SELECT l.query_id, s.vec_id AS neighbor_id,
                CAST(SUM(l.qdist) AS BIGINT) AS adc_dist_q
@@ -218,39 +219,10 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- IVF-PQ: coarse routing + code-only scoring -------------------------------
 
-def _codes_cte() -> str:
-    return " UNION ALL ".join(
-        f"""SELECT vec_id, {b} AS block, cid AS code
-        FROM (
-            SELECT v.vec_id, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                      ORDER BY ({_block_dist("v._e", "c._c", b)}) ASC,
-                                               c.cid ASC) AS rn
-            FROM fv v, fc c
-        ) WHERE rn = 1"""
-        for b in range(PQ_M)
-    )
-
-
-def _lut_cte() -> str:
-    return " UNION ALL ".join(
-        f"""SELECT q.vec_id AS query_id, {b} AS block, c.cid AS code,
-               CAST(ROUND(({_block_dist("q._e", "c._c", b)}) * {_QSCALE}) AS BIGINT)
-                   AS qdist
-        FROM fv q, fc c WHERE q.vec_id < {N_QUERIES}"""
-        for b in range(PQ_M)
-    )
-
-
 def _ivfpq_oracle() -> str:
-    from .similarity import IVF_ROUTE_SQL
-
     return f"""
     WITH {IVF_ROUTE_SQL},
-    fv AS (SELECT vec_id, {_sql_flat("embeddings", "_e")} FROM embeddings),
-    fc AS (SELECT vec_id - {_CB_BASE} AS cid, {_sql_flat("embeddings", "_c")}
-           FROM embeddings
-           WHERE vec_id >= {_CB_BASE} AND vec_id < {_CB_BASE + PQ_K}),
+    {_FV_FC_SQL},
     codes AS ({_codes_cte()}),
     lut AS ({_lut_cte()}),
     cand AS (
@@ -292,15 +264,8 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers per candidate in a partial+final agg. Integer ADC distances
     make the ranking engine-exact.
     """
-    from .similarity import ivf_route
-
     assign, probes = ivf_route(spark, sf_dir)
-    cand = (
-        # broadcast the query-batch-bounded probe relation (see ann_ivf)
-        F.broadcast(probes).join(assign, "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
+    cand = _probe_candidates(assign, probes, N_PROBE)
     codes = pq_encode(spark, sf_dir)
     lut = _lut(spark, sf_dir)
     scored = (
@@ -328,10 +293,7 @@ def _distortion_oracle() -> str:
         for b in range(PQ_M)
     )
     return f"""
-    WITH fv AS (SELECT vec_id, {{flat_v}} FROM embeddings),
-    fc AS (SELECT vec_id - {_CB_BASE} AS cid, {{flat_c}}
-           FROM embeddings
-           WHERE vec_id >= {_CB_BASE} AND vec_id < {_CB_BASE + PQ_K}),
+    WITH {_FV_FC_SQL},
     per_vec AS ({branches})
     SELECT block,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
@@ -339,9 +301,7 @@ def _distortion_oracle() -> str:
            CAST(SUM(d_micro) // COUNT(*) AS BIGINT) AS mean_dist_micro,
            CAST(MAX(d_micro) AS BIGINT) AS max_dist_micro
     FROM per_vec GROUP BY 1
-    """.replace("{flat_v}", _sql_flat("embeddings", "_e")).replace(
-        "{flat_c}", _sql_flat("embeddings", "_c")
-    )
+    """
 
 
 @register("ml_pq_distortion", oracle=_distortion_oracle())
@@ -361,7 +321,7 @@ def pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     taken in ONE aggregate pass (one map-side-combined shuffle carrying
     one row per vector), then an M-row rollup. No window, no pair join.
     """
-    vecs = _flat(load_table(spark, sf_dir, "embeddings"), "_e", "vec_id")
+    vecs = _flat(load_table(spark, sf_dir, "embeddings"), "e", "vec_id")
     cb = _codebook(spark, sf_dir)
     paired = vecs.crossJoin(F.broadcast(cb))
     min_aggs = [

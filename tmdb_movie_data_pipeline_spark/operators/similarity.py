@@ -18,6 +18,8 @@ All arithmetic is promoted to double *before* any sum so the DuckDB oracle
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -32,42 +34,132 @@ N_PLANES = 8
 TOP_K = 5
 N_QUERIES = 10  # vec_id < 10 are the query vectors in registered queries
 
+# Banded sign-LSH for pair dedup: LSH_TABLES independent hash tables, each
+# keyed on LSH_PLANES_PER_TABLE hyperplane signs. A pair is a candidate when
+# it collides in ANY table (MinHash-band semantics applied to random
+# projections); candidates are re-scored with the quantized cosine in-bucket.
+LSH_TABLES = 6
+LSH_PLANES_PER_TABLE = 4
+
+#: micro-unit scale for the quantized-integer re-score (VERDICT r2 #4): each
+#: component becomes CAST(ROUND(e_i * SCALE) AS BIGINT); integer dot products
+#: are order-free, so ANY evaluation engine (Catalyst, DuckDB, numpy) yields
+#: the identical BIGINT, and the one double division at the end is IEEE-exact.
+DUP_QUANT_SCALE = 1_000_000
+
 # -- shared expression builders ----------------------------------------------
+#
+# Every vector sum is an explicit left-to-right chain of DIM terms, NOT a
+# higher-order fold: the addition order is that of aggregate()/list_reduce
+# (so values are bit-identical across engines), but a plain expression tree
+# participates in whole-stage codegen — interpreted lambda folds made the
+# O(n²) pair scan ~30× slower (74s → 2.5s at sf0.1 for
+# dedup_embedding_cosine).
 
 
-def _dot_spark(a: str, b: str) -> str:
-    """Dot product as an explicit 64-term sum, NOT a higher-order fold.
+def _sum(term, dim: int = DIM) -> str:
+    return "(" + " + ".join(term(i) for i in range(dim)) + ")"
 
-    Same left-to-right addition order as aggregate()/list_reduce (so values
-    are bit-identical), but a plain expression tree participates in
-    whole-stage codegen — interpreted lambda folds made the O(n²) pair scan
-    ~30× slower (74s → 2.5s at sf0.1 for dedup_embedding_cosine).
-    """
-    return (
-        "("
-        + " + ".join(f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(DIM))
-        + ")"
-    )
+
+def _dot_spark(a: str, b: str, dim: int = DIM) -> str:
+    """Dot product of two array columns over their first ``dim`` components."""
+    return _sum(lambda i: f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)", dim)
 
 
 def _norm_spark(a: str) -> str:
     return f"sqrt({_dot_spark(a, a)})"
 
 
-def _dot_duck(a: str, b: str) -> str:
+def _dot_duck(a: str, b: str, dim: int = DIM) -> str:
     # identical explicit sum (DuckDB lists are 1-based); left-assoc addition
     # matches the Spark expression term for term → bit-identical doubles.
-    return (
-        "("
-        + " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, DIM + 1)
-        )
-        + ")"
+    return _sum(
+        lambda i: f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({b}[{i + 1}] AS DOUBLE)", dim
     )
 
 
 def _norm_duck(a: str) -> str:
     return f"sqrt({_dot_duck(a, a)})"
+
+
+def _dot_flat(a: str, b: str) -> str:
+    """Dot product over the flat columns ``_{a}i`` and ``_{b}i`` of :func:`_flat`."""
+    return _sum(lambda i: f"_{a}{i} * _{b}{i}")
+
+
+def _flat(df: DataFrame, tag: str, *keys: str) -> DataFrame:
+    """``keys`` (select expressions; default every column but ``embedding``),
+    the components as DOUBLE columns ``_{tag}0.._{tag}63`` and their L2 norm
+    ``nrm_{tag}``, in one projection list.
+
+    Vector math reads these flat attribute refs because they stay inside
+    whole-stage codegen; repeated ``GetArrayItem`` trees fall back to
+    interpreted evaluation (measured 9.2 s vs 2.8 s for the
+    dedup_embedding_cosine bucket battery at sf0.1). Columns nothing reads
+    (a norm, a key) are pruned by the optimizer."""
+    keys = keys or tuple(c for c in df.columns if c != "embedding")
+    return df.selectExpr(
+        *keys, *(f"CAST(embedding[{i}] AS DOUBLE) AS _{tag}{i}" for i in range(DIM))
+    ).selectExpr("*", f"sqrt({_dot_flat(tag, tag)}) AS nrm_{tag}")
+
+
+def _flat_duck(prefix: str, table: str = "", quantized: bool = False) -> str:
+    """DuckDB select list ``<component i> AS {prefix}i`` for every component
+    of the ``embedding`` column (qualified by ``table``, e.g.
+    ``"embeddings."``): each as DOUBLE, or with ``quantized`` as its
+    micro-unit BIGINT (ROUND is half away from zero, as in Spark)."""
+    cols = (f"CAST({table}embedding[{i + 1}] AS DOUBLE)" for i in range(DIM))
+    if quantized:
+        cols = (f"CAST(ROUND({c} * {DUP_QUANT_SCALE}) AS BIGINT)" for c in cols)
+    return ", ".join(f"{c} AS {prefix}{i}" for i, c in enumerate(cols))
+
+
+#: Sign-random-projection hyperplanes: component i of plane p is +1 when the
+#: first hex digit of md5('p_i') is even, else -1 — a fixed pseudo-random ±1
+#: matrix both engines derive identically.
+_PLANE_SIGNS = tuple(
+    tuple(
+        "+" if int(hashlib.md5(f"{p}_{i}".encode()).hexdigest()[0], 16) % 2 == 0 else "-"
+        for i in range(DIM)
+    )
+    for p in range(max(N_PLANES, LSH_TABLES * LSH_PLANES_PER_TABLE))
+)
+
+
+def _plane_terms(p: int, term) -> str:
+    """Signed sum of plane ``p``'s components, ``term(i)`` spelling component i."""
+    return " ".join(f"{s} {term(i)}" for i, s in enumerate(_PLANE_SIGNS[p]))
+
+
+def _quantize(x):
+    """Micro-unit int64 components, rounded half away from zero exactly like
+    Spark/DuckDB ROUND on doubles (np.rint rounds half to even and would
+    diverge on exact .5 ties)."""
+    import numpy as np
+
+    s = np.asarray(x, dtype=np.float64) * DUP_QUANT_SCALE
+    return (np.sign(s) * np.floor(np.abs(s) + 0.5)).astype(np.int64)
+
+
+def _quantized_cosine(pdf):
+    """``(pdf sorted by vec_id, cosine matrix)`` over the rows' quantized
+    embeddings. The integer Gram matrix is exact (no accumulation order), so
+    every entry is bit-identical to the oracle's 64-term SQL chain.
+    Degenerate (all-zero after quantization) embeddings have no defined
+    cosine: 0/0 is NaN here but DuckDB orders NaN above every number, so
+    leaving it to a comparison diverges cross-engine (ADVICE r8). Their rows
+    and columns read -2.0 instead: zero-norm vectors never pair, on both
+    sides."""
+    import numpy as np
+
+    pdf = pdf.sort_values("vec_id")
+    q = _quantize(np.stack(pdf["embedding"].to_numpy()))
+    norms = np.sqrt((q * q).sum(axis=1).astype(np.float64))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = (q @ q.T).astype(np.float64) / np.outer(norms, norms)
+    cos[norms == 0, :] = -2.0
+    cos[:, norms == 0] = -2.0
+    return pdf, cos
 
 
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
@@ -193,57 +285,24 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- sign-random-projection LSH ----------------------------------------------
-#
-# Hyperplane p ∈ [0, N_PLANES), dimension i ∈ [0, DIM): the component is
-# +1 when the first hex digit of md5('p_i') is even, else -1 — a fixed
-# pseudo-random ±1 matrix both engines derive identically.
-
-
-def _plane_terms(vec: str, p: int, engine: str) -> str:
-    terms = []
-    for i in range(DIM):
-        import hashlib
-
-        h = hashlib.md5(f"{p}_{i}".encode()).hexdigest()
-        sign = "+" if int(h[0], 16) % 2 == 0 else "-"
-        if engine == "spark":
-            terms.append(f"{sign} CAST({vec}[{i}] AS DOUBLE)")
-        else:
-            terms.append(f"{sign} CAST({vec}[{i + 1}] AS DOUBLE)")
-    return " ".join(terms)
-
-
-def _plane_terms_attr(p: int) -> str:
-    """Plane dot over pre-extracted element columns ``_e0.._e63`` — attribute
-    refs instead of GetArrayItem+Cast trees, so wide plane batteries stay
-    inside whole-stage codegen. Signs identical to :func:`_plane_terms`."""
-    import hashlib
-
-    terms = []
-    for i in range(DIM):
-        h = hashlib.md5(f"{p}_{i}".encode()).hexdigest()
-        sign = "+" if int(h[0], 16) % 2 == 0 else "-"
-        terms.append(f"{sign} _e{i}")
-    return " ".join(terms)
 
 
 def _bucket_attr_expr(t: int) -> str:
     """Table ``t``'s band bucket: LSH_PLANES_PER_TABLE sign bits packed into
-    one BIGINT, over the pre-extracted ``_e*`` columns."""
+    one BIGINT, over the flat ``_e*`` columns."""
     parts = []
     for s in range(LSH_PLANES_PER_TABLE):
-        p = t * LSH_PLANES_PER_TABLE + s
-        parts.append(
-            f"(CASE WHEN ({_plane_terms_attr(p)}) >= 0.0 THEN {1 << s} ELSE 0 END)"
-        )
+        dot = _plane_terms(t * LSH_PLANES_PER_TABLE + s, lambda i: f"_e{i}")
+        parts.append(f"(CASE WHEN ({dot}) >= 0.0 THEN {1 << s} ELSE 0 END)")
     return "CAST(" + " + ".join(parts) + " AS BIGINT)"
 
 
 def _bucket_expr(vec: str, engine: str, planes: range = range(N_PLANES)) -> str:
     """Bit-string bucket over the given hyperplane indices (both engines)."""
+    base = 1 if engine == "duck" else 0  # DuckDB lists are 1-based
     bits = []
     for p in planes:
-        dot = _plane_terms(vec, p, engine)
+        dot = _plane_terms(p, lambda i: f"CAST({vec}[{i + base}] AS DOUBLE)")
         bits.append(f"(CASE WHEN ({dot}) >= 0 THEN '1' ELSE '0' END)")
     return " || ".join(bits) if engine == "duck" else f"concat({', '.join(bits)})"
 
@@ -311,18 +370,12 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DUP_COSINE_THRESHOLD = 0.35
-#: micro-unit scale for the quantized-integer re-score (VERDICT r2 #4): each
-#: component becomes CAST(ROUND(e_i * SCALE) AS BIGINT); integer dot products
-#: are order-free, so ANY evaluation engine (Catalyst, DuckDB, numpy) yields
-#: the identical BIGINT, and the one double division at the end is IEEE-exact.
-DUP_QUANT_SCALE = 1_000_000
 
-# Banded sign-LSH for pair dedup: LSH_TABLES independent hash tables, each
-# keyed on LSH_PLANES_PER_TABLE hyperplane signs. A pair is a candidate when
-# it collides in ANY table (MinHash-band semantics applied to random
-# projections); candidates are re-scored with the quantized cosine in-bucket.
-LSH_TABLES = 6
-LSH_PLANES_PER_TABLE = 4
+# DuckDB spelling of the quantized cosine shared by both dedup oracles: the
+# q0..q63 columns, their integer square norm, and the qa·qb dot product.
+_Q_COLS_DUCK = _flat_duck("q", quantized=True)
+_Q_N2_DUCK = _sum(lambda i: f"q{i} * q{i}")
+_Q_DOT_DUCK = _sum(lambda i: f"qa.q{i} * qb.q{i}")
 
 
 def _lsh_table_planes(t: int) -> range:
@@ -336,13 +389,6 @@ def _dedup_cosine_oracle() -> str:
         "FROM embeddings"
         for t in range(LSH_TABLES)
     )
-    q_cols = ", ".join(
-        f"CAST(ROUND(CAST(embedding[{i + 1}] AS DOUBLE) * {DUP_QUANT_SCALE}) AS BIGINT)"
-        f" AS q{i}"
-        for i in range(DIM)
-    )
-    n2 = "(" + " + ".join(f"q{i} * q{i}" for i in range(DIM)) + ")"
-    dotq = "(" + " + ".join(f"qa.q{i} * qb.q{i}" for i in range(DIM)) + ")"
     return f"""
     WITH b AS (
         {per_table}
@@ -353,19 +399,19 @@ def _dedup_cosine_oracle() -> str:
                          AND a.vec_id < c.vec_id
     ),
     qv AS (
-        SELECT vec_id, {q_cols} FROM embeddings
+        SELECT vec_id, {_Q_COLS_DUCK} FROM embeddings
     ),
     qn AS (
-        SELECT *, {n2} AS n2 FROM qv
+        SELECT *, {_Q_N2_DUCK} AS n2 FROM qv
     )
     SELECT cand.vec_a, cand.vec_b,
-           CAST({dotq} AS DOUBLE)
+           CAST({_Q_DOT_DUCK} AS DOUBLE)
                / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE))) AS cosine
     FROM cand
     JOIN qn qa ON qa.vec_id = cand.vec_a
     JOIN qn qb ON qb.vec_id = cand.vec_b
     WHERE qa.n2 > 0 AND qb.n2 > 0  -- zero-norm vectors never pair (both engines)
-      AND CAST({dotq} AS DOUBLE)
+      AND CAST({_Q_DOT_DUCK} AS DOUBLE)
               / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
           >= {DUP_COSINE_THRESHOLD}
     """
@@ -374,44 +420,17 @@ def _dedup_cosine_oracle() -> str:
 def _score_bucket(pdf):
     """Score every within-bucket pair of one (t, bucket) group.
 
-    Rows arrive with (vec_id, embedding); output is the surviving
-    (vec_a, vec_b, cosine) pairs. Quantization (micro-unit ROUND
-    half-away-from-zero, matching Spark/DuckDB ROUND on doubles — np.rint
-    is banker's rounding and would diverge on exact .5 ties) makes the
-    integer Gram matrix order-free, so the emitted cosine is bit-identical
-    to the DuckDB oracle's 64-term SQL chain.
+    Rows arrive with (vec_id, embedding); output is the (vec_a < vec_b,
+    cosine) pairs whose quantized cosine (:func:`_quantized_cosine`, the
+    DuckDB oracle's value bit for bit) clears the threshold.
     """
     import numpy as np
     import pandas as pd
 
-    empty = pd.DataFrame(
-        {
-            "vec_a": pd.Series(dtype="int64"),
-            "vec_b": pd.Series(dtype="int64"),
-            "cosine": pd.Series(dtype="float64"),
-        }
-    )
-    if len(pdf) < 2:
-        return empty
-    pdf = pdf.sort_values("vec_id")  # upper triangle == vec_a < vec_b
+    pdf, cos = _quantized_cosine(pdf)
     ids = pdf["vec_id"].to_numpy()
-    mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-    s = mat * DUP_QUANT_SCALE
-    q = (np.sign(s) * np.floor(np.abs(s) + 0.5)).astype(np.int64)
-    norms = np.sqrt((q * q).sum(axis=1).astype(np.float64))
-    gram = q @ q.T  # exact int64 — no accumulation-order sensitivity
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cos = gram.astype(np.float64) / np.outer(norms, norms)
-    # Degenerate (all-zero after quantization) embeddings have no defined
-    # cosine: 0/0 is NaN here but DuckDB orders NaN above every number, so
-    # leaving it to the comparison diverges cross-engine (ADVICE r8).
-    # Deterministic rule on BOTH sides: zero-norm vectors never pair.
-    cos[norms == 0, :] = -2.0
-    cos[:, norms == 0] = -2.0
-    ia, ib = np.triu_indices(len(ids), k=1)
+    ia, ib = np.triu_indices(len(ids), k=1)  # ids ascending: vec_a < vec_b
     keep = cos[ia, ib] >= DUP_COSINE_THRESHOLD
-    if not keep.any():
-        return empty
     return pd.DataFrame(
         {
             "vec_a": ids[ia[keep]],
@@ -448,15 +467,7 @@ def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the DuckDB oracle's 64-term SQL chain — quantization
     is what makes a numpy re-score oracle-exact at all.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    # Bucket keys over FLAT double columns, never repeated
-    # GetArrayItem(embedding, i) trees (those fall out of whole-stage
-    # codegen — measured 9.2 s vs 2.8 s for this battery at sf0.1).
-    ext = emb.select(
-        "vec_id",
-        "embedding",
-        *[F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"_e{i}") for i in range(DIM)],
-    )
+    ext = _flat(load_table(spark, sf_dir, "embeddings"), "e", "vec_id", "embedding")
     # Band bucket as a small int: bit `slot` set iff plane t*PLANES+slot has
     # a non-negative dot — the same key as the oracle's '0'/'1' string,
     # computed in ONE projection (no explode/groupBy: fusing the agg into
@@ -536,10 +547,12 @@ _IVF_ORACLE = f"""
 
 
 def ivf_route(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse routing, shared by the IVF-Flat and IVF-PQ tiers: returns
-    ``(assign, probes)`` where ``assign`` is (vec_id, cid) — every corpus
-    vector's nearest-centroid inverted-list id — and ``probes`` is
-    (query_id, cid) — each query's ``N_PROBE`` nearest lists.
+    """IVF coarse routing, shared by every IVF tier: returns ``(assign,
+    probes)`` where ``assign`` is (vec_id, cid) — every corpus vector's
+    nearest-centroid inverted-list id — and ``probes`` is (query_id, cid,
+    rn) — each query's full centroid ranking (rn 1 = nearest; cosine DESC,
+    cid ASC), N_QUERIES × N_CENTROIDS rows. Each caller keeps its own probe
+    depth (:func:`_probe_candidates`).
 
     Scale shape: assignment is a broadcast of K centroids against the corpus
     (one scan, no shuffle of the big side beyond the list partitioning);
@@ -547,46 +560,25 @@ def ivf_route(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     lists ARE a partitioning scheme — at 100 TB, `partitionBy(cid)` on write
     makes each probe a partition-pruned scan.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    # All vector math over FLAT double columns (attribute refs stay inside
-    # whole-stage codegen; GetArrayItem trees fall back to interpreted eval —
-    # the dedup_embedding_cosine lesson, same 3-4× here).
-    emb_flat = emb.select(
-        "vec_id",
-        *[F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"_e{i}") for i in range(DIM)],
-    ).withColumn(
-        "nrm_e", F.expr("sqrt(" + " + ".join(f"_e{i} * _e{i}" for i in range(DIM)) + ")")
-    )
+    emb_flat = _flat(load_table(spark, sf_dir, "embeddings"), "e", "vec_id")
     cent_flat = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(
-            (F.col("vec_id") >= CENTROID_BASE)
-            & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
-        )
-        .select(
-            (F.col("vec_id") - CENTROID_BASE).alias("cid"),
-            *[
-                F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"_c{i}")
-                for i in range(DIM)
-            ],
-        )
-        .withColumn(
-            "nrm_c",
-            F.expr("sqrt(" + " + ".join(f"_c{i} * _c{i}" for i in range(DIM)) + ")"),
+        _flat(
+            load_table(spark, sf_dir, "embeddings").filter(
+                (F.col("vec_id") >= CENTROID_BASE)
+                & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
+            ),
+            "c",
+            f"vec_id - {CENTROID_BASE} AS cid",
         )
         # the assignment crossJoin AND the probe crossJoin both consume the
-        # codebook; without this the {DIM}-wide flat projection subtree sat
-        # twice in every IVF plan — paying its analysis/optimization cost
-        # (the dominant per-run cost of these plans: count() re-plans each
-        # call, measured ~1.2 s plan vs ~0.15 s exec) and its scan twice.
-        # K rows — a config-scale constant at any corpus size. emb_flat is
-        # deliberately NOT checkpointed: the probes leg prunes it to
-        # vec_id < N_QUERIES at the parquet scan, which a corpus-wide
+        # codebook; staged, its {DIM}-wide flat projection sits once in every
+        # IVF plan, not twice. K rows — a config-scale constant at any corpus
+        # size. emb_flat is deliberately NOT staged: the probes leg prunes it
+        # to vec_id < N_QUERIES at the parquet scan, which a corpus-wide
         # materialization would destroy at scale.
         .localCheckpoint(eager=False)
     )
-    dot_ec = "(" + " + ".join(f"_e{i} * _c{i}" for i in range(DIM)) + ")"
-    cos_to_cent = F.expr(dot_ec) / (F.col("nrm_e") * F.col("nrm_c"))
+    cos_to_cent = F.expr(_dot_flat("e", "c")) / (F.col("nrm_e") * F.col("nrm_c"))
     # Nearest-centroid assignment as a partial-aggregable max_by, NOT a
     # row_number window: the window form shuffles the entire corpus ×K to
     # rank K rows per vector; max_by(struct) combines map-side, so the only
@@ -603,47 +595,47 @@ def ivf_route(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
             ).alias("cid")
         )
     )
-    w_assign = W.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("cid"))
+    w_probe = W.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("cid"))
     probes = (  # N_QUERIES rows × K centroids — the window here is trivial
         emb_flat.filter(F.col("vec_id") < N_QUERIES)
         .crossJoin(F.broadcast(cent_flat))
         .withColumn("cos", cos_to_cent)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") <= N_PROBE)
-        .select(F.col("vec_id").alias("query_id"), "cid")
+        .withColumn("rn", F.row_number().over(w_probe))
+        .select(F.col("vec_id").alias("query_id"), "cid", "rn")
     )
     return assign, probes
+
+
+def _probe_candidates(assign: DataFrame, probes: DataFrame, depth: int) -> DataFrame:
+    """(query_id, vec_id, rn): every member of each query's ``depth``
+    nearest lists but the query itself, tagged with its list's probe rank.
+    The probe relation is broadcast (|queries| × depth rows — the query
+    batch is the small side of an ANN lookup BY DESIGN at any scale), so
+    the corpus-sized assignment is never shuffled for this join."""
+    return (
+        F.broadcast(probes.filter(F.col("rn") <= depth))
+        .join(assign, "cid")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", "rn")
+    )
 
 
 def _ivf_exact_rescore(spark: SparkSession, sf_dir: str, cand: DataFrame) -> DataFrame:
     """Exact cosine re-score + per-query top-k over a (query_id, vec_id)
     candidate relation — the tail every IVF tier shares (IVF-Flat and the
     filtered variant; IVF-PQ replaces it with integer ADC)."""
-
-    def rescore_side(tag: str, key: str) -> DataFrame:
-        # fresh scan per side: reusing emb_flat's lineage in a self-join of
-        # 64-wide projections sends the analyzer into a transform blowup
-        e = load_table(spark, sf_dir, "embeddings")
-        d = e.select(
-            F.col("vec_id").alias(key),
-            *[
-                F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"_{tag}{i}")
-                for i in range(DIM)
-            ],
-        )
-        nrm = "sqrt(" + " + ".join(f"_{tag}{i} * _{tag}{i}" for i in range(DIM)) + ")"
-        return d.withColumn(f"nrm_{tag}", F.expr(nrm))
-
-    q_side = rescore_side("q", "query_id")
-    n_side = rescore_side("n", "vec_id")
-    dot_qn = "(" + " + ".join(f"_q{i} * _n{i}" for i in range(DIM)) + ")"
+    # fresh scan per side: reusing one lineage in a self-join of 64-wide
+    # projections sends the analyzer into a transform blowup
+    q_side = _flat(load_table(spark, sf_dir, "embeddings"), "q", "vec_id AS query_id")
+    n_side = _flat(load_table(spark, sf_dir, "embeddings"), "n", "vec_id")
     scored = (
         cand.join(F.broadcast(q_side), "query_id")
         .join(F.broadcast(n_side), "vec_id")
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            (F.expr(dot_qn) / (F.col("nrm_q") * F.col("nrm_n"))).alias("cosine"),
+            (F.expr(_dot_flat("q", "n")) / (F.col("nrm_q") * F.col("nrm_n")))
+            .alias("cosine"),
         )
     )
     w_rank = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -658,15 +650,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat ANN: coarse routing via :func:`ivf_route`, then an exact
     cosine re-score restricted to the probed inverted lists."""
     assign, probes = ivf_route(spark, sf_dir)
-    cand = (
-        # broadcast the probe relation (|queries| x N_PROBE rows - the query
-        # batch is the small side of an ANN lookup BY DESIGN at any scale):
-        # the corpus-sized assignment is never shuffled for this join (r21;
-        # the initial plan was a SortMergeJoin shuffling assign by cid)
-        F.broadcast(probes).join(assign, "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
+    cand = _probe_candidates(assign, probes, N_PROBE)
     return _ivf_exact_rescore(spark, sf_dir, cand)
 
 
@@ -738,11 +722,7 @@ def ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"))
     )
     assign_f = assign.join(F.broadcast(eligible), "vec_id", "left_semi")
-    cand = (
-        F.broadcast(probes).join(assign_f, "cid")  # see ann_ivf: query side
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
+    cand = _probe_candidates(assign_f, probes, N_PROBE)
     return _ivf_exact_rescore(spark, sf_dir, cand)
 
 
@@ -1137,17 +1117,10 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_oracle() -> str:
-    q_cols = ", ".join(
-        f"CAST(ROUND(CAST(embedding[{i + 1}] AS DOUBLE) * {DUP_QUANT_SCALE}) AS BIGINT)"
-        f" AS q{i}"
-        for i in range(DIM)
-    )
-    n2 = "(" + " + ".join(f"q{i} * q{i}" for i in range(DIM)) + ")"
-    dotq = "(" + " + ".join(f"qa.q{i} * qb.q{i}" for i in range(DIM)) + ")"
     return f"""
     WITH {IVF_ROUTE_SQL},
     qn AS (
-        SELECT *, {n2} AS n2 FROM (SELECT vec_id, {q_cols} FROM embeddings)
+        SELECT *, {_Q_N2_DUCK} AS n2 FROM (SELECT vec_id, {_Q_COLS_DUCK} FROM embeddings)
     ),
     dropped AS (
         SELECT DISTINCT b.vec_id AS vb
@@ -1156,7 +1129,7 @@ def _semdedup_oracle() -> str:
         JOIN qn qa ON qa.vec_id = a.vec_id
         JOIN qn qb ON qb.vec_id = b.vec_id
         WHERE qa.n2 > 0 AND qb.n2 > 0  -- zero-norm vectors never pair (both engines)
-          AND CAST({dotq} AS DOUBLE)
+          AND CAST({_Q_DOT_DUCK} AS DOUBLE)
                   / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
               >= {DUP_COSINE_THRESHOLD}
     )
@@ -1169,35 +1142,19 @@ def _semdedup_oracle() -> str:
 def _semdedup_cluster(pdf):
     """One IVF cluster: mark every member that has a LOWER-id member with
     quantized cosine >= DUP_COSINE_THRESHOLD (keep-first per duplicate
-    group). Same integer-Gram discipline as _score_bucket — the
-    quantized cosine is bit-identical to the oracle's 64-term SQL chain,
-    so the drop decision can't straddle the threshold differently per
-    engine."""
+    group). The quantized cosine (:func:`_quantized_cosine`) is
+    bit-identical to the oracle's 64-term SQL chain, so the drop decision
+    can't straddle the threshold differently per engine; a zero-norm
+    member is always kept and never causes a drop."""
     import numpy as np
     import pandas as pd
 
-    pdf = pdf.sort_values("vec_id")
-    ids = pdf["vec_id"].to_numpy()
-    cid = pdf["cid"].to_numpy()
-    if len(pdf) < 2:
-        return pd.DataFrame(
-            {"vec_id": ids, "cid": cid, "dropped": np.zeros(len(ids), bool)}
-        )
-    mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-    s = mat * DUP_QUANT_SCALE
-    q = (np.sign(s) * np.floor(np.abs(s) + 0.5)).astype(np.int64)
-    norms = np.sqrt((q * q).sum(axis=1).astype(np.float64))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cos = (q @ q.T).astype(np.float64) / np.outer(norms, norms)
-    # Zero-norm (degenerate) embeddings are deterministically KEPT and
-    # never cause a drop — 0/0 cosine is NaN and DuckDB orders NaN above
-    # every number, so deciding at the comparison diverges cross-engine
-    # (ADVICE r8). Same rule as _score_bucket, mirrored in the oracle.
-    cos[norms == 0, :] = -2.0
-    cos[:, norms == 0] = -2.0
+    pdf, cos = _quantized_cosine(pdf)
     # ids are sorted ascending: strictly-lower triangle = earlier members
     dup = np.tril(cos >= DUP_COSINE_THRESHOLD, k=-1).any(axis=1)
-    return pd.DataFrame({"vec_id": ids, "cid": cid, "dropped": dup})
+    return pd.DataFrame(
+        {"vec_id": pdf["vec_id"].to_numpy(), "cid": pdf["cid"].to_numpy(), "dropped": dup}
+    )
 
 
 @register("dedup_semdedup_prune", oracle=_semdedup_oracle())
@@ -1244,36 +1201,15 @@ _TR_DIM = 16  # prefix dimensions scored in the cheap first pass
 _TR_SHORTLIST = 32  # candidates per query surviving to the full-dim rerank
 
 
-def _dot_prefix_spark(a: str, b: str, dim: int) -> str:
-    return (
-        "("
-        + " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(dim)
-        )
-        + ")"
-    )
-
-
-def _dot_prefix_duck(a: str, b: str, dim: int) -> str:
-    return (
-        "("
-        + " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-            for i in range(1, dim + 1)
-        )
-        + ")"
-    )
-
-
 _TRUNC_ORACLE = f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings
                WHERE vec_id < {N_QUERIES}),
          c AS (SELECT vec_id AS neighbor_id, embedding AS c_emb FROM embeddings),
          coarse AS (
            SELECT query_id, neighbor_id, q_emb, c_emb,
-                  {_dot_prefix_duck("q_emb", "c_emb", _TR_DIM)}
-                      / (sqrt({_dot_prefix_duck("q_emb", "q_emb", _TR_DIM)})
-                         * sqrt({_dot_prefix_duck("c_emb", "c_emb", _TR_DIM)}))
+                  {_dot_duck("q_emb", "c_emb", _TR_DIM)}
+                      / (sqrt({_dot_duck("q_emb", "q_emb", _TR_DIM)})
+                         * sqrt({_dot_duck("c_emb", "c_emb", _TR_DIM)}))
                       AS trunc_cos
            FROM q, c WHERE query_id <> neighbor_id
          ),
@@ -1331,10 +1267,10 @@ def ann_truncated_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "trunc_cos",
-            F.expr(_dot_prefix_spark("q_emb", "c_emb", _TR_DIM))
+            F.expr(_dot_spark("q_emb", "c_emb", _TR_DIM))
             / (
-                F.sqrt(F.expr(_dot_prefix_spark("q_emb", "q_emb", _TR_DIM)))
-                * F.sqrt(F.expr(_dot_prefix_spark("c_emb", "c_emb", _TR_DIM)))
+                F.sqrt(F.expr(_dot_spark("q_emb", "q_emb", _TR_DIM)))
+                * F.sqrt(F.expr(_dot_spark("c_emb", "c_emb", _TR_DIM)))
             ),
         )
     )
@@ -1640,97 +1576,30 @@ def _probe_sweep_impl(
     spark: SparkSession, sf_dir: str, eligible: DataFrame | None = None
 ) -> DataFrame:
     """Shared probe-sweep body for the unfiltered and filtered recall
-    curves (ADVICE r17 #1: the two registered sweeps previously carried
-    two ~90-line copies of the codegen-sensitive vector-flattening idiom;
-    this is the `_ivf_exact_rescore` factoring applied to the sweep tail).
+    curves.
 
     ``eligible`` is an optional one-column (vec_id) DataFrame; ``None``
     means the unfiltered sweep. When present it is semi-joined onto BOTH
     the (vec_id, cid) assignment relation (filter-then-route — the
     inverted lists shrink before probing) and the ground-truth corpus
     (the truth set is the eligible corpus, not a post-filtered slice).
-
-    Plan-preservation note: with ``eligible=None`` this builds the exact
-    DataFrame graph `ann_ivf_probe_sweep` always built — its optimized
-    plan was md5-pinned byte-identical before/after the extraction
-    (e1ba9395fc6998594d32fe8dadad5747, fresh-session deterministic). The
-    filtered caller now constructs ``eligible`` before the embeddings
-    scan, which only re-orders expression-ID allocation; its plan is
-    structurally unchanged and was re-verified against the DuckDB oracle
-    at sf0.001 and sf0.01 post-refactor (the name is never
-    driver-verified, so no changed-list entry either way).
+    Probes are :func:`ivf_route`'s ranking cut at the largest grid point,
+    so the sweep reads the same staged codebook as every IVF tier.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    emb_flat = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        "vec_id",
-        *[
-            F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"_e{i}")
-            for i in range(DIM)
-        ],
-    ).withColumn(
-        "nrm_e",
-        F.expr("sqrt(" + " + ".join(f"_e{i} * _e{i}" for i in range(DIM)) + ")"),
-    )
-    cent_flat = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(
-            (F.col("vec_id") >= CENTROID_BASE)
-            & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
-        )
-        .select(
-            (F.col("vec_id") - CENTROID_BASE).alias("cid"),
-            *[
-                F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"_c{i}")
-                for i in range(DIM)
-            ],
-        )
-        .withColumn(
-            "nrm_c",
-            F.expr(
-                "sqrt(" + " + ".join(f"_c{i} * _c{i}" for i in range(DIM)) + ")"
-            ),
-        )
-    )
-    dot_ec = "(" + " + ".join(f"_e{i} * _c{i}" for i in range(DIM)) + ")"
-    w_probe = W.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("cid"))
-    probes = (
-        emb_flat.crossJoin(F.broadcast(cent_flat))
-        .withColumn("cos", F.expr(dot_ec) / (F.col("nrm_e") * F.col("nrm_c")))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= _SWEEP_MAX)
-        .select(F.col("vec_id").alias("query_id"), "cid", "rn")
-    )
-    assign, _ = ivf_route(spark, sf_dir)
+    assign, probes = ivf_route(spark, sf_dir)
     if eligible is not None:
         # filter-then-route: the lists shrink BEFORE probing
         assign = assign.join(F.broadcast(eligible), "vec_id", "left_semi")
-    cand = (
-        F.broadcast(probes).join(assign, "cid")  # see ann_ivf: query side
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rn")
+    cand = _probe_candidates(assign, probes, _SWEEP_MAX).withColumnRenamed(
+        "vec_id", "neighbor_id"
     )
-
-    def side(tag: str, key: str) -> DataFrame:
-        # fresh scan per side (the ann_ivf_topk analyzer-blowup lesson)
-        e = load_table(spark, sf_dir, "embeddings")
-        d = e.select(
-            F.col("vec_id").alias(key),
-            *[
-                F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"_{tag}{i}")
-                for i in range(DIM)
-            ],
-        )
-        nrm = "sqrt(" + " + ".join(f"_{tag}{i} * _{tag}{i}" for i in range(DIM)) + ")"
-        return d.withColumn(f"nrm_{tag}", F.expr(nrm))
-
-    qs, cs = side("q", "query_id"), side("v", "neighbor_id")
-    dot_qv = "(" + " + ".join(f"_q{i} * _v{i}" for i in range(DIM)) + ")"
+    # fresh scan per side (the ann_ivf_topk analyzer-blowup lesson)
+    qs = _flat(load_table(spark, sf_dir, "embeddings"), "q", "vec_id AS query_id")
+    cs = _flat(load_table(spark, sf_dir, "embeddings"), "v", "vec_id AS neighbor_id")
     scored = (
         cand.join(F.broadcast(qs), "query_id")
         .join(cs, "neighbor_id")
-        .withColumn(
-            "cosine", F.expr(dot_qv) / (F.col("nrm_q") * F.col("nrm_v"))
-        )
+        .withColumn("cosine", F.expr(_dot_flat("q", "v")) / (F.col("nrm_q") * F.col("nrm_v")))
         .select("query_id", "neighbor_id", "rn", "cosine")
     )
     grid = spark.createDataFrame(
@@ -1745,6 +1614,7 @@ def _probe_sweep_impl(
         .filter(F.col("arank") <= TOP_K)
         .select("nprobe", "query_id", "neighbor_id", F.lit(1).alias("hit"))
     )
+    emb = load_table(spark, sf_dir, "embeddings")
     corpus = (
         emb
         if eligible is None
@@ -1790,8 +1660,7 @@ def ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ground-truth eval slice (broadcast queries x corpus — the same
     deliberate cost ann_cosine_topk already pays as the accuracy bar).
     Output is integer hits/ppm — no float leaves the plan.
-    Body shared with the filtered sweep via ``_probe_sweep_impl``
-    (optimized plan md5-pinned byte-identical across the extraction).
+    Body shared with the filtered sweep via ``_probe_sweep_impl``.
     """
     return _probe_sweep_impl(spark, sf_dir)
 

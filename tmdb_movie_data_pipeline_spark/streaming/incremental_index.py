@@ -47,9 +47,10 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import (
     CENTROID_BASE,
-    DIM,
     N_CENTROIDS,
     _dot_duck,
+    _dot_flat,
+    _flat,
     _norm_duck,
 )
 
@@ -60,22 +61,6 @@ __all__ = ["IncrementalIvfIndex", "N_APPEND_BATCHES", "APPEND_MOD", "APPEND_REM"
 APPEND_MOD = 4
 APPEND_REM = 3
 N_APPEND_BATCHES = 3
-
-
-def _flat(df: DataFrame, tag: str) -> DataFrame:
-    """Flatten the embedding array to _<tag>0.._<tag>{DIM-1} DOUBLE columns
-    plus the L2 norm — the whole-stage-codegen idiom every ANN tier uses
-    (GetArrayItem trees fall back to interpreted eval; flat attribute refs
-    do not)."""
-    out = df.select(
-        *[c for c in df.columns if c != "embedding"],
-        *[
-            F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"_{tag}{i}")
-            for i in range(DIM)
-        ],
-    )
-    nrm = "sqrt(" + " + ".join(f"_{tag}{i} * _{tag}{i}" for i in range(DIM)) + ")"
-    return out.withColumn(f"nrm_{tag}", F.expr(nrm))
 
 
 class IncrementalIvfIndex:
@@ -96,11 +81,10 @@ class IncrementalIvfIndex:
         the ivf_route convention exactly: max_by(cid, struct(cos, -cid)) ==
         (cos DESC, cid ASC), a partial-aggregable map-side combine (never a
         corpus×K window shuffle)."""
-        v = _flat(vectors, "e")
-        dot = "(" + " + ".join(f"_e{i} * _c{i}" for i in range(DIM)) + ")"
         return (
-            v.crossJoin(F.broadcast(self.cent_flat))
-            .withColumn("cos", F.expr(dot) / (F.col("nrm_e") * F.col("nrm_c")))
+            _flat(vectors, "e")
+            .crossJoin(F.broadcast(self.cent_flat))
+            .withColumn("cos", F.expr(_dot_flat("e", "c")) / (F.col("nrm_e") * F.col("nrm_c")))
             .groupBy("vec_id")
             .agg(
                 F.max_by(
@@ -219,8 +203,9 @@ def build_maintained_index(spark: SparkSession, sf_dir: str) -> IncrementalIvfIn
         emb.filter(
             (F.col("vec_id") >= CENTROID_BASE)
             & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
-        ).select((F.col("vec_id") - CENTROID_BASE).alias("cid"), "embedding"),
+        ),
         "c",
+        f"vec_id - {CENTROID_BASE} AS cid",
     )
     idx = IncrementalIvfIndex(spark, os.path.join(root, "state"), cent_flat)
     idx.bootstrap(emb.filter(F.col("vec_id") % APPEND_MOD != APPEND_REM))
@@ -335,8 +320,10 @@ def _register_query() -> None:
         cost sits in the builder call, not in the probe read."""
         from ..io import load_table
         from ..operators.similarity import (
+            N_PROBE,
             _FILTER_LANG,
             _ivf_exact_rescore,
+            _probe_candidates,
             ivf_route,
         )
 
@@ -348,12 +335,7 @@ def _register_query() -> None:
         )
         assign_f = maintained.join(F.broadcast(eligible), "vec_id", "left_semi")
         _, probes = ivf_route(spark, sf_dir)
-        cand = (
-            # broadcast the query-batch-bounded probe relation (see ann_ivf)
-            F.broadcast(probes).join(assign_f, "cid")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id")
-        )
+        cand = _probe_candidates(assign_f, probes, N_PROBE)
         return _ivf_exact_rescore(spark, sf_dir, cand)
 
 
